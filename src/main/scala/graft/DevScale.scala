@@ -192,31 +192,6 @@ object DevScale {
     "q2_min_cost_supplier", "q8_market_share", "join_5way_revenue",
     "text_bigram_logprob")
 
-  /** Artifact-corrected replica for the near-dup PAIR MINERS
-    * (`runMain graft.DevScale <m> saltdocs <queries…>`): the verbatim
-    * replica gives every document M−1 identical clones, so the TRUE
-    * containment/near-dup pair set grows ~M² — measuring the fixture,
-    * not the plan (the reason those queries are excluded from
-    * QuerySubset). Here every replica's tokens get a per-replica prefix
-    * (`r<i>_`), making vocabularies DISJOINT across replicas: each
-    * replica reproduces the 1× intra-corpus pair structure exactly
-    * (token-equality patterns are prefix-invariant), so the true pair
-    * count grows M-linearly — a 100× corpus at 1× duplicate density,
-    * the realistic shape of a 100 TB crawl. Only `documents` is
-    * salted/written (the pair miners read nothing else). */
-  /** Content signature of a parquet table directory: name+size+mtime of
-    * every file INSIDE it (sorted), not the directory inode's mtime —
-    * a fixture regenerated within the directory-mtime granularity, or
-    * part files rewritten without touching the directory entry, must
-    * invalidate the stamp (r17 advisor note). Falls back to the path's
-    * own stats when it isn't a directory. */
-  private[graft] def srcSig(src: String): String = {
-    val d = new java.io.File(src)
-    val files = Option(d.listFiles()).map(_.filter(_.isFile).sortBy(_.getName))
-      .getOrElse(Array(d))
-    files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(";")
-  }
-
   /** Memo stamp shared by the salted/jittered replicas (the DevStress
     * .src-stamp idiom, r16 advisor note): keyed on the source's absolute
     * path + per-part-file signature and written only AFTER the parquet
@@ -225,7 +200,7 @@ object DevScale {
     * silently reusing a stale/partial replica. */
   private def stamped(out: String, src: String, tag: String)(build: => Unit): String = {
     val stampFile = new java.io.File(s"$out/.src-stamp")
-    val want = Seq(tag, src, srcSig(src)).mkString("\n")
+    val want = Seq(tag, src, StageDirs.srcSig(src)).mkString("\n")
     val fresh = stampFile.exists() && {
       val in = scala.io.Source.fromFile(stampFile)
       try in.mkString == want finally in.close()
@@ -238,6 +213,18 @@ object DevScale {
     out
   }
 
+  /** Artifact-corrected replica for the near-dup PAIR MINERS
+    * (`runMain graft.DevScale <m> saltdocs <queries…>`): the verbatim
+    * replica gives every document M−1 identical clones, so the TRUE
+    * containment/near-dup pair set grows ~M² — measuring the fixture,
+    * not the plan (the reason those queries are excluded from
+    * QuerySubset). Here every replica's tokens get a per-replica prefix
+    * (`r<i>_`), making vocabularies DISJOINT across replicas: each
+    * replica reproduces the 1× intra-corpus pair structure exactly
+    * (token-equality patterns are prefix-invariant), so the true pair
+    * count grows M-linearly — a 100× corpus at 1× duplicate density,
+    * the realistic shape of a 100 TB crawl. Only `documents` is
+    * salted/written (the pair miners read nothing else). */
   private def saltedDocs(spark: SparkSession, m: Int): String =
     stamped(s"/root/repo/target/scale${m}salt", s"$Base/documents.parquet", "salt-v2") {
       val out = s"/root/repo/target/scale${m}salt"

@@ -85,13 +85,11 @@ object DevStress {
         if (rest.contains("rocksonly")) Seq("rocksdb")
         else if (rest.contains("rocksdb")) Seq("hdfs", "rocksdb")
         else Seq("hdfs")
-      val flags = Set("join", "rocksdb", "rocksonly", "nodata", "rev", "sync",
-        "pinfirst")
+      val flags = Set("join", "rocksdb", "rocksonly", "rev", "sync", "pinfirst")
       val dirs = rest.filterNot(s => s.startsWith("pin:") || flags(s))
       streamvol(if (dirs.nonEmpty) dirs
         else Seq(Base, "/root/repo/target/scale10", "/root/repo/target/scale100"),
-        pin, family, providers,
-        nodata = rest.contains("nodata"), rev = rest.contains("rev"),
+        pin, family, providers, rev = rest.contains("rev"),
         syncAfterStage = rest.contains("sync"),
         pinFirst = rest.contains("pinfirst"))
     case Some("phash") =>
@@ -100,7 +98,7 @@ object DevStress {
     case _ => System.err.println(
       "usage: DevStress skew [srcDir] | graph [nEdges] [bfs|lpa|pagerank] | " +
         "scd2 [replicaDir] | containment [saltedDocsDir] | " +
-        "streamvol [pin:<n>] [join] [rocksdb|rocksonly] [nodata] [rev] [sync] [pinfirst] [dir ...] | " +
+        "streamvol [pin:<n>] [join] [rocksdb|rocksonly] [rev] [sync] [pinfirst] [dir ...] | " +
         "phash [dir ...]")
   }
 
@@ -114,13 +112,13 @@ object DevStress {
     val out = s"/root/repo/target/skew-${new java.io.File(src).getName}"
     // memo stamp (r15 advisor note): key the cached twin on the source's
     // absolute path + per-table part-file signature (name+size+mtime of
-    // the files INSIDE each table dir — DevScale.srcSig, r17 advisor),
+    // the files INSIDE each table dir — StageDirs.srcSig),
     // not just the basename + existence — a regenerated replica (or two
     // sources sharing a basename) must rebuild, not silently reuse stale
     // skewed data. Written LAST so an interrupted build (events written,
     // customer not yet) also rebuilds.
     def srcStamp: String = (Seq(src) ++ Seq("events", "orders", "customer")
-      .map(t => DevScale.srcSig(s"$src/$t.parquet")))
+      .map(t => StageDirs.srcSig(s"$src/$t.parquet")))
       .mkString("\n")
     val stampFile = new java.io.File(s"$out/.src-stamp")
     val fresh = stampFile.exists() && {
@@ -406,7 +404,7 @@ object DevStress {
   // pinned pairing the repo's A/B discipline asks for.
   private def streamvol(dirs: Seq[String], pin: Option[Int] = None,
       family: String = "state", providers: Seq[String] = Seq("hdfs"),
-      nodata: Boolean = false, rev: Boolean = false,
+      rev: Boolean = false,
       syncAfterStage: Boolean = false, pinFirst: Boolean = false): Unit = {
     val spark = session()
     // `join` drives the stream-stream interval-join family instead of
@@ -448,25 +446,18 @@ object DevStress {
     val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
     val RocksProvider =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    println(f"${"dir"}%-14s ${"query"}%-24s ${"sec"}%8s ${"rows"}%10s ${"state_parts"}%12s ${"provider"}%8s ${"ndb"}%5s")
+    println(f"${"dir"}%-14s ${"query"}%-24s ${"sec"}%8s ${"rows"}%10s ${"state_parts"}%12s ${"provider"}%8s")
     // `pinfirst` rotates the PASS order (pinned before derived): the
     // pinned pass otherwise always runs second in a warm session, so a
     // derived-vs-pinned verdict needs both orders (the same confound
     // `rev` exists for within a pass — r22 state-partition-floor A/B)
     val pinPasses0 = Seq(None) ++ pin.map(Some(_))
     val pinPasses = if (pinFirst) pinPasses0.reverse else pinPasses0
-    // `nodata` pairs each configuration with a second pass that KEEPS
-    // the trailing no-data micro-batch (the graft.keepNoDataBatch escape
-    // in StreamingLatest.withoutNoDataBatch) — the same-session A/B the
-    // r19 inner-join chase ran; "skip" is the shipped default
-    val batchPasses = Seq("skip") ++ (if (nodata) Seq("keep") else Nil)
-    for (dir <- dirs; pinned <- pinPasses; provider <- providers; ndb <- batchPasses) {
+    for (dir <- dirs; pinned <- pinPasses; provider <- providers) {
       pinned match {
         case Some(n) => sys.props("graft.statePartitions") = n.toString
         case None    => sys.props -= "graft.statePartitions"
       }
-      if (ndb == "keep") sys.props("graft.keepNoDataBatch") = "1"
-      else sys.props -= "graft.keepNoDataBatch"
       if (provider == "rocksdb") spark.conf.set(ProviderKey, RocksProvider)
       else spark.conf.unset(ProviderKey)
       require(new java.io.File(s"$dir/events.parquet").exists(),
@@ -480,7 +471,7 @@ object DevStress {
       val t0 = System.nanoTime()
       graft.cdc.StreamingLatest.stagedEventLog(spark, dir)
       val tStage = (System.nanoTime() - t0) / 1e9
-      println(f"${new java.io.File(dir).getName}%-14s ${"(stage " + nEvents + " events)"}%-24s $tStage%8.3f ${0L}%10d $parts%12d $provider%8s $ndb%5s")
+      println(f"${new java.io.File(dir).getName}%-14s ${"(stage " + nEvents + " events)"}%-24s $tStage%8.3f ${0L}%10d $parts%12d $provider%8s")
       // `sync` drains the staging write's dirty pages BEFORE timing
       // starts: at 40M the staged parquet is ~GB-scale and its kernel
       // writeback otherwise lands under whichever query happens to be
@@ -493,14 +484,13 @@ object DevStress {
         val s0 = System.nanoTime()
         scala.util.Try(new ProcessBuilder("sync").inheritIO().start().waitFor())
         val tSync = (System.nanoTime() - s0) / 1e9
-        println(f"${new java.io.File(dir).getName}%-14s ${"(sync)"}%-24s $tSync%8.3f ${0L}%10d $parts%12d $provider%8s $ndb%5s")
+        println(f"${new java.io.File(dir).getName}%-14s ${"(sync)"}%-24s $tSync%8.3f ${0L}%10d $parts%12d $provider%8s")
       }
       queries.foreach { case (name, body) =>
         val (t, rows) = timeIt(body(dir))
-        println(f"${new java.io.File(dir).getName}%-14s $name%-24s $t%8.3f $rows%10d $parts%12d $provider%8s $ndb%5s")
+        println(f"${new java.io.File(dir).getName}%-14s $name%-24s $t%8.3f $rows%10d $parts%12d $provider%8s")
       }
     }
-    sys.props -= "graft.keepNoDataBatch"
     // symmetric cleanup (r20 advisor): a trailing pin:<n> pass must not
     // leave the pinned state-partition override set past the loop
     sys.props -= "graft.statePartitions"

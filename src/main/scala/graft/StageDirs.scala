@@ -38,6 +38,19 @@ object StageDirs {
     Files.deleteIfExists(q)
   }
 
+  /** Content signature of a parquet table directory: name+size+mtime of
+    * every file INSIDE it (sorted), not the directory inode's mtime —
+    * a fixture regenerated within the directory-mtime granularity, or
+    * part files rewritten without touching the directory entry, must
+    * invalidate a memo keyed on it. Falls back to the path's own stats
+    * when it isn't a directory. */
+  private[graft] def srcSig(src: String): String = {
+    val d = new java.io.File(src)
+    val files = Option(d.listFiles()).map(_.filter(_.isFile).sortBy(_.getName))
+      .getOrElse(Array(d))
+    files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(";")
+  }
+
   /** Fresh `<root>/jvm-<pid>/<prefix>…` dir under the batch staging root. */
   def fresh(prefix: String): Path = fresh(root, prefix)
 

@@ -79,10 +79,16 @@ object Tuning {
     * stages have this narrow-frame shape. */
   def withRoundPartitions[T](spark: SparkSession, edgeCount: Long)(body: => T): T = {
     val n = roundPartitions(edgeCount).toString
-    val kvs = Seq(
+    withConf(spark,
       "spark.sql.shuffle.partitions" -> n,
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n,
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true")
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true")(body)
+  }
+
+  /** Run `body` with `kvs` set on the session conf, then restore each
+    * key's previous value (unsetting keys that had none) — on failure
+    * too. Session-global while `body` runs, like every conf scope here. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body

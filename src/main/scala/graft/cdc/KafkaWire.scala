@@ -138,16 +138,12 @@ object KafkaWire {
     * from it via [[graft.Tuning.statePartitions]] exactly like the
     * staged-file queries — a launch literal here would checkpoint-pin
     * the count forever on a real topic replay, the one failure mode the
-    * r18 derivation exists to prevent (the env/sys-prop override in
+    * derivation exists to prevent (the env/sys-prop override in
     * `Tuning.statePartitions` still applies for A/B reproduction). */
   private[graft] def latestStateOver(spark: SparkSession, events: DataFrame,
       eventRows: Long): DataFrame =
-    StreamingLatest.withStatePartitions(spark,
-        graft.Tuning.statePartitions(eventRows)) {
-      StreamingLatest.withoutNoDataBatch(spark) {
-        StreamingLatest.latestWinsOver(spark, events)
-      }
-    }
+    StreamingLatest.latestWinsOver(spark, events,
+      graft.Tuning.statePartitions(eventRows), StreamingLatest.StateLayout.SessionDefault)
 
   /** `cdc_stream_stateful` over a real topic: identical pipeline body
     * ([[StreamingLatest.latestWinsOver]]), different source. Takes the

@@ -1,11 +1,12 @@
 package graft.cdc
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Structured-Streaming latest-wins materialization — the streaming heart
   * of the reference pipeline (Kafka-Connect poll loop + offset tracking,
@@ -16,6 +17,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   flatMapGroupsWithState (latest per key by (ts, event_id)) ->
   *   foreachBatch append sink, with a checkpoint dir playing the role of
   *   the Connect offsets file (R18).
+  *
+  * Every query in this file runs through one lifecycle, [[replay]]; a
+  * query body supplies only its streaming frame, its output mode and
+  * sink, and its read-back.
   *
   * Scale notes: state is one small record per key, partitioned by the
   * grouping key across executors; the watermark bounds how long late data
@@ -28,198 +33,163 @@ object StreamingLatest {
       event_type: String, value: Double)
   case class LatestRow(user_id: Long, last_event_id: Long, last_event_type: String,
       last_value: Double, last_ts_us: Long)
+  case class TtlRow(user_id: Long, last_event_id: Long, last_event_type: String,
+      last_value: Double, last_ts_us: Long, expired: Boolean)
 
   private def tsMicros(ts: java.sql.Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
 
-  /** State-store partition count is frozen from shuffle partitions at the
-    * first checkpoint; size it to the replayed volume (see [[stateParts]]
-    * — derived, floor 4), not the session's CPU count: at 32 partitions
-    * on the fixture most state tasks carry near-empty stores and the
-    * per-batch fixed cost dominates, while a fixture literal would pin a
-    * large replay's state shuffle tiny forever. Restored after the
-    * stream completes. */
-  private[cdc] def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    withConf(spark,
-      (("spark.sql.shuffle.partitions" -> n.toString) +: fastCheckpointConf): _*)(body)
+  // ── the replay lifecycle ───────────────────────────────────────────
 
-  /** Skip the trailing no-data micro-batch for queries whose output is
-    * fully emitted by the data batches themselves. Inner stream-stream
-    * joins, update-mode flatMapGroupsWithState (NoTimeout), append-mode
-    * dropDuplicatesWithinWatermark and complete-mode aggregates all emit
-    * on data arrival — the extra watermark-only batch exists to evict
-    * state / fire timeouts, which a finite AvailableNow replay that ends
-    * with query shutdown doesn't need. Session windows in append mode DO
-    * need it (emission happens when the watermark closes the session), so
-    * streamSessionize must not use this. */
-  private[cdc] def withoutNoDataBatch[T](spark: SparkSession)(body: => T): T =
-    // `graft.keepNoDataBatch` re-enables the trailing batch WITHIN a JVM
-    // so `DevStress streamvol nodata` can pair the two forms in one
-    // session (the r19 40M inner-join reads motivated the A/B)
-    if (sys.props.contains("graft.keepNoDataBatch")) body
-    else withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
-
-  /** Checkpoint-file checksums (Spark 4.x, on by default) double the
-    * WAL/commit file writes per micro-batch to guard long-lived
-    * checkpoints against disk corruption. These queries run a finite
-    * AvailableNow replay and delete the checkpoint on completion, so the
-    * corruption window the checksums defend is the seconds the query is
-    * live — not worth 2x the per-batch commit I/O. A long-lived
-    * production deployment should leave the default on. */
-  private def fastCheckpointConf = Seq(
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
-
-  /** RocksDB provider + changelog checkpointing (default ON, r22): the
-    * legacy commit zip-uploads the store's FULL SST snapshot every
-    * micro-batch; with changelog checkpointing the commit appends only
-    * that batch's key changes and full snapshots move to the background
-    * maintenance cadence — the production posture for large stores with
-    * small per-batch deltas (a 100 TB deployment's per-batch change set
-    * is orders of magnitude smaller than its accumulated state; full
-    * uploads per commit are the §2.3 "shuffle the payload, not the
-    * delta" mistake on the checkpoint axis). State reconstruction on
-    * restart replays snapshot + changelog tail — semantics unchanged
-    * (the oracle re-proves it). `SPARK_GRAFT_ROCKSDB_CHANGELOG` /
-    * `graft.rocksdbChangelog` override for A/B of the legacy regime. */
-  private[cdc] def withRocksDb[T](spark: SparkSession)(body: => T): T =
-    withConf(spark,
+  /** Where a replay keeps its keyed state. */
+  private[graft] sealed abstract class StateLayout(val conf: Seq[(String, String)])
+  private[graft] object StateLayout {
+    private val Rocks = Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        sys.props.getOrElse("graft.rocksdbChangelog",
-          sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true")))(body)
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
-  /** Stream-stream join state layout for the four join queries
-    * (inner/outer/full/semi). Spark's legacy layout (v2) keeps FOUR
-    * state stores per partition per join (keyToNumValues +
-    * keyWithIndexToValue, per side) — every micro-batch pays 4×
-    * commit/snapshot machinery per partition. Format v3 (Spark 4) keeps
-    * ONE RocksDB store per partition using virtual column families; with
-    * changelog checkpointing (withRocksDb, r22) a commit appends one
-    * changelog instead of snapshotting four stores — the production
-    * posture for stateful joins at 100 TB, where per-batch join-state
-    * deltas are tiny against accumulated state. Layout only: eviction,
-    * matching and emission semantics are identical (the oracle re-proves
-    * each join's hash). `SPARK_GRAFT_JOIN_STATE_V3` / `graft.joinStateV3`
-    * restore the legacy regime for A/Bs. */
-  private[cdc] def withJoinStateV3[T](spark: SparkSession)(body: => T): T =
-    if (!sys.props.getOrElse("graft.joinStateV3",
-        sys.env.getOrElse("SPARK_GRAFT_JOIN_STATE_V3", "true")).toBoolean) body
-    else withRocksDb(spark)(withConf(spark,
-      "spark.sql.streaming.join.stateFormatVersion" -> "3")(body))
+    /** Whatever the session is configured with; the replay writes no
+      * state-store key. */
+    case object SessionDefault extends StateLayout(Nil)
+    /** RocksDB provider with changelog checkpointing: a commit appends
+      * only the batch's key changes instead of uploading the store's
+      * full SST snapshot, and full snapshots move to the background
+      * maintenance cadence — the posture for large stores with small
+      * per-batch deltas. Restart replays snapshot + changelog tail, so
+      * semantics are unchanged. */
+    case object RocksDb extends StateLayout(Rocks)
+    /** [[RocksDb]] plus stream-stream join state format v3: ONE store
+      * per partition (virtual column families) instead of the legacy
+      * four (keyToNumValues + keyWithIndexToValue per side), so a
+      * commit appends one changelog instead of four. Layout only:
+      * eviction, matching and emission are identical. */
+    case object RocksDbJoinV3 extends StateLayout(
+      Rocks :+ ("spark.sql.streaming.join.stateFormatVersion" -> "3"))
+  }
 
-  private def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+  /** One replay's scratch directory: the sink writes `out`, which the
+    * read-back reads; `ckpt` is the query's checkpoint. */
+  private[graft] final class Run(val dir: Path) {
+    val out: String = s"$dir/out"
+    val ckpt: String = s"$dir/ckpt"
+  }
+
+  /** How each micro-batch leaves a replay. */
+  private[graft] sealed trait Sink
+  private[graft] object Sink {
+    /** The batch replaces `out` (complete mode: each batch is the whole answer). */
+    case object Overwrite extends Sink
+    /** The batch is appended to `out`. */
+    case object Append extends Sink
+    /** The batch is appended to `out` with its micro-batch id as `batch_id`. */
+    case object AppendBatchId extends Sink
+    /** A custom per-batch body. */
+    final case class Each(body: (DataFrame, Long) => Unit) extends Sink
+    /** Output discarded; the read-back inspects the checkpoint instead. */
+    case object Discard extends Sink
+  }
+
+  /** The streaming half of a replay: the frame, its output mode, its sink. */
+  private[graft] final case class Query[T](frame: Dataset[T], mode: String, sink: Sink)
+
+  /** The one streaming lifecycle: allocate a [[Run]] dir, build the
+    * query, start it under `Trigger.AvailableNow`, wait until it has
+    * drained its source, read the result back, clean up.
+    *
+    * Session conf, set for the replay and restored afterwards:
+    *  - `shuffle.partitions = parts`. The first start pins it into the
+    *    checkpoint as the state-store partition count for the
+    *    checkpoint's lifetime, so callers derive it from the replayed
+    *    volume ([[graft.Tuning.statePartitions]]), never from the session.
+    *  - Checkpoint-file checksums off. They double the WAL/commit writes
+    *    per micro-batch to guard long-lived checkpoints against disk
+    *    corruption; a replay's checkpoint lives for seconds and is
+    *    deleted. A long-lived deployment should leave them on.
+    *  - The trailing no-data micro-batch. It exists to advance the
+    *    watermark after the last data batch — evicting state, firing
+    *    timeouts and timers, finalizing append-mode windows, sessions
+    *    and outer-join null rows. A finite replay ends with query
+    *    shutdown, so queries whose output is fully emitted on data
+    *    arrival skip it (`keepNoDataBatch = false`); queries that emit
+    *    on watermark advance keep it.
+    *  - `layout`'s state store provider and join state format.
+    *
+    * The read-back runs before cleanup, so a result that reads the
+    * checkpoint or other scratch dirs must be materialized there.
+    * Cleanup runs in `finally`: a failed replay still stops its query,
+    * unloads its RocksDB stores and deletes everything in the run dir
+    * except `out`, which the returned frame may read lazily. RocksDB
+    * stores are unloaded before the delete because loaded providers
+    * survive query stop, and their native background threads crash
+    * the JVM at shutdown if still alive (see [[cleanupCkpt]]).
+    *
+    * Sequential sessions only: the conf scope and the store unload are
+    * session-global, so two replays must not run concurrently in one
+    * session. */
+  private[graft] def replay[T](spark: SparkSession, parts: Int, keepNoDataBatch: Boolean,
+      layout: StateLayout)(query: Run => Query[T])(readBack: Run => DataFrame): DataFrame = {
+    val conf = Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") ++
+      (if (keepNoDataBatch) Nil
+       else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
+      layout.conf
+    graft.Tuning.withConf(spark, conf: _*) {
+      val run = new Run(graft.StageDirs.fresh(graft.StageDirs.streamRoot, "run"))
+      try {
+        val Query(frame, mode, sink) = query(run)
+        val w = frame.writeStream.outputMode(mode)
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", run.ckpt)
+        val q = sink match {
+          case Sink.Discard => w.format("noop").start()
+          case s => w.foreachBatch { (b: Dataset[T], id: Long) =>
+            s match {
+              case Sink.Overwrite => b.write.mode("overwrite").parquet(run.out)
+              case Sink.Append => b.write.mode("append").parquet(run.out)
+              case Sink.AppendBatchId =>
+                b.withColumn("batch_id", lit(id)).write.mode("append").parquet(run.out)
+              case Sink.Each(body) => body(b.toDF(), id)
+              case Sink.Discard => ()
+            }
+          }.start()
+        }
+        try q.awaitTermination() finally if (q.isActive) q.stop()
+        readBack(run)
+      } finally cleanupCkpt(spark, run)
     }
   }
 
-  private val StagedCols = Seq("event_id", "ts", "user_id", "event_type", "value")
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** max(unix_micros(ts)) of the staged log, memoized beside
-    * [[stagedDirs]] (same signature key): the staging write already
-    * aggregates min/max ts to find the split midpoint, so the
-    * finalized-horizon queries (sessionize, windowed_append) can reuse
-    * the scalar instead of re-running a one-row batch aggregate over
-    * events per invocation (~0.1 s of pure lifecycle cost each on the
-    * bench box — guide §2.4's "don't recompute what a prior pass
-    * already computed", at driver-scalar scale). */
-  private val stagedMaxUs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** [[replay]] over the staged event log. */
+  private def replayLog[T](spark: SparkSession, sfDir: String, keepNoDataBatch: Boolean,
+      layout: StateLayout)(query: Run => Query[T])(readBack: Run => DataFrame): DataFrame =
+    replay(spark, logParts(spark, sfDir), keepNoDataBatch, layout)(query)(readBack)
 
-  /** State-stage partition count for this source, decided BEFORE the
-    * query first starts (the checkpoint pins `shuffle.partitions` as
-    * the state-store partition count for the query's lifetime — a
-    * post-hoc AQE or conf change can never fix an undersized launch):
-    * [[graft.Tuning.statePartitions]] over the replayed event count,
-    * memoized per source dir alongside the staged-log memo so the
-    * count job (a parquet metadata scan) runs once per (JVM, sfDir),
-    * not once per query. Every test fixture lands on the derivation's
-    * floor of 4 — the pre-r18 literal — so fixture checkpoints, state
-    * layouts and the bench are unchanged; the count only grows when
-    * the replayed log does (measured in `DevStress streamvol`). The
-    * memo keys on the part-file signature, not the path alone (the
-    * DevScale.srcSig idiom, r16/r17 advisor precedent): an events
-    * table regenerated in place within one JVM re-counts instead of
-    * silently reusing the stale volume. */
-  private val eventRows = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** State partitions for a replay of the staged log, derived from its row count. */
+  private def logParts(spark: SparkSession, sfDir: String): Int =
+    graft.Tuning.statePartitions(staged(spark, sfDir).rows)
 
-  /** Drop memo entries for the SAME source dir under a SUPERSEDED
-    * part-file signature (the source was regenerated in place within
-    * this JVM), running `onEvict` on each removed value — for the
-    * staged-log memo that rmTree's the stale staged parquet copy, which
-    * would otherwise sit on disk for the JVM's lifetime (the dead-owner
-    * purge only reclaims after JVM exit). Eviction runs OUTSIDE
-    * computeIfAbsent: mutating other keys from inside its remapping
-    * function is forbidden by ConcurrentHashMap's contract.
+  /** Delete a finished replay's scratch (all of the run dir but `out`),
+    * closing the native state stores FIRST when the session ran it on
+    * the RocksDB provider. Loaded providers SURVIVE query stop (they
+    * unload on reclaim or maintenance timeout), so RocksDB instances
+    * with live background compaction threads linger after the query
+    * ends; those threads SIGSEGV the JVM when they log through the JNI
+    * callback while the VM is at the shutdown safepoint
+    * (`BackgroundCompaction` → `LoggerJniCallback::Logv`).
+    * `StateStore.unloadAll()` closes every loaded provider
+    * deterministically, after which the delete races nothing; later
+    * queries reload their own stores lazily. The HDFS-backed provider
+    * tolerates post-stop deletion and holds no native threads.
     *
-    * SEQUENTIAL HARNESS BY DESIGN (the `Tuning.withRoundPartitions`
-    * precedent): eviction assumes no OTHER thread is mid-query on the
-    * superseded entry — a concurrent caller still replaying the old
-    * staged copy would have it rmTree'd out from under its source. The
-    * memo map itself is a ConcurrentHashMap (per-key atomicity is
-    * free); it is the evict-then-delete that is only safe because every
-    * entry point runs queries sequentially per session. A concurrent
-    * caller would need to serialize per-sfDir. */
-  private def evictStale[V](memo: java.util.concurrent.ConcurrentHashMap[String, V],
-      sfDir: String, liveKey: String)(onEvict: V => Unit): Unit = {
-    val prefix = sfDir + "\n"
-    import scala.jdk.CollectionConverters._
-    memo.keySet.iterator.asScala
-      .filter(k => k.startsWith(prefix) && k != liveKey).toList
-      .foreach(k => Option(memo.remove(k)).foreach(onEvict))
-  }
-
-  private def stateParts(spark: SparkSession, sfDir: String): Int = {
-    val key = sfDir + "\n" + graft.DevScale.srcSig(s"$sfDir/events.parquet")
-    evictStale(eventRows, sfDir, key)(_ => ())
-    graft.Tuning.statePartitions(eventRows.computeIfAbsent(key,
-      _ => java.lang.Long.valueOf(graft.Tables.events(spark, sfDir).count())))
-  }
-
-  /** Fresh temp dir under this JVM's namespace (`<base>/jvm-<pid>/`) —
-    * all staged/run/checkpoint dirs allocate through [[graft.StageDirs]]
-    * (one liveness/purge idiom for the whole tree: portable
-    * ProcessHandle liveness, every directory-listing stream closed). */
-  private def jvmTmpDir(prefix: String): java.nio.file.Path =
-    graft.StageDirs.fresh(graft.StageDirs.streamRoot, prefix)
-
-  /** Fd-safe recursive delete (see [[graft.StageDirs.rm]]). */
-  private def rmTree(p: java.nio.file.Path): Unit = graft.StageDirs.rm(p)
-
-  /** Delete a finished replay's checkpoint — closing the native state
-    * stores FIRST when the session ran it on the RocksDB provider.
-    * Loaded providers SURVIVE query stop (they unload on reclaim or
-    * maintenance timeout, not on stop), so RocksDB instances — with
-    * live background compaction threads — linger after awaitTermination
-    * returns. Those native threads SIGSEGV the whole JVM when they log
-    * through the JNI callback while the VM is at the shutdown safepoint
-    * (`LoggerJniCallback::Logv` + "could not attach current thread" —
-    * hit twice, reproducibly, in the r19 40M-event provider A/B; the
-    * second hs_err pinned it: `BackgroundCompaction` → `Logv`, "VM
-    * state: at safepoint (shutting down)"). `StateStore.unloadAll()`
-    * closes every loaded provider deterministically (RocksDB close
-    * cancels its background work), after which deleting the checkpoint
-    * races nothing; providers for later queries reload lazily from
-    * their own checkpoints, so unloading a FINISHED replay's stores is
-    * free. The HDFS-backed path keeps its historical behavior — its
-    * provider tolerates post-stop checkpoint deletion (the triaged-r15
-    * benign FileNotFound WARN) and holds no native threads.
-    *
-    * `unloadAll` is SESSION-GLOBAL (it closes providers of every loaded
-    * query, not just the finished replay) — sound here because the
-    * harness runs streaming queries sequentially per session, so at
-    * cleanup time the finished replay's stores are the only loaded
-    * ones. If two streaming queries ever ran concurrently in one
-    * session, the live query's providers would be unloaded mid-flight
-    * (a reload-from-checkpoint stall, or a state rebuild race on
-    * RocksDB); scope the unload to provider ids rooted at `p` before
-    * allowing that. The reflective lookup itself is pinned by a
-    * Round20OpsSpec unit test so a Spark rename fails at a named test,
-    * not inside a query teardown. */
-  private def cleanupCkpt(spark: SparkSession, p: java.nio.file.Path): Unit = {
+    * The provider is read from the session's effective conf, not from
+    * the replay's [[StateLayout]]: a session that sets RocksDB itself
+    * runs `SessionDefault` replays on it too. `unloadAll` is
+    * session-global, which is sound only under [[replay]]'s
+    * sequential-session assumption. The reflective lookup is pinned by
+    * a Round20OpsSpec test. */
+  private def cleanupCkpt(spark: SparkSession, run: Run): Unit = {
     if (spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
         .exists(_.contains("RocksDB"))) {
       // private[sql] at compile time, public in bytecode (Scala access
@@ -229,45 +199,54 @@ object StreamingLatest {
         "org.apache.spark.sql.execution.streaming.state.StateStore$")
       ss.getMethod("unloadAll").invoke(ss.getField("MODULE$").get(null))
     }
-    rmTree(p)
+    val out = Paths.get(run.out)
+    listDir(run.dir).filter(_ != out).foreach(graft.StageDirs.rm)
+    if (!Files.exists(out)) Files.deleteIfExists(run.dir)
   }
+
+  private def listDir(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.toArray.toSeq.map(_.asInstanceOf[Path]) finally s.close()
+  }
+
+  // ── the staged event log ───────────────────────────────────────────
+
+  private val StagedCols = Seq("event_id", "ts", "user_id", "event_type", "value")
+
+  /** A staged log: its directory, max event time (µs), row count and
+    * schema — everything the replays need from the source, computed
+    * by the one staging pass. */
+  private final case class Staged(dir: String, maxUs: Long, rows: Long, schema: StructType)
+
+  /** Staged logs keyed by `sfDir + "\n" + part-file signature`
+    * ([[graft.StageDirs.srcSig]]): a source regenerated in place within
+    * one JVM re-stages instead of replaying the stale log. */
+  private val stagedLogs = new java.util.concurrent.ConcurrentHashMap[String, Staged]()
 
   /** The CDC-log surrogate every streaming query replays: the events
     * table staged as two parquet files split at the time midpoint,
     * oldest written first, so file-mtime replay order = event-time order
     * (the ordering a Kafka partition / CDC log gives a consumer — the
     * property that makes watermark eviction provably safe; see
-    * streamStateful/streamJoin). Staged once per (session, sfDir) and
-    * shared by every streaming query: the staging write is harness
-    * scaffolding standing in for the durable log, not operator work. */
-  private[graft] def stagedEventLog(spark: SparkSession, sfDir: String): String = {
-    // keyed on the part-file signature like the stateParts count memo
-    // (and every replica .src-stamp): a source regenerated in place
-    // within one JVM re-stages instead of replaying the stale log —
-    // and the superseded staged copy (a full parquet copy of the log)
-    // is deleted eagerly rather than leaked until JVM exit
-    val key = sfDir + "\n" + graft.DevScale.srcSig(s"$sfDir/events.parquet")
-    evictStale(stagedDirs, sfDir, key)(dir => rmTree(Paths.get(dir)))
-    evictStale(stagedMaxUs, sfDir, key)(_ => ())
-    stagedDirs.computeIfAbsent(key, { _ =>
+    * streamStateful/streamJoin). Staged once per (JVM, source
+    * signature) and shared by every streaming query: the staging write
+    * is harness scaffolding standing in for the durable log, not
+    * operator work. */
+  private[graft] def stagedEventLog(spark: SparkSession, sfDir: String): String =
+    staged(spark, sfDir).dir
+
+  private def staged(spark: SparkSession, sfDir: String): Staged = {
+    val key = sfDir + "\n" + graft.StageDirs.srcSig(s"$sfDir/events.parquet")
+    evictStale(sfDir, key)
+    stagedLogs.computeIfAbsent(key, { _ =>
       import spark.implicits._
-      // Staged/run dirs are namespaced per JVM (jvm-<pid>) and allocated
-      // through StageDirs.fresh, whose dead-owner purge is the ONE
-      // liveness idiom in the tree (portable ProcessHandle — a /proc
-      // probe would call every pid dead on macOS and yank a concurrent
-      // JVM's staged log from under its active streaming queries).
-      val inDir = jvmTmpDir("staged").toString
+      val inDir = graft.StageDirs.fresh(graft.StageDirs.streamRoot, "staged").toString
       val batch = graft.Tables.events(spark, sfDir)
         .select(StagedCols.map(col): _*)
-      val mm = batch.agg(unix_micros(min($"ts")), unix_micros(max($"ts"))).first()
+      val mm = batch.agg(unix_micros(min($"ts")), unix_micros(max($"ts")), count(lit(1)))
+        .first()
       val midUs = (mm.getLong(0) + mm.getLong(1)) / 2
-      stagedMaxUs.put(key, java.lang.Long.valueOf(mm.getLong(1)))
-      def parquets() = {
-        val s = Files.list(Paths.get(inDir))
-        try s.filter(p => p.toString.endsWith(".parquet"))
-          .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).toSet
-        finally s.close()
-      }
+      def parquets() = listDir(Paths.get(inDir)).filter(_.toString.endsWith(".parquet")).toSet
       batch.filter(unix_micros($"ts") <= midUs)
         .coalesce(1).write.mode("overwrite").parquet(inDir)
       val firstHalf = parquets()
@@ -279,65 +258,67 @@ object StreamingLatest {
         java.nio.file.attribute.FileTime.fromMillis(t0)))
       (parquets() -- firstHalf).foreach(p => Files.setLastModifiedTime(p,
         java.nio.file.attribute.FileTime.fromMillis(t0 + 1000)))
-      inDir
+      Staged(inDir, mm.getLong(1), mm.getLong(2), batch.schema)
     })
   }
 
-  /** Max event time (µs) of the log — the staging aggregate's scalar,
-    * via [[stagedMaxUs]]; falls back to a one-row aggregate only if the
-    * memo is cold under the live signature key. */
-  private def maxEventUs(spark: SparkSession, sfDir: String): Long = {
-    import spark.implicits._
-    stagedEventLog(spark, sfDir) // populates the memo on first staging
-    val key = sfDir + "\n" + graft.DevScale.srcSig(s"$sfDir/events.parquet")
-    stagedMaxUs.computeIfAbsent(key, _ =>
-      java.lang.Long.valueOf(graft.Tables.events(spark, sfDir)
-        .agg(unix_micros(max($"ts"))).first().getLong(0))).longValue()
+  /** Drop memo entries for the SAME source dir under a SUPERSEDED
+    * signature (the source was regenerated in place within this JVM)
+    * and delete their staged copies, which would otherwise sit on disk
+    * for the JVM's lifetime. Runs OUTSIDE computeIfAbsent: mutating
+    * other keys from inside its remapping function is forbidden by
+    * ConcurrentHashMap's contract. Sound only under sequential use: a
+    * concurrent caller still replaying the old staged copy would have
+    * it deleted under its source. */
+  private def evictStale(sfDir: String, liveKey: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    stagedLogs.keySet.iterator.asScala
+      .filter(k => k.startsWith(sfDir + "\n") && k != liveKey).toList
+      .foreach(k => Option(stagedLogs.remove(k)).foreach(s => graft.StageDirs.rm(Paths.get(s.dir))))
   }
+
+  /** A streaming read of the staged log (or of `dir`, a copy of it)
+    * with the given column subset, `maxFilesPerTrigger` files per
+    * micro-batch (`None`: everything in one batch). */
+  private def logStream(spark: SparkSession, sfDir: String, cols: Seq[String],
+      maxFilesPerTrigger: Option[Int] = Some(1), dir: Option[String] = None): DataFrame = {
+    val log = staged(spark, sfDir)
+    val r = spark.readStream.schema(StructType(cols.map(log.schema(_))))
+    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n.toString))
+      .parquet(dir.getOrElse(log.dir))
+  }
+
+  /** The finalized horizon H = max(ts) − 1 h: the watermark after the
+    * trailing no-data batch. */
+  private def horizonUs(spark: SparkSession, sfDir: String): Long =
+    staged(spark, sfDir).maxUs - 3600L * 1000000L
+
+  // ── windowed and keyless aggregates ────────────────────────────────
 
   /** `cdc_stream_windowed`: event-time tumbling windows computed by a
     * *streaming* query (watermark + window aggregate, complete mode so the
     * bounded final state is the full answer) — the streaming twin of the
     * batch `cdc_stream_tumbling`, sharing its oracle SQL: the gate checks
     * streaming/batch equivalence through DuckDB. */
-  def streamWindowed(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
-    val runDir = jvmTmpDir("runw")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"ts", $"event_type", $"value").schema
+  def streamWindowed(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      Query(hourlyByType(logStream(spark, sfDir, Seq("ts", "event_type", "value"))),
+        "complete", Sink.Overwrite)
+    } { run => hourlyRows(spark.read.parquet(run.out)) }
 
-    val agg = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
+  /** Watermarked hourly (window, event_type) count + decimal-exact sum. */
+  private def hourlyByType(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum($"value".cast(DecimalType(18, 6))).as("sum_dec"))
+        sum(col("value").cast(DecimalType(18, 6))).as("sum_dec"))
 
-    val q = agg.writeStream
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("overwrite").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    spark.read.parquet(outDir)
-      .select(
-        unix_millis($"w.start").as("bucket_ms"),
-        $"event_type", $"n_events",
-        round($"sum_dec".cast("double"), 4).as("sum_value"))
-      .orderBy($"bucket_ms", $"event_type")
-  } }
+  private def hourlyRows(windows: DataFrame): DataFrame =
+    windows.select(
+        unix_millis(col("w.start")).as("bucket_ms"),
+        col("event_type"), col("n_events"),
+        round(col("sum_dec").cast("double"), 4).as("sum_value"))
+      .orderBy(col("bucket_ms"), col("event_type"))
 
   /** `cdc_stream_sliding`: event-time SLIDING windows (1 hour every
     * 15 minutes) computed by a streaming query — completes the
@@ -350,42 +331,21 @@ object StreamingLatest {
     * is why the query shares the batch `window_sliding_time` oracle
     * (the gate checks streaming/batch sliding-window equivalence
     * through DuckDB). */
-  def streamSliding(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("runsl")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"ts", $"event_type", $"event_id").schema
-
-    val agg = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window($"ts", "1 hour", "15 minutes").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n_events"),
-        min($"event_id").as("min_event_id"),
-        max($"event_id").as("max_event_id"))
-
-    val q = agg.writeStream
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("overwrite").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    spark.read.parquet(outDir)
-      .select(unix_micros($"w.start").as("win_start_us"), $"event_type",
-        $"n_events", $"min_event_id", $"max_event_id")
-      .orderBy($"win_start_us", $"event_type")
-  } }
+  def streamSliding(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      Query(logStream(spark, sfDir, Seq("ts", "event_type", "event_id"))
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          min(col("event_id")).as("min_event_id"),
+          max(col("event_id")).as("max_event_id")),
+        "complete", Sink.Overwrite)
+    } { run =>
+      spark.read.parquet(run.out)
+        .select(unix_micros(col("w.start")).as("win_start_us"), col("event_type"),
+          col("n_events"), col("min_event_id"), col("max_event_id"))
+        .orderBy(col("win_start_us"), col("event_type"))
+    }
 
   /** `cdc_stream_sessionize`: streaming session windows — 30-minute-gap
     * sessions per user computed incrementally, emitted in APPEND mode,
@@ -400,62 +360,33 @@ object StreamingLatest {
     * (lag/cumsum islands + the same horizon filter). Sessions at/after
     * the horizon stay in state awaiting more data and are excluded on
     * both sides. State: one (user, open-session) accumulator, merged on
-    * gap-overlap, evicted at emission. */
-  def streamSessionize(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) {
-    import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
-    val runDir = jvmTmpDir("runs")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"ts", $"user_id", $"value").schema
-
-    val agg = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window($"ts", "30 minutes").as("sw"), $"user_id")
-      .agg(count(lit(1)).as("n_events"),
-        sum($"value".cast(DecimalType(18, 6))).as("sum_dec"))
-
-    val q = agg.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    // finalized horizon (1-row scalar gate, same pattern as the staged
-    // log's watermark scalar): the final no-data batch advances the
-    // watermark to max(ts) − 1 h; sessions strictly below it are the
-    // deterministic, oracle-checkable output set. The max-ts scalar is
-    // the staging aggregate's, memoized (maxEventUs) — not a fresh
-    // batch job per invocation.
-    val horizonUs = maxEventUs(spark, sfDir) - 3600L * 1000000L
-
-    spark.read.parquet(outDir)
-      .filter(unix_micros($"sw.end") < horizonUs)
-      .select($"user_id",
-        unix_micros($"sw.start").as("session_start_us"),
-        $"n_events",
-        round($"sum_dec".cast("double"), 4).as("sum_value"))
-      .orderBy($"user_id", $"session_start_us")
-  }
+    * gap-overlap, evicted at emission. Emission needs the trailing
+    * no-data batch. */
+  def streamSessionize(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.SessionDefault) { _ =>
+      Query(logStream(spark, sfDir, Seq("ts", "user_id", "value"))
+        .withWatermark("ts", "1 hour")
+        .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast(DecimalType(18, 6))).as("sum_dec")),
+        "append", Sink.Append)
+    } { run =>
+      spark.read.parquet(run.out)
+        .filter(unix_micros(col("sw.end")) < horizonUs(spark, sfDir))
+        .select(col("user_id"),
+          unix_micros(col("sw.start")).as("session_start_us"),
+          col("n_events"),
+          round(col("sum_dec").cast("double"), 4).as("sum_value"))
+        .orderBy(col("user_id"), col("session_start_us"))
+    }
 
   /** `cdc_stream_dedup`: streaming exactly-once dedup — the at-least-once
     * delivery repair every CDC consumer needs (the reference worker's
     * offset tracking is at-least-once: connect-standalone.properties:4-5,
-    * re-delivery on crash replays events). The staged input is the event
-    * log TWICE (the replayed copies carry later mtimes, so with
+    * re-delivery on crash replays events). The input is the staged log
+    * TWICE: plain filesystem copies with stepped mtimes, so with
     * maxFilesPerTrigger = half-count the whole replay arrives in a later
-    * micro-batch than every original);
+    * micro-batch than every original;
     * `dropDuplicatesWithinWatermark` on the record key keeps state only
     * within the watermark horizon — bounded state at 100 TB, unlike plain
     * dropDuplicates whose key state grows forever. A replayed record is
@@ -463,103 +394,137 @@ object StreamingLatest {
     * late (behind it) — both paths erase the duplicate, which is why the
     * result can share the exact batch oracle (per-type counts of the
     * single-copy log). */
-  def streamDedup(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("rund")
-    val inDir   = s"$runDir/in"
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    // the at-least-once re-delivery: the staged log's files, then the
-    // same files AGAIN — plain filesystem copies with stepped mtimes, so
-    // the file source replays original halves first, then the duplicates
-    val staged = Files.list(Paths.get(stagedEventLog(spark, sfDir)))
-      .filter(p => p.toString.endsWith(".parquet"))
-      .sorted(java.util.Comparator.comparingLong((p: java.nio.file.Path) =>
-        Files.getLastModifiedTime(p).toMillis))
-      .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-    Files.createDirectories(Paths.get(inDir))
-    (staged ++ staged).zipWithIndex.foreach { case (src, i) =>
-      val dst = Paths.get(inDir, f"f$i%02d.parquet")
-      Files.copy(src, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i))
-    }
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"event_type").schema
-
-    val deduped = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", staged.size.toString)
-      .parquet(inDir)
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-
-    val q = deduped.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
+  def streamDedup(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { run =>
+      val files = listDir(Paths.get(stagedEventLog(spark, sfDir)))
+        .filter(_.toString.endsWith(".parquet"))
+        .sortBy(p => Files.getLastModifiedTime(p).toMillis)
+      val inDir = Files.createDirectories(run.dir.resolve("in"))
+      (files ++ files).zipWithIndex.foreach { case (src, i) =>
+        val dst = Files.copy(src, inDir.resolve(f"f$i%02d.parquet"))
+        Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i))
       }
-      .start()
-    q.awaitTermination()
+      Query(logStream(spark, sfDir, Seq("event_id", "ts", "event_type"),
+          Some(files.size), Some(inDir.toString))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("event_id"),
+        "append", Sink.Append)
+    } { run =>
+      spark.read.parquet(run.out)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+        .orderBy(col("event_type"))
+    }
 
-    rmTree(Paths.get(inDir)); cleanupCkpt(spark, Paths.get(ckptDir))
+  /** `cdc_stream_update_counts`: UPDATE-mode streaming aggregation —
+    * the one output mode the suite didn't yet exercise (complete:
+    * streamWindowed; append: sessionize/dedup/joins; update so far only
+    * via flatMapGroupsWithState). A windowless per-type count re-emits
+    * each CHANGED group per micro-batch; the sink keeps every emission
+    * and the final row per group is the total — which is why this query
+    * shares exact batch-count semantics: the last update for a group
+    * equals the full-log aggregate. At 100 TB this is the live-dashboard
+    * shape: bounded state (one row per group), bounded emission
+    * (changed groups only), no watermark needed. */
+  def streamUpdateCounts(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      Query(logStream(spark, sfDir, StagedCols)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,6)")).as("sum_value_dec")),
+        "update", Sink.AppendBatchId)
+    } { run =>
+      // final emission per group = the total over the whole log
+      val w = Window.partitionBy(col("event_type")).orderBy(col("batch_id").desc)
+      spark.read.parquet(run.out)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("event_type"), col("n_events"),
+          round(col("sum_value_dec").cast("double"), 4).as("sum_value"))
+        .orderBy(col("event_type"))
+    }
 
-    spark.read.parquet(outDir)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy($"event_type")
-  } }
+  /** `cdc_stream_union`: UNION of two live streams feeding ONE stateful
+    * aggregate — the fan-in topology (many CDC topics → one consumer)
+    * the reference's single-topic tutorial is the degenerate case of.
+    * Two independent file sources replay the same staged log with
+    * different predicates/projections (purchases keep their value,
+    * clicks ride a zero — the schema-alignment step any real fan-in
+    * needs), `unionByName` merges them BEFORE the watermark, so one
+    * watermark/state pipeline serves both sources; complete-mode hourly
+    * aggregate = the full answer. Scale: the union is a no-shuffle
+    * narrow op — each source's partitions feed the shared hash
+    * aggregate directly; state stays bounded by (window × type). */
+  def streamUnion(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      val cols = Seq("ts", "event_type", "value")
+      val purchases = logStream(spark, sfDir, cols)
+        .filter(col("event_type") === "purchase")
+        .select(col("ts"), col("event_type"), col("value"))
+      val clicks = logStream(spark, sfDir, cols)
+        .filter(col("event_type") === "click")
+        .select(col("ts"), col("event_type"), lit(0.0).as("value"))
+      Query(hourlyByType(purchases.unionByName(clicks)), "complete", Sink.Overwrite)
+    } { run => hourlyRows(spark.read.parquet(run.out)) }
+
+  /** `cdc_stream_windowed_append`: the tumbling aggregate in APPEND
+    * mode — each window row is emitted exactly ONCE, when the watermark
+    * finalizes it, and never revised. Complete mode
+    * (`cdc_stream_windowed`) re-emits the whole result every batch —
+    * fine for a small dashboard sink; append is the mode a downstream
+    * TABLE needs (immutable window rows, incremental consumption), and
+    * its state is evicted at emission instead of held forever, which is
+    * what bounds state at 100 TB. The no-data micro-batch is REQUIRED
+    * here (unlike the complete-mode queries): emission happens on
+    * watermark advance, so the final watermark-only batch is what
+    * flushes the last closed windows. Output pinned to the finalized
+    * horizon H = max(ts) − 1 h (strictly-below filter on BOTH engines,
+    * the `streamSessionize` oracle trick) so the emitted set is
+    * deterministic and closed-form. */
+  def streamWindowedAppend(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.SessionDefault) { _ =>
+      Query(hourlyByType(logStream(spark, sfDir, Seq("ts", "event_type", "value"))),
+        "append", Sink.Append)
+    } { run =>
+      hourlyRows(spark.read.parquet(run.out)
+        .filter(unix_micros(col("w.end")) < horizonUs(spark, sfDir)))
+    }
+
+  // ── stream-stream and stream-static joins ──────────────────────────
+
+  /** Purchases joined (`how`) to the same user's clicks from the
+    * preceding hour, both sides watermarked streams of the staged log.
+    * The time-bound condition plus the two watermarks is what lets
+    * Spark evict join state (a click older than purchase-watermark − 1 h
+    * can never match a future purchase), so state stays bounded. */
+  private def clickJoin(spark: SparkSession, sfDir: String, how: String): DataFrame = {
+    val cols = Seq("event_id", "ts", "user_id", "event_type")
+    val purchases = logStream(spark, sfDir, cols).filter(col("event_type") === "purchase")
+      .select(col("event_id").as("p_id"), col("ts").as("p_ts"), col("user_id").as("p_user"))
+      .withWatermark("p_ts", "1 hour")
+    val clicks = logStream(spark, sfDir, cols).filter(col("event_type") === "click")
+      .select(col("event_id").as("c_id"), col("ts").as("c_ts"), col("user_id").as("c_user"))
+      .withWatermark("c_ts", "1 hour")
+    purchases.join(clicks,
+      expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"), how)
+  }
+
+  private val PairCols = Seq(col("p_id").as("purchase_event_id"), col("c_id").as("click_event_id"))
 
   /** `cdc_stream_join`: watermarked stream-stream interval join — each
     * purchase joined to the same user's clicks from the preceding hour,
-    * both sides live streams. The time-bound join condition plus the
-    * two watermarks is what lets Spark evict join state (a click older
-    * than purchase-watermark − 1 h can never match a future purchase),
-    * so state stays bounded at 100 TB. The staged replay is event-time-
-    * ordered (same files as streamStateful's contract): eviction then
-    * provably never races a pending match — every batch-2 purchase
-    * needs clicks newer than (watermark − 1 h), which are still in
-    * state — so the streaming result shares an exact batch oracle. */
-  def streamJoin(spark: SparkSession, sfDir: String): DataFrame = withJoinStateV3(spark) { withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("runj")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type").schema
-
-    def src() = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val purchases = src().filter($"event_type" === "purchase")
-      .select($"event_id".as("p_id"), $"ts".as("p_ts"), $"user_id".as("p_user"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = src().filter($"event_type" === "click")
-      .select($"event_id".as("c_id"), $"ts".as("c_ts"), $"user_id".as("c_user"))
-      .withWatermark("c_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"))
-      .select($"p_id".as("purchase_event_id"), $"c_id".as("click_event_id"))
-
-    val q = joined.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir)) // the staged log is shared; keep it
-
-    spark.read.parquet(outDir)
-      .orderBy($"purchase_event_id", $"click_event_id")
-  } } }
+    * both sides live streams. The staged replay is event-time-ordered
+    * (same files as streamStateful's contract): eviction then provably
+    * never races a pending match — every batch-2 purchase needs clicks
+    * newer than (watermark − 1 h), which are still in state — so the
+    * streaming result shares an exact batch oracle. */
+  def streamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDbJoinV3) { _ =>
+      Query(clickJoin(spark, sfDir, "inner").select(PairCols: _*), "append", Sink.Append)
+    } { run =>
+      spark.read.parquet(run.out).orderBy(col("purchase_event_id"), col("click_event_id"))
+    }
 
   /** `cdc_stream_join_outer`: watermarked stream-stream LEFT OUTER
     * interval join — streamJoin's shape, but purchases with no click in
@@ -569,8 +534,7 @@ object StreamingLatest {
     * future clicks have c_ts ≥ watermark ⇒ finalized when watermark
     * passes p_ts), so the engine emits them on state eviction — which is
     * why this query must KEEP the trailing no-data micro-batch (the
-    * final watermark advance happens after the last data batch; compare
-    * withoutNoDataBatch's contract).
+    * final watermark advance happens after the last data batch).
     *
     * Oracle: the finalized-horizon trick. At end of replay the global
     * watermark is min(max purchase ts, max click ts) − 1 h (two
@@ -578,45 +542,12 @@ object StreamingLatest {
     * streaming output is exactly the batch left-outer join with null
     * rows RESTRICTED to purchases below that horizon — a closed-form
     * DuckDB twin, no streaming machinery needed on the oracle side. */
-  def streamJoinOuter(spark: SparkSession, sfDir: String): DataFrame = withJoinStateV3(spark) { withStatePartitions(spark, stateParts(spark, sfDir)) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("runjo")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type").schema
-
-    def src() = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val purchases = src().filter($"event_type" === "purchase")
-      .select($"event_id".as("p_id"), $"ts".as("p_ts"), $"user_id".as("p_user"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = src().filter($"event_type" === "click")
-      .select($"event_id".as("c_id"), $"ts".as("c_ts"), $"user_id".as("c_user"))
-      .withWatermark("c_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"),
-      "left_outer")
-      .select($"p_id".as("purchase_event_id"), $"c_id".as("click_event_id"))
-
-    val q = joined.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir)) // the staged log is shared; keep it
-
-    spark.read.parquet(outDir)
-      .orderBy($"purchase_event_id", $"click_event_id")
-  } }
+  def streamJoinOuter(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
+      Query(clickJoin(spark, sfDir, "left_outer").select(PairCols: _*), "append", Sink.Append)
+    } { run =>
+      spark.read.parquet(run.out).orderBy(col("purchase_event_id"), col("click_event_id"))
+    }
 
   /** `cdc_stream_join_full`: watermarked stream-stream FULL OUTER
     * interval join — both unmatched sides survive with nulls, each
@@ -630,45 +561,13 @@ object StreamingLatest {
     * the closed-form oracle states both predicates below the
     * end-of-replay watermark. Trailing no-data batch KEPT (null
     * emissions happen on state eviction). */
-  def streamJoinFull(spark: SparkSession, sfDir: String): DataFrame = withJoinStateV3(spark) { withStatePartitions(spark, stateParts(spark, sfDir)) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("runjf")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type").schema
-
-    def src() = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val purchases = src().filter($"event_type" === "purchase")
-      .select($"event_id".as("p_id"), $"ts".as("p_ts"), $"user_id".as("p_user"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = src().filter($"event_type" === "click")
-      .select($"event_id".as("c_id"), $"ts".as("c_ts"), $"user_id".as("c_user"))
-      .withWatermark("c_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"),
-      "full_outer")
-      .select($"p_id".as("purchase_event_id"), $"c_id".as("click_event_id"))
-
-    val q = joined.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir)) // the staged log is shared; keep it
-
-    spark.read.parquet(outDir)
-      .orderBy($"purchase_event_id".asc_nulls_first, $"click_event_id".asc_nulls_first)
-  } }
+  def streamJoinFull(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
+      Query(clickJoin(spark, sfDir, "full_outer").select(PairCols: _*), "append", Sink.Append)
+    } { run =>
+      spark.read.parquet(run.out)
+        .orderBy(col("purchase_event_id").asc_nulls_first, col("click_event_id").asc_nulls_first)
+    }
 
   /** `cdc_stream_join_semi`: watermarked stream-stream LEFT SEMI
     * interval join — completing the stream-stream join-type matrix
@@ -685,46 +584,13 @@ object StreamingLatest {
     * when it arrives — emissions all happen on data batches and the
     * output is EXACTLY the batch semi join, no horizon restriction
     * (compare the outer join's finalized-horizon oracle). */
-  def streamJoinSemi(spark: SparkSession, sfDir: String): DataFrame = withJoinStateV3(spark) { withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("runjs")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type").schema
-
-    def src() = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val purchases = src().filter($"event_type" === "purchase")
-      .select($"event_id".as("p_id"), $"ts".as("p_ts"), $"user_id".as("p_user"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = src().filter($"event_type" === "click")
-      .select($"event_id".as("c_id"), $"ts".as("c_ts"), $"user_id".as("c_user"))
-      .withWatermark("c_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"),
-      "left_semi")
-      .select($"p_id".as("purchase_event_id"), $"p_user".as("user_id"),
-        unix_micros($"p_ts").as("p_ts_us"))
-
-    val q = joined.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir)) // the staged log is shared; keep it
-
-    spark.read.parquet(outDir)
-      .orderBy($"purchase_event_id")
-  } } }
+  def streamJoinSemi(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDbJoinV3) { _ =>
+      Query(clickJoin(spark, sfDir, "left_semi")
+        .select(col("p_id").as("purchase_event_id"), col("p_user").as("user_id"),
+          unix_micros(col("p_ts")).as("p_ts_us")),
+        "append", Sink.Append)
+    } { run => spark.read.parquet(run.out).orderBy(col("purchase_event_id")) }
 
   /** `cdc_stream_static_join`: stream-static enrichment join — the
     * streaming side (the replayed CDC log) joined per micro-batch
@@ -736,68 +602,115 @@ object StreamingLatest {
     * data (vs. a stream-stream join that must hold state). Because the
     * join is stateless and append-only, the result is EXACTLY the batch
     * join: the DuckDB oracle recomputes it directly. */
-  def streamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("runsj")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
+  def streamStaticJoin(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      val firstSeen = graft.Tables.events(spark, sfDir)
+        .groupBy(col("user_id").as("d_user"))
+        .agg(unix_micros(min(col("ts"))).as("first_us"))
+      Query(logStream(spark, sfDir, StagedCols)
+        .join(broadcast(firstSeen), col("user_id") === col("d_user"))
+        .select(col("event_id"), col("user_id"), col("first_us"),
+          (unix_micros(col("ts")) - col("first_us")).as("since_first_us")),
+        "append", Sink.Append)
+    } { run => spark.read.parquet(run.out).orderBy(col("event_id")) }
 
-    // the static dimension: per-user first activity, computed in batch
-    val firstSeen = graft.Tables.events(spark, sfDir)
-      .groupBy($"user_id".as("d_user"))
-      .agg(unix_micros(min($"ts")).as("first_us"))
+  // ── keyed state: latest-wins and its variants ──────────────────────
 
-    val enriched = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .join(broadcast(firstSeen), $"user_id" === $"d_user")
-      .select($"event_id", $"user_id", $"first_us",
-        (unix_micros($"ts") - $"first_us").as("since_first_us"))
+  /** The latest-wins winner rule every state body shares: fold `events`
+    * into `prev`, keeping the max by (ts_us, event_id). Returns the new
+    * winner, or None when no event beat `prev`. */
+  private[graft] def latestOf(key: Long, prev: Option[LatestRow],
+      events: Iterator[Ev]): Option[LatestRow] = {
+    val before = prev.orNull
+    val best = events.foldLeft(before) { (best, e) =>
+      val us = tsMicros(e.ts)
+      if (best == null || us > best.last_ts_us ||
+          (us == best.last_ts_us && e.event_id > best.last_event_id))
+        LatestRow(key, e.event_id, e.event_type, e.value, us)
+      else best
+    }
+    if (best eq before) None else Some(best)
+  }
 
-    val q = enriched.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
+  /** Event-time TTL arm (ms) of a latest row: 2 h after its last event. */
+  private def ttlArmMs(r: LatestRow): Long = r.last_ts_us / 1000L + 2L * 3600 * 1000
 
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    spark.read.parquet(outDir)
-      .orderBy($"event_id")
-  } }
+  private def ttlRow(r: LatestRow, expired: Boolean): TtlRow =
+    TtlRow(r.user_id, r.last_event_id, r.last_event_type, r.last_value, r.last_ts_us, expired)
 
   /** Keep the max-(ts_us, event_id) record per key; emit the new latest on
     * every update (OutputMode.Update). */
   private[graft] def updateKey(userId: Long, it: Iterator[Ev],
-      state: GroupState[LatestRow]): Iterator[LatestRow] = {
-    var best = state.getOption.orNull
-    var changed = false
-    it.foreach { e =>
-      val us = tsMicros(e.ts)
-      if (best == null || us > best.last_ts_us ||
-          (us == best.last_ts_us && e.event_id > best.last_event_id)) {
-        best = LatestRow(userId, e.event_id, e.event_type, e.value, us)
-        changed = true
-      }
-    }
-    if (changed) { state.update(best); Iterator.single(best) } else Iterator.empty
+      state: GroupState[LatestRow]): Iterator[LatestRow] =
+    latestOf(userId, state.getOption, it).map { b => state.update(b); b }.iterator
+
+  /** State body for [[streamStateTtl]]: latest-wins plus an EVENT-TIME
+    * TTL — every update re-arms a timeout at last_ts + 2 h; when the
+    * watermark passes it the state is EVICTED and its final value
+    * emitted flagged `expired`. The eviction branch (hasTimedOut) is
+    * the one GroupState feature no other query exercises. */
+  private[graft] def ttlKey(userId: Long, it: Iterator[Ev],
+      state: GroupState[LatestRow]): Iterator[TtlRow] =
+    if (state.hasTimedOut) {
+      val s = state.get
+      state.remove()
+      Iterator.single(ttlRow(s, expired = true))
+    } else latestOf(userId, state.getOption, it).map { b =>
+      state.update(b)
+      state.setTimeoutTimestamp(ttlArmMs(b))
+      ttlRow(b, expired = false)
+    }.iterator
+
+  /** Final record per key of a TTL replay: max (ts, event_id); an
+    * eviction row shares its state's (ts, id), so `expired DESC` breaks
+    * the tie in its favor — the eviction is the later lifecycle event. */
+  private def finalTtlRows(emitted: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("last_ts_us").desc, col("last_event_id").desc, col("expired").desc)
+    emitted.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("user_id"), col("last_event_id"), col("last_event_type"),
+        round(col("last_value"), 4).as("last_value"), col("last_ts_us"), col("expired"))
+      .orderBy(col("user_id"))
+  }
+
+  /** Final state per key of a latest-wins replay: multiple micro-batches
+    * append successive per-key snapshots; keep the last one (same
+    * (ts_us, event_id) order as the state body). */
+  private def finalLatestRows(emitted: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("last_ts_us").desc, col("last_event_id").desc)
+    emitted.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("user_id"), col("last_event_id"), col("last_event_type"),
+        round(col("last_value"), 4).as("last_value"), col("last_ts_us"))
+      .orderBy(col("user_id"))
+  }
+
+  /** The watermarked staged log as typed events, grouped by user. */
+  private def eventsByUser(spark: SparkSession, sfDir: String) = {
+    import spark.implicits._
+    logStream(spark, sfDir, StagedCols)
+      .withWatermark("ts", "1 hour")
+      .select(StagedCols.map(col): _*).as[Ev]
+      .groupByKey(_.user_id)
   }
 
   /** `cdc_stream_stateful`: run the streaming query to completion over the
     * events parquet (Trigger.AvailableNow) and return the final keyed
     * state. Shares the batch `cdc_latest_state` DuckDB oracle — sound
-    * because the staged replay below is event-time-ordered, so the
+    * because the staged replay is event-time-ordered (the ordering
+    * contract a CDC log/Kafka topic gives the connector — reference:
+    * offset-ordered partition 0, rpk_topic_consume.json), so the
     * watermark can never drop a key's winning event (the SIGMOD'18
     * batch/streaming-equivalence argument, PAPERS.md; StreamingSpec
-    * additionally asserts the equivalence in-process at smoke scale). */
+    * additionally asserts the equivalence in-process at smoke scale).
+    * The two-file staged log with maxFilesPerTrigger=1 exercises
+    * incremental multi-batch state updates. */
+  def streamStateful(spark: SparkSession, sfDir: String): DataFrame =
+    latestWinsOver(spark, logStream(spark, sfDir, StagedCols), logParts(spark, sfDir),
+      StateLayout.SessionDefault)
+
   /** `cdc_stream_stateful_rocksdb`: [[streamStateful]] with the state
     * store swapped to RocksDB — the provider a 100 TB deployment runs,
     * because keyed CDC state grows with key cardinality and an on-heap
@@ -806,93 +719,27 @@ object StreamingLatest {
     * gate proves the state-store choice is a pure capacity knob, not a
     * semantics change. */
   def streamStatefulRocksDb(spark: SparkSession, sfDir: String): DataFrame =
-    withRocksDb(spark)(streamStateful(spark, sfDir))
+    latestWinsOver(spark, logStream(spark, sfDir, StagedCols), logParts(spark, sfDir),
+      StateLayout.RocksDb)
 
-  /** `cdc_stream_update_counts`: UPDATE-mode streaming aggregation —
-    * the one output mode the suite didn't yet exercise (complete:
-    * streamWindowed; append: sessionize/dedup/joins; update so far only
-    * via flatMapGroupsWithState). A windowless per-type count re-emits
-    * each CHANGED group per micro-batch; the sink keeps every emission
-    * and the final row per group is the total — which is why this query
-    * shares exact batch-count semantics: the last update for a group
-    * equals the full-log aggregate. At 100 TB this is the live-dashboard
-    * shape: bounded state (one row per group), bounded emission
-    * (changed groups only), no watermark needed. */
-  def streamUpdateCounts(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val runDir = jvmTmpDir("runuc")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-
-    val counts = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum($"value".cast("decimal(18,6)")).as("sum_value_dec"))
-
-    val q = counts.writeStream
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        b.withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    // final emission per group = the total over the whole log
-    val w = Window.partitionBy($"event_type").orderBy($"batch_id".desc)
-    spark.read.parquet(outDir)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .select($"event_type", $"n_events",
-        round($"sum_value_dec".cast("double"), 4).as("sum_value"))
-      .orderBy($"event_type")
-  } }
-
-  case class TtlRow(user_id: Long, last_event_id: Long, last_event_type: String,
-      last_value: Double, last_ts_us: Long, expired: Boolean)
-
-  /** State body for [[streamStateTtl]]: latest-wins plus an EVENT-TIME
-    * TTL — every update re-arms a timeout at last_ts + 2 h; when the
-    * watermark passes it the state is EVICTED and its final value
-    * emitted flagged `expired`. The eviction branch (hasTimedOut) is
-    * the one GroupState feature no other query exercises. */
-  private[graft] def ttlKey(userId: Long, it: Iterator[Ev],
-      state: GroupState[LatestRow]): Iterator[TtlRow] = {
-    if (state.hasTimedOut) {
-      val s = state.get
-      state.remove()
-      Iterator.single(TtlRow(s.user_id, s.last_event_id, s.last_event_type,
-        s.last_value, s.last_ts_us, expired = true))
-    } else {
-      var best = state.getOption.orNull
-      var changed = false
-      it.foreach { e =>
-        val us = tsMicros(e.ts)
-        if (best == null || us > best.last_ts_us ||
-            (us == best.last_ts_us && e.event_id > best.last_event_id)) {
-          best = LatestRow(userId, e.event_id, e.event_type, e.value, us)
-          changed = true
-        }
-      }
-      if (changed) {
-        state.update(best)
-        // re-arm: expire 2h of EVENT time after the latest event (ms API)
-        state.setTimeoutTimestamp(best.last_ts_us / 1000L + 2L * 3600 * 1000)
-        Iterator.single(TtlRow(best.user_id, best.last_event_id,
-          best.last_event_type, best.last_value, best.last_ts_us, expired = false))
-      } else Iterator.empty
-    }
-  }
+  /** The latest-wins pipeline body, source-agnostic: `source` is any
+    * STREAMING DataFrame carrying the event columns — the staged file
+    * log (the gate/bench path) or a real Kafka topic
+    * ([[KafkaWire.latestState]]). Everything downstream of the source —
+    * watermark, keyed flatMapGroupsWithState, append sink, checkpoint
+    * lifecycle, final per-key reduce — is THIS one method, so the two
+    * paths cannot drift. */
+  private[cdc] def latestWinsOver(spark: SparkSession, source: => DataFrame, parts: Int,
+      layout: StateLayout): DataFrame =
+    replay(spark, parts, keepNoDataBatch = false, layout) { _ =>
+      import spark.implicits._
+      Query(source
+        .withWatermark("ts", "1 hour")
+        .select(StagedCols.map(col): _*).as[Ev]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateKey),
+        "update", Sink.Append)
+    } { run => finalLatestRows(spark.read.parquet(run.out)) }
 
   /** `cdc_stream_state_ttl`: latest-wins with EVENT-TIME state TTL —
     * the bounded-state discipline a 100 TB CDC consumer actually needs:
@@ -903,9 +750,8 @@ object StreamingLatest {
     * session-style lifecycle. Emissions: every new latest (update
     * mode, expired=false) plus one flagged row per eviction carrying
     * the evicted state; the trailing no-data micro-batch (which this
-    * query therefore KEEPS, unlike the withoutNoDataBatch family)
-    * advances the final watermark to max(ts) − 1 h and fires the
-    * remaining timeouts.
+    * query therefore KEEPS) advances the final watermark to
+    * max(ts) − 1 h and fires the remaining timeouts.
     *
     * Closed-form oracle (the finalized-horizon trick): with the
     * event-time-ordered replay, the final per-key reduce (max
@@ -915,53 +761,17 @@ object StreamingLatest {
     * `max_ts − 1 h > last_ts + 2 h` — plain SQL, no streaming
     * machinery. 111 of the 150 fixture users expire; 39 stay live, so
     * both lifecycle branches are oracle-covered. */
-  def streamStateTtl(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) {
-    import spark.implicits._
-    val runDir  = jvmTmpDir("runttl")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-
-    val updates = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withWatermark("ts", "1 hour")
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout)(ttlKey)
-
-    val q = updates.writeStream
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[TtlRow], _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    // final record per key: max (ts, event_id); an eviction row shares
-    // its state's (ts, id), so `expired DESC` breaks the tie in its
-    // favor — the eviction is the later lifecycle event
-    val w = Window.partitionBy($"user_id")
-      .orderBy($"last_ts_us".desc, $"last_event_id".desc, $"expired".desc)
-    spark.read.parquet(outDir)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .select($"user_id", $"last_event_id", $"last_event_type",
-        round($"last_value", 4).as("last_value"), $"last_ts_us", $"expired")
-      .orderBy($"user_id")
-  }
+  def streamStateTtl(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.SessionDefault) { _ =>
+      import spark.implicits._
+      Query(eventsByUser(spark, sfDir)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(ttlKey),
+        "update", Sink.Append)
+    } { run => finalTtlRows(spark.read.parquet(run.out)) }
 
   /** Latest-wins as a Spark 4 state-API-v2 [[StatefulProcessor]]: one
-    * typed ValueState per key, same (ts_us, event_id) winner rule as
-    * [[updateKey]], new latest emitted on change (update-mode shape). */
+    * typed ValueState per key, the [[latestOf]] winner rule, new latest
+    * emitted on change (update-mode shape). */
   private[graft] class LatestWinsProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, LatestRow] {
     import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, TimerValues, ValueState}
@@ -970,19 +780,9 @@ object StreamingLatest {
       latest = getHandle.getValueState[LatestRow]("latest",
         org.apache.spark.sql.Encoders.product[LatestRow], TTLConfig.NONE)
     override def handleInputRows(key: Long, rows: Iterator[Ev],
-        timerValues: TimerValues): Iterator[LatestRow] = {
-      var best = if (latest.exists()) latest.get() else null
-      var changed = false
-      rows.foreach { e =>
-        val us = tsMicros(e.ts)
-        if (best == null || us > best.last_ts_us ||
-            (us == best.last_ts_us && e.event_id > best.last_event_id)) {
-          best = LatestRow(key, e.event_id, e.event_type, e.value, us)
-          changed = true
-        }
-      }
-      if (changed) { latest.update(best); Iterator.single(best) } else Iterator.empty
-    }
+        timerValues: TimerValues): Iterator[LatestRow] =
+      latestOf(key, Option.when(latest.exists())(latest.get()), rows)
+        .map { b => latest.update(b); b }.iterator
   }
 
   /** `cdc_stream_stateful_tws`: [[streamStateful]] re-expressed on the
@@ -996,48 +796,12 @@ object StreamingLatest {
     * the gate proves the state API generation is an implementation
     * detail, not a semantics change. */
   def streamStatefulTws(spark: SparkSession, sfDir: String): DataFrame =
-    withRocksDb(spark)(
-      withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-        import spark.implicits._
-        val runDir = jvmTmpDir("runtws")
-        val inDir   = stagedEventLog(spark, sfDir)
-        val outDir  = s"$runDir/out"
-        val ckptDir = s"$runDir/ckpt"
-        val schema = graft.Tables.events(spark, sfDir)
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-
-        val updates = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir)
-          .withWatermark("ts", "1 hour")
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new LatestWinsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-
-        val q = updates.writeStream
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[LatestRow], _: Long) =>
-            batch.write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.awaitTermination()
-
-        cleanupCkpt(spark, Paths.get(ckptDir))
-
-        val w = Window.partitionBy($"user_id")
-          .orderBy($"last_ts_us".desc, $"last_event_id".desc)
-        spark.read.parquet(outDir)
-          .withColumn("rn", row_number().over(w))
-          .filter($"rn" === 1)
-          .select($"user_id", $"last_event_id", $"last_event_type",
-            round($"last_value", 4).as("last_value"), $"last_ts_us")
-          .orderBy($"user_id")
-      } })
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDb) { _ =>
+      import spark.implicits._
+      Query(eventsByUser(spark, sfDir).transformWithState(new LatestWinsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
+        "update", Sink.Append)
+    } { run => finalLatestRows(spark.read.parquet(run.out)) }
 
   /** [[LatestWinsProcessor]] plus NATIVE event-time eviction on the
     * state-API-v2 timer surface: same winner rule and update-mode
@@ -1055,35 +819,21 @@ object StreamingLatest {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       latest = getHandle.getValueState[LatestRow]("latest",
         org.apache.spark.sql.Encoders.product[LatestRow], TTLConfig.NONE)
-    private def armMs(r: LatestRow): Long = r.last_ts_us / 1000L + 2L * 3600 * 1000
     override def handleInputRows(key: Long, rows: Iterator[Ev],
         timerValues: TimerValues): Iterator[TtlRow] = {
-      val prev = if (latest.exists()) latest.get() else null
-      var best = prev
-      var changed = false
-      rows.foreach { e =>
-        val us = tsMicros(e.ts)
-        if (best == null || us > best.last_ts_us ||
-            (us == best.last_ts_us && e.event_id > best.last_event_id)) {
-          best = LatestRow(key, e.event_id, e.event_type, e.value, us)
-          changed = true
-        }
-      }
-      if (changed) {
-        latest.update(best)
-        if (prev != null) getHandle.deleteTimer(armMs(prev))
-        getHandle.registerTimer(armMs(best))
-        Iterator.single(TtlRow(best.user_id, best.last_event_id,
-          best.last_event_type, best.last_value, best.last_ts_us, expired = false))
-      } else Iterator.empty
+      val prev = Option.when(latest.exists())(latest.get())
+      latestOf(key, prev, rows).map { b =>
+        latest.update(b)
+        prev.foreach(p => getHandle.deleteTimer(ttlArmMs(p)))
+        getHandle.registerTimer(ttlArmMs(b))
+        ttlRow(b, expired = false)
+      }.iterator
     }
     override def handleExpiredTimer(key: Long, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[TtlRow] = {
-      val b = if (latest.exists()) latest.get() else null
+      val b = Option.when(latest.exists())(latest.get())
       latest.clear()
-      if (b == null) Iterator.empty
-      else Iterator.single(TtlRow(b.user_id, b.last_event_id,
-        b.last_event_type, b.last_value, b.last_ts_us, expired = true))
+      b.map(ttlRow(_, expired = true)).iterator
     }
   }
 
@@ -1100,50 +850,12 @@ object StreamingLatest {
     * proves timer eviction is semantics-identical across the API
     * generations. */
   def streamTwsTtl(spark: SparkSession, sfDir: String): DataFrame =
-    withRocksDb(spark)(
-      withStatePartitions(spark, stateParts(spark, sfDir)) {
-        import spark.implicits._
-        val runDir  = jvmTmpDir("runtwsttl")
-        val inDir   = stagedEventLog(spark, sfDir)
-        val outDir  = s"$runDir/out"
-        val ckptDir = s"$runDir/ckpt"
-        val schema = graft.Tables.events(spark, sfDir)
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-
-        val updates = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir)
-          .withWatermark("ts", "1 hour")
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new LatestWinsTtlProcessor,
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Update())
-
-        val q = updates.writeStream
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[TtlRow], _: Long) =>
-            batch.write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.awaitTermination()
-
-        cleanupCkpt(spark, Paths.get(ckptDir))
-
-        // same final reduce as streamStateTtl: max (ts, event_id) per
-        // key, eviction rows winning their tie (the later lifecycle event)
-        val w = Window.partitionBy($"user_id")
-          .orderBy($"last_ts_us".desc, $"last_event_id".desc, $"expired".desc)
-        spark.read.parquet(outDir)
-          .withColumn("rn", row_number().over(w))
-          .filter($"rn" === 1)
-          .select($"user_id", $"last_event_id", $"last_event_type",
-            round($"last_value", 4).as("last_value"), $"last_ts_us", $"expired")
-          .orderBy($"user_id")
-      })
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDb) { _ =>
+      import spark.implicits._
+      Query(eventsByUser(spark, sfDir).transformWithState(new LatestWinsTtlProcessor,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update()),
+        "update", Sink.Append)
+    } { run => finalTtlRows(spark.read.parquet(run.out)) }
 
   case class TopEntry(event_id: Long, value: Double)
   case class TopkRow(user_id: Long, upd: Long, rank: Int, event_id: Long, value: Double)
@@ -1196,46 +908,19 @@ object StreamingLatest {
     * top-3 over the same log; a hash match proves incremental list
     * maintenance equals the global rank. */
   def streamTwsTopk(spark: SparkSession, sfDir: String): DataFrame =
-    withRocksDb(spark)(
-      withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-        import spark.implicits._
-        val runDir  = jvmTmpDir("runtwstopk")
-        val inDir   = stagedEventLog(spark, sfDir)
-        val outDir  = s"$runDir/out"
-        val ckptDir = s"$runDir/ckpt"
-        val schema = graft.Tables.events(spark, sfDir)
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-
-        val updates = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir)
-          .withWatermark("ts", "1 hour")
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new TopKListProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-
-        val q = updates.writeStream
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[TopkRow], _: Long) =>
-            batch.write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.awaitTermination()
-
-        cleanupCkpt(spark, Paths.get(ckptDir))
-
-        spark.read.parquet(outDir)
-          .withColumn("mx", max($"upd").over(Window.partitionBy($"user_id")))
-          .filter($"upd" === $"mx")
-          .select($"user_id", $"rank", $"event_id",
-            round($"value", 4).as("value"))
-          .orderBy($"user_id", $"rank")
-      } })
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDb) { _ =>
+      import spark.implicits._
+      Query(eventsByUser(spark, sfDir).transformWithState(new TopKListProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
+        "update", Sink.Append)
+    } { run =>
+      spark.read.parquet(run.out)
+        .withColumn("mx", max(col("upd")).over(Window.partitionBy(col("user_id"))))
+        .filter(col("upd") === col("mx"))
+        .select(col("user_id"), col("rank"), col("event_id"),
+          round(col("value"), 4).as("value"))
+        .orderBy(col("user_id"), col("rank"))
+    }
 
   case class TypeCountRow(user_id: Long, event_type: String, n_events: Long)
 
@@ -1275,109 +960,19 @@ object StreamingLatest {
     * the state-API-v2 slot matrix: ValueState (latest/TTL), timers
     * (eviction), ListState (top-k), MapState (keyed counters). */
   def streamTwsCounts(spark: SparkSession, sfDir: String): DataFrame =
-    withRocksDb(spark)(
-      withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-        import spark.implicits._
-        val runDir  = jvmTmpDir("runtwscnt")
-        val inDir   = stagedEventLog(spark, sfDir)
-        val outDir  = s"$runDir/out"
-        val ckptDir = s"$runDir/ckpt"
-        val schema = graft.Tables.events(spark, sfDir)
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDb) { _ =>
+      import spark.implicits._
+      Query(eventsByUser(spark, sfDir).transformWithState(new TypeCountsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
+        "update", Sink.Append)
+    } { run =>
+      spark.read.parquet(run.out)
+        .groupBy(col("user_id"), col("event_type"))
+        .agg(max(col("n_events")).as("n_events"))
+        .orderBy(col("user_id"), col("event_type"))
+    }
 
-        val updates = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir)
-          .withWatermark("ts", "1 hour")
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new TypeCountsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-
-        val q = updates.writeStream
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[TypeCountRow], _: Long) =>
-            batch.write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.awaitTermination()
-
-        cleanupCkpt(spark, Paths.get(ckptDir))
-
-        spark.read.parquet(outDir)
-          .groupBy($"user_id", $"event_type")
-          .agg(max($"n_events").as("n_events"))
-          .orderBy($"user_id", $"event_type")
-      } })
-
-  def streamStateful(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val inDir = stagedEventLog(spark, sfDir)
-
-    // The staged log replays in event-time order, split so
-    // maxFilesPerTrigger=1 exercises incremental multi-batch state
-    // updates — the ordering contract a CDC log/Kafka topic gives the
-    // connector (reference: offset-ordered partition 0,
-    // rpk_topic_consume.json). That makes the watermark safe to honor
-    // strictly, which is what lets the streaming result share the batch
-    // latest-state oracle.
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-
-    val source = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    latestWinsOver(spark, source)
-  } }
-
-  /** The latest-wins pipeline body, source-agnostic: `source` is any
-    * STREAMING DataFrame carrying the event columns — the staged file
-    * log above (the gate/bench path) or a real Kafka topic
-    * ([[KafkaWire.latestState]]). Everything downstream of the source —
-    * watermark, keyed flatMapGroupsWithState, foreachBatch append sink,
-    * checkpoint lifecycle, final per-key reduce — is THIS one method, so
-    * the two paths cannot drift. */
-  private[cdc] def latestWinsOver(spark: SparkSession, source: DataFrame): DataFrame = {
-    import spark.implicits._
-    val runDir  = jvmTmpDir("run")
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-
-    val updates = source
-      .withWatermark("ts", "1 hour")
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateKey)
-
-    val q = updates.writeStream
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[LatestRow], _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    // the returned DataFrame reads only outDir; drop the checkpoint so
-    // repeated runs don't accumulate temp state (the staged log is shared)
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    // Multiple micro-batches append successive per-key snapshots; reduce to
-    // the final one per key (same (ts_us, event_id) order as the state fn).
-    val w = Window.partitionBy($"user_id").orderBy($"last_ts_us".desc, $"last_event_id".desc)
-    spark.read.parquet(outDir)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .select($"user_id", $"last_event_id", $"last_event_type",
-        round($"last_value", 4).as("last_value"), $"last_ts_us")
-      .orderBy($"user_id")
-  }
+  // ── sinks that maintain or inspect state outside the query ─────────
 
   /** `cdc_stream_foreachbatch`: the CDC → lakehouse MERGE sink — the
     * deployment shape the reference pipeline feeds (topic consumer
@@ -1397,27 +992,12 @@ object StreamingLatest {
     * the batch full-log rebuild, so the query shares
     * `cdc_latest_state_del`'s oracle SQL — the gate proves N-batch
     * incremental MERGE ≡ one-shot materialization through DuckDB. */
-  def streamForeachBatchMerge(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val inDir   = stagedEventLog(spark, sfDir)
-    val runDir  = jvmTmpDir("fbm")
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-
+  def streamForeachBatchMerge(spark: SparkSession, sfDir: String): DataFrame = {
     // driver-side pointer to the current snapshot version; foreachBatch
     // bodies run sequentially on the driver, so a plain var is safe
     var snapDir: Option[String] = None
-
-    val source = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val q = source.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { run =>
+      Query(logStream(spark, sfDir, StagedCols), "append", Sink.Each { (batch, id) =>
         val rec = struct(unix_micros(col("ts")).as("last_ts_us"),
           col("event_id").as("last_event_id"),
           col("event_type").as("last_event_type"),
@@ -1436,24 +1016,21 @@ object StreamingLatest {
               .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
               .drop("rn")
         }
-        val next = s"$runDir/snap-$id"
+        val next = s"${run.dir}/snap-$id"
         merged.filter(Changelog.opCol(col("last_event_type")) =!= "d")
           .write.mode("overwrite").parquet(next)
         snapDir = Some(next)
-      }
-      .start()
-    q.awaitTermination()
-
-    val out = spark.read.parquet(snapDir.getOrElse(
-      sys.error("foreachBatch merge produced no snapshot")))
-      .select($"user_id", $"last_event_id", $"last_event_type",
-        round($"last_value", 4).as("last_value"))
-      .orderBy($"user_id")
-      // materialize before deleting the snapshot dirs the plan reads
-      .localCheckpoint(true)
-    cleanupCkpt(spark, runDir)
-    out
-  } }
+      })
+    } { _ =>
+      spark.read.parquet(snapDir.getOrElse(
+        sys.error("foreachBatch merge produced no snapshot")))
+        .select(col("user_id"), col("last_event_id"), col("last_event_type"),
+          round(col("last_value"), 4).as("last_value"))
+        .orderBy(col("user_id"))
+        // materialize before cleanup deletes the snapshot dirs the plan reads
+        .localCheckpoint(true)
+    }
+  }
 
   /** `cdc_state_reader`: the state-store BATCH READER (Spark 4.x
     * `spark.read.format("statestore")`) — operational state
@@ -1470,146 +1047,20 @@ object StreamingLatest {
     * columnar scan; no stream restart, no state export job.
     * (Reference analogue: inspecting the connector's committed offsets
     * + table state out-of-band, `connect-standalone.properties:5`.) */
-  def streamStateReader(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    val runDir  = jvmTmpDir("ssr")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val ckptDir = s"$runDir/ckpt"
-
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value").schema
-    val agg = spark.readStream.schema(schema).parquet(inDir)
-      .groupBy($"user_id")
-      .agg(count(lit(1)).as("n_events"),
-        sum($"value".cast("decimal(18,6)")).as("sum_value"))
-    val q = agg.writeStream
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .format("noop")
-      .start()
-    q.awaitTermination()
-
-    val out = spark.read.format("statestore").load(ckptDir)
-      .select($"key.user_id".as("user_id"),
-        $"value.count".as("n_events"),
-        round($"value.sum".cast("double"), 4).as("sum_value"))
-      .orderBy($"user_id")
-      // materialize BEFORE deleting the checkpoint the reader scans
-      .localCheckpoint(true)
-
-    cleanupCkpt(spark, runDir)
-    out
-  } }
-
-  /** `cdc_stream_union`: UNION of two live streams feeding ONE stateful
-    * aggregate — the fan-in topology (many CDC topics → one consumer)
-    * the reference's single-topic tutorial is the degenerate case of.
-    * Two independent file sources replay the same staged log with
-    * different predicates/projections (purchases keep their value,
-    * clicks ride a zero — the schema-alignment step any real fan-in
-    * needs), `unionByName` merges them BEFORE the watermark, so one
-    * watermark/state pipeline serves both sources; complete-mode hourly
-    * aggregate = the full answer. Scale: the union is a no-shuffle
-    * narrow op — each source's partitions feed the shared hash
-    * aggregate directly; state stays bounded by (window × type). */
-  def streamUnion(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) { withoutNoDataBatch(spark) {
-    import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
-    val runDir  = jvmTmpDir("runu")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"ts", $"event_type", $"value").schema
-
-    def src() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val purchases = src().filter($"event_type" === "purchase")
-      .select($"ts", $"event_type", $"value")
-    val clicks = src().filter($"event_type" === "click")
-      .select($"ts", $"event_type", lit(0.0).as("value"))
-
-    val agg = purchases.unionByName(clicks)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum($"value".cast(DecimalType(18, 6))).as("sum_dec"))
-
-    val q = agg.writeStream
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("overwrite").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    spark.read.parquet(outDir)
-      .select(
-        unix_millis($"w.start").as("bucket_ms"),
-        $"event_type", $"n_events",
-        round($"sum_dec".cast("double"), 4).as("sum_value"))
-      .orderBy($"bucket_ms", $"event_type")
-  } }
-
-  /** `cdc_stream_windowed_append`: the tumbling aggregate in APPEND
-    * mode — each window row is emitted exactly ONCE, when the watermark
-    * finalizes it, and never revised. Complete mode
-    * (`cdc_stream_windowed`) re-emits the whole result every batch —
-    * fine for a small dashboard sink; append is the mode a downstream
-    * TABLE needs (immutable window rows, incremental consumption), and
-    * its state is evicted at emission instead of held forever, which is
-    * what bounds state at 100 TB. The no-data micro-batch is REQUIRED
-    * here (unlike the complete-mode queries): emission happens on
-    * watermark advance, so the final watermark-only batch is what
-    * flushes the last closed windows. Output pinned to the finalized
-    * horizon H = max(ts) − 1 h (strictly-below filter on BOTH engines,
-    * the `streamSessionize` oracle trick) so the emitted set is
-    * deterministic and closed-form. */
-  def streamWindowedAppend(spark: SparkSession, sfDir: String): DataFrame = withStatePartitions(spark, stateParts(spark, sfDir)) {
-    import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
-    val runDir = jvmTmpDir("runwa")
-    val inDir   = stagedEventLog(spark, sfDir)
-    val outDir  = s"$runDir/out"
-    val ckptDir = s"$runDir/ckpt"
-    val schema = graft.Tables.events(spark, sfDir)
-      .select($"ts", $"event_type", $"value").schema
-
-    val agg = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum($"value".cast(DecimalType(18, 6))).as("sum_dec"))
-
-    val q = agg.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-
-    cleanupCkpt(spark, Paths.get(ckptDir))
-
-    // horizon scalar from the staging aggregate's memo (see maxEventUs)
-    val horizonUs = maxEventUs(spark, sfDir) - 3600L * 1000000L
-
-    spark.read.parquet(outDir)
-      .filter(unix_micros($"w.end") < horizonUs)
-      .select(
-        unix_millis($"w.start").as("bucket_ms"),
-        $"event_type", $"n_events",
-        round($"sum_dec".cast("double"), 4).as("sum_value"))
-      .orderBy($"bucket_ms", $"event_type")
-  }
+  def streamStateReader(spark: SparkSession, sfDir: String): DataFrame =
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      Query(logStream(spark, sfDir, StagedCols, maxFilesPerTrigger = None)
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,6)")).as("sum_value")),
+        "update", Sink.Discard)
+    } { run =>
+      spark.read.format("statestore").load(run.ckpt)
+        .select(col("key.user_id").as("user_id"),
+          col("value.count").as("n_events"),
+          round(col("value.sum").cast("double"), 4).as("sum_value"))
+        .orderBy(col("user_id"))
+        // materialize BEFORE cleanup deletes the checkpoint the reader scans
+        .localCheckpoint(true)
+    }
 }

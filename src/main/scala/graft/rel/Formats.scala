@@ -312,16 +312,11 @@ object Formats {
   private[graft] def dynamicOverwriteO(spark: SparkSession, sfDir: String,
       dir: String): Unit = {
     import spark.implicits._
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try Tables.orders(spark, sfDir)
-      .filter($"o_orderstatus" === "O")
-      .withColumn("o_totalprice", $"o_totalprice" * 2.0)
-      .write.partitionBy("o_orderstatus").mode("overwrite").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    graft.Tuning.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      Tables.orders(spark, sfDir)
+        .filter($"o_orderstatus" === "O")
+        .withColumn("o_totalprice", $"o_totalprice" * 2.0)
+        .write.partitionBy("o_orderstatus").mode("overwrite").parquet(dir)
     }
   }
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * truth. This is the in-suite twin of the `DevStress containment`
   * equality assertion, which only runs on salted replicas out-of-suite.
   *
-  * (3) `DevScale.srcSig` must key replica memo stamps on the part files
+  * (3) `StageDirs.srcSig` must key replica memo stamps on the part files
   * INSIDE a fixture directory, not the directory inode's mtime (r17
   * advisor low): a file rewritten without touching the directory entry
   * must still invalidate the stamp. */
@@ -192,19 +192,19 @@ class Round18OpsSpec extends AnyFunSuite {
     try {
       val part = new java.io.File(dir, "part-00000")
       java.nio.file.Files.write(part.toPath, "aaaa".getBytes("UTF-8"))
-      val sig1 = DevScale.srcSig(dir.getPath)
+      val sig1 = StageDirs.srcSig(dir.getPath)
       // the directory's own mtime moving must NOT move the signature
       assert(dir.setLastModified(dir.lastModified() - 60000))
-      assert(DevScale.srcSig(dir.getPath) == sig1)
+      assert(StageDirs.srcSig(dir.getPath) == sig1)
       // a part file rewritten to different content (length) MUST move it,
       // even with the directory entry untouched
       java.nio.file.Files.write(part.toPath, "bbbbbbbb".getBytes("UTF-8"))
-      assert(DevScale.srcSig(dir.getPath) != sig1)
+      assert(StageDirs.srcSig(dir.getPath) != sig1)
       // and so must a new part file appearing
-      val sig2 = DevScale.srcSig(dir.getPath)
+      val sig2 = StageDirs.srcSig(dir.getPath)
       java.nio.file.Files.write(new java.io.File(dir, "part-00001").toPath,
         "cc".getBytes("UTF-8"))
-      assert(DevScale.srcSig(dir.getPath) != sig2)
+      assert(StageDirs.srcSig(dir.getPath) != sig2)
     } finally {
       Option(dir.listFiles()).foreach(_.foreach(_.delete())); dir.delete(); ()
     }

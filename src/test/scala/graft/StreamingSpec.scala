@@ -56,12 +56,10 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint resume (R18): restart picks up only new files, final state correct") {
     val s = spark
     import s.implicits._
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.{OutputMode, GroupStateTimeout, Trigger}
 
-    val runDir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/stream-tmp")), "resume")
+    val runDir = StageDirs.fresh(StageDirs.streamRoot, "resume")
     val inDir = s"$runDir/in"; val outDir = s"$runDir/out"; val ckpt = s"$runDir/ckpt"
 
     val ev = Tables.events(spark, sf)
@@ -126,8 +124,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.{OutputMode, GroupStateTimeout, Trigger}
 
-    val runDir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/stream-tmp")), "pinned")
+    val runDir = StageDirs.fresh(StageDirs.streamRoot, "pinned")
     val inDir = s"$runDir/in"; val outDir = s"$runDir/out"
 
     val ev = Tables.events(spark, sf)
@@ -195,6 +192,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(statePartitionDirs(ckptB) == 9,
       "a fresh checkpoint must adopt the newly derived count")
     assert(latestFrom(outB) == Changelog.latestState(spark, sf).collect().toSeq)
+  }
+
+  test("a replay whose sink throws still deletes its checkpoint and leaves no active query") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.col
+    import StreamingLatest.{Query, Sink, StateLayout}
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val providerBefore = spark.conf.getOption(provider)
+    var ckpt: String = null
+    val err = intercept[Exception] {
+      StreamingLatest.replay(spark, 4, keepNoDataBatch = false, StateLayout.RocksDb) { run =>
+        ckpt = run.ckpt
+        val counts = spark.readStream
+          .schema(Tables.events(spark, sf).select(col("user_id")).schema)
+          .parquet(StreamingLatest.stagedEventLog(spark, sf))
+          .groupBy(col("user_id")).count()
+        // run the stateful batch first so the RocksDB stores are loaded
+        Query(counts, "update", Sink.Each { (b, _) => b.collect(); sys.error("sink failed") })
+      } { run => spark.read.parquet(run.out) }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("sink failed"))),
+      s"the sink's exception must reach the caller, got $err")
+    assert(ckpt != null && !Files.exists(Paths.get(ckpt)),
+      "a failed replay must still delete its checkpoint")
+    assert(spark.streams.active.isEmpty, "a failed replay must leave no active query")
+    assert(spark.conf.getOption(provider) == providerBefore,
+      "the replay's state layout must not outlive it")
   }
 
   test("cdc_state_reader: persisted streaming-agg state equals the batch aggregate") {
