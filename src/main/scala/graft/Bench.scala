@@ -34,8 +34,7 @@ object Bench {
       // spill the moment data outgrows the fixture (q21 at 100×: slope
       // 13.8 pinned at 32 partitions vs 3.9 once partitions scale).
       // shuffle.partitions above stays as the non-AQE fallback.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", "256"))
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
       // r21 measured default flip: parallelismFirst=false makes AQE
       // coalesce to the advisory partition size instead of
       // 1 MB-per-core minimums. Two order-rotated full-bench pairs both
@@ -43,11 +42,8 @@ object Bench {
       // (OPTIMIZATION_r21.md), and advisory-size partitions are the
       // production posture for data that outgrows the fixture (the
       // mini-partition flood is the §2.2 shuffle-block explosion).
-      // Env-overridable for A/B reproduction of the old regime.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64MB"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       // back-compat for the legacy ns-precision events fixture; the

@@ -422,15 +422,11 @@ object DevScale {
     // config is the config a cluster would ship — this removes the
     // 32p-vs-256p dual-column bookkeeping that r16 needed (q21 read
     // slope 13.8 pinned at 32 partitions / per-reducer spill vs 3.9 at
-    // 256; salted-100× containment 153 vs 54). SPARK_GRAFT_SHUFFLE=<n>
-    // reproduces the old pinned-partition regimes for A/B against the
-    // recorded tables (it pins BOTH knobs, disabling the headroom).
-    val pinned = sys.env.get("SPARK_GRAFT_SHUFFLE")
+    // 256; salted-100× containment 153 vs 54).
     val spark = SparkSession.builder()
       .master("local[32]")
-      .config("spark.sql.shuffle.partitions", pinned.getOrElse("32"))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        pinned.getOrElse("1024"))
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -68,13 +68,8 @@ object DevStress {
       graph(args.lift(1).map(_.toInt).getOrElse(60000),
         args.lift(2).getOrElse("bfs"))
     case Some("scd2")  => scd2(args.lift(1).getOrElse("/root/repo/target/scale10"))
-    case Some("containment") =>
-      containment(args.lift(1).getOrElse("/root/repo/target/scale100salt"))
-    case Some("containmentpair") =>
-      containmentPair(args.lift(1).getOrElse("/root/repo/target/scale100salt"))
     case Some("streamvol") =>
       val rest = args.drop(1).toSeq
-      val pin = rest.collectFirst { case s if s.startsWith("pin:") => s.drop(4).toInt }
       val family = if (rest.contains("join")) "join" else "state"
       // provider passes: default HDFS-only; `rocksdb` adds a same-session
       // RocksDB pass per dir; `rocksonly` runs ONLY RocksDB — the
@@ -85,20 +80,19 @@ object DevStress {
         if (rest.contains("rocksonly")) Seq("rocksdb")
         else if (rest.contains("rocksdb")) Seq("hdfs", "rocksdb")
         else Seq("hdfs")
-      val flags = Set("join", "rocksdb", "rocksonly", "rev", "sync", "pinfirst")
-      val dirs = rest.filterNot(s => s.startsWith("pin:") || flags(s))
+      val flags = Set("join", "rocksdb", "rocksonly", "rev", "sync")
+      val dirs = rest.filterNot(flags)
       streamvol(if (dirs.nonEmpty) dirs
         else Seq(Base, "/root/repo/target/scale10", "/root/repo/target/scale100"),
-        pin, family, providers, rev = rest.contains("rev"),
-        syncAfterStage = rest.contains("sync"),
-        pinFirst = rest.contains("pinfirst"))
+        family, providers, rev = rest.contains("rev"),
+        syncAfterStage = rest.contains("sync"))
     case Some("phash") =>
       phash(if (args.length > 1) args.drop(1).toSeq
         else Seq(Base, "/root/repo/target/scale10ph", "/root/repo/target/scale100ph"))
     case _ => System.err.println(
       "usage: DevStress skew [srcDir] | graph [nEdges] [bfs|lpa|pagerank] | " +
-        "scd2 [replicaDir] | containment [saltedDocsDir] | " +
-        "streamvol [pin:<n>] [join] [rocksdb|rocksonly] [rev] [sync] [pinfirst] [dir ...] | " +
+        "scd2 [replicaDir] | " +
+        "streamvol [join] [rocksdb|rocksonly] [rev] [sync] [dir ...] | " +
         "phash [dir ...]")
   }
 
@@ -293,98 +287,6 @@ object DevStress {
       .orderBy($"purchase_event_id")
   }
 
-  // ── dedup_containment length-bucket A/B (r17 verdict item 6) ───────
-  // Expects the token-salted documents replica (DevScale <m> saltdocs —
-  // the only fixture where the true containment pair set grows linearly;
-  // see graft-scale-evidence). Asserts the bucketed form is bit-identical
-  // before timing both.
-  private def containment(dir: String): Unit = {
-    val spark = session()
-    require(new java.io.File(s"$dir/documents.parquet").exists(),
-      s"$dir has no documents.parquet — run `DevScale <m> saltdocs` first")
-    spark.read.parquet(s"$dir/documents.parquet").count() // warm listings
-    val flat = graft.llm.TextOps.dedupContainment(spark, dir, lengthBucketed = false)
-    val bucketed = graft.llm.TextOps.dedupContainment(spark, dir, lengthBucketed = true)
-    val dfPref = graft.llm.TextOps.dedupContainment(spark, dir,
-      lengthBucketed = true, dfOrderedPrefix = true)
-    val dfSemi = graft.llm.TextOps.dedupContainment(spark, dir,
-      lengthBucketed = true, dfOrderedPrefix = true, bloomPrefilterB = true)
-    // order-insensitive whole-output comparison via Golden.hash, not
-    // exceptAll: the two forms share the checkpointed `sets` lineage and
-    // exceptAll's replication rewrite trips ATTRIBUTE_NOT_FOUND on the
-    // shared window/aggregate attributes (hit live at salted-100×)
-    require(Golden.hash(flat) == Golden.hash(bucketed),
-      "length-bucketed containment diverged from the flat form")
-    require(Golden.hash(flat) == Golden.hash(dfPref),
-      "df-ordered-prefix containment diverged from the flat form")
-    require(Golden.hash(flat) == Golden.hash(dfSemi),
-      "semi-prefiltered containment diverged from the flat form")
-    println(f"${"form"}%-28s ${"sec"}%8s ${"pairs"}%10s")
-    Seq(("flat posting join", false, false, false),
-        ("length-bucketed join", true, false, false),
-        ("bucketed + df prefix", true, true, false),
-        ("df prefix + B semi", true, true, true))
-      .foreach { case (name, lb, dfp, bl) =>
-        val (t, rows) = timeIt(
-          graft.llm.TextOps.dedupContainment(spark, dir,
-            lengthBucketed = lb, dfOrderedPrefix = dfp,
-            bloomPrefilterB = bl).count())
-        println(f"$name%-28s $t%8.3f $rows%10d")
-      }
-    spark.stop()
-  }
-
-  /** Focused alternating pairing of the two containment front-runners
-    * (shipped df-prefix vs the semi-prefiltered B side) — hash equality
-    * is already proven by [[containment]]; this skips the four
-    * Golden.hash passes and interleaves the forms (dfp, semi, dfp,
-    * semi, each warmed) so monotone box drift penalizes both equally.
-    * The repo's A/B discipline: same-session interleaved pairs decide,
-    * absolutes wobble. */
-  private def containmentPair(dir: String): Unit = {
-    val spark = session()
-    require(new java.io.File(s"$dir/documents.parquet").exists(),
-      s"$dir has no documents.parquet — run `DevScale <m> saltdocs` first")
-    spark.read.parquet(s"$dir/documents.parquet").count() // warm listings
-    // first-principles sizing: how many B postings does the prefix-token
-    // semi actually drop before the (tok, g) exchange? (decides whether
-    // the prefilter CAN win at any scale, independent of box noise) —
-    // replicates the operator's shingling + df-ordered prefix selection
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val tauLo = 0.8 - 5e-5
-      val sets = spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), graft.functions.ShingleFunctions
-          .word_shingle_hashes(col("text"), graft.llm.MinHash.ShingleSize,
-            sorted = true).as("toks"))
-        .select(col("doc_id"), col("toks"), size(col("toks")).as("n"))
-        .localCheckpoint()
-      val aAll = sets.select(col("doc_id"), col("n"), explode(col("toks")).as("tok"))
-      val dfTab = aAll.groupBy(col("tok")).agg(count(lit(1)).as("tok_df"))
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("tok_df"), col("tok"))
-      val prefixToks = aAll.join(dfTab, "tok")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= col("n") - ceil(col("n") * lit(tauLo)) + 1)
-        .select(col("tok")).distinct()
-      val nAll = aAll.count()
-      val nKept = aAll.join(broadcast(prefixToks), Seq("tok"), "left_semi").count()
-      println(f"[pair] B postings total=$nAll%d surviving-semi=$nKept%d " +
-        f"(drop=${100.0 * (nAll - nKept) / math.max(nAll, 1)}%.1f%%)")
-    }
-    println(f"${"form"}%-28s ${"sec"}%8s ${"pairs"}%10s")
-    Seq(("bucketed + df prefix", false), ("df prefix + B semi", true),
-        ("bucketed + df prefix", false), ("df prefix + B semi", true))
-      .foreach { case (name, bl) =>
-        val (t, rows) = timeIt(
-          graft.llm.TextOps.dedupContainment(spark, dir,
-            lengthBucketed = true, dfOrderedPrefix = true,
-            bloomPrefilterB = bl).count())
-        println(f"$name%-28s $t%8.3f $rows%10d")
-      }
-    spark.stop()
-  }
-
   // ── streaming state-volume slopes (r18: derived state partitions) ──
   // The streaming scale story had two measured axes (per-key depth via
   // the batch twins; the lifecycle-floor profile) but the micro-batch
@@ -398,14 +300,9 @@ object DevStress {
   // `withStatePartitions` count (Tuning.statePartitions, floor 4,
   // engaged above 8M events) exists for. Timing includes the one-time
   // staging write (memoized per dir) — quoted separately via a pre-pass.
-  // `pin` runs each dir a SECOND time with the count pinned (via the
-  // graft.statePartitions system property) in the SAME session, sharing
-  // the staged files and the warm JVM — the same-session derived-vs-
-  // pinned pairing the repo's A/B discipline asks for.
-  private def streamvol(dirs: Seq[String], pin: Option[Int] = None,
+  private def streamvol(dirs: Seq[String],
       family: String = "state", providers: Seq[String] = Seq("hdfs"),
-      rev: Boolean = false,
-      syncAfterStage: Boolean = false, pinFirst: Boolean = false): Unit = {
+      rev: Boolean = false, syncAfterStage: Boolean = false): Unit = {
     val spark = session()
     // `join` drives the stream-stream interval-join family instead of
     // the three state shapes — the one streaming state axis r18 left
@@ -447,17 +344,7 @@ object DevStress {
     val RocksProvider =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     println(f"${"dir"}%-14s ${"query"}%-24s ${"sec"}%8s ${"rows"}%10s ${"state_parts"}%12s ${"provider"}%8s")
-    // `pinfirst` rotates the PASS order (pinned before derived): the
-    // pinned pass otherwise always runs second in a warm session, so a
-    // derived-vs-pinned verdict needs both orders (the same confound
-    // `rev` exists for within a pass — r22 state-partition-floor A/B)
-    val pinPasses0 = Seq(None) ++ pin.map(Some(_))
-    val pinPasses = if (pinFirst) pinPasses0.reverse else pinPasses0
-    for (dir <- dirs; pinned <- pinPasses; provider <- providers) {
-      pinned match {
-        case Some(n) => sys.props("graft.statePartitions") = n.toString
-        case None    => sys.props -= "graft.statePartitions"
-      }
+    for (dir <- dirs; provider <- providers) {
       if (provider == "rocksdb") spark.conf.set(ProviderKey, RocksProvider)
       else spark.conf.unset(ProviderKey)
       require(new java.io.File(s"$dir/events.parquet").exists(),
@@ -491,9 +378,6 @@ object DevStress {
         println(f"${new java.io.File(dir).getName}%-14s $name%-24s $t%8.3f $rows%10d $parts%12d $provider%8s")
       }
     }
-    // symmetric cleanup (r20 advisor): a trailing pin:<n> pass must not
-    // leave the pinned state-partition override set past the loop
-    sys.props -= "graft.statePartitions"
     spark.conf.unset(ProviderKey)
     spark.stop()
   }

@@ -101,27 +101,11 @@ object Tuning {
     * [[roundPartitions]]. A streaming query's `spark.sql.shuffle
     * .partitions` at FIRST start is pinned into the checkpoint as the
     * state-store partition count for the query's whole lifetime (every
-    * restart reuses it), so a fixture literal here is strictly worse
-    * than the batch-round one the r17 verdict killed: a 100 TB replay
-    * checkpointed at 4 would push every trigger's state shuffle through
-    * four reducers FOREVER, with no AQE and no re-plan to save it.
-    * Derived from the replayed event count with the same
-    * rows-per-reducer constant as the batch rounds; every test fixture
-    * lands on the floor of 4 (checkpoints, state layouts and timings
-    * unchanged at gate scale). `SPARK_GRAFT_STATE_PARTITIONS` overrides
-    * for A/B reproduction of a pinned regime; the `graft.statePartitions`
-    * system property does the same WITHIN a JVM so `DevStress streamvol`
-    * can pair derived-vs-pinned in one session (the repo's A/B
-    * discipline: same-session pairings decide, absolutes wobble). */
-  def statePartitions(eventRows: Long): Int =
-    sys.props.get("graft.statePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
-      .map { s =>
-        val n = scala.util.Try(s.trim.toInt)
-        require(n.isSuccess && n.get > 0,
-          s"state-partition override must be a positive integer, got '$s' " +
-            "(graft.statePartitions sys-prop / SPARK_GRAFT_STATE_PARTITIONS env)")
-        n.get
-      }
-      .getOrElse(roundPartitions(eventRows))
+    * restart reuses it), so a fixture literal here would push every
+    * trigger's state shuffle of a large replay through a handful of
+    * reducers forever, with no AQE and no re-plan to save it. Derived
+    * from the replayed event count with the same rows-per-reducer
+    * constant as the batch rounds; every test fixture lands on the
+    * floor of 4. The derived-vs-pinned A/B is in SCALE.md r18. */
+  def statePartitions(eventRows: Long): Int = roundPartitions(eventRows)
 }

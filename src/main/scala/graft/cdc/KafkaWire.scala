@@ -137,9 +137,7 @@ object KafkaWire {
     * or the twin's fixture size): the state-partition count is DERIVED
     * from it via [[graft.Tuning.statePartitions]] exactly like the
     * staged-file queries — a launch literal here would checkpoint-pin
-    * the count forever on a real topic replay, the one failure mode the
-    * derivation exists to prevent (the env/sys-prop override in
-    * `Tuning.statePartitions` still applies for A/B reproduction). */
+    * the count forever on a real topic replay. */
   private[graft] def latestStateOver(spark: SparkSession, events: DataFrame,
       eventRows: Long): DataFrame =
     StreamingLatest.latestWinsOver(spark, events,

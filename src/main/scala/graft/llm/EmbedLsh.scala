@@ -83,41 +83,13 @@ object EmbedLsh {
       .orderBy($"vec_a", $"vec_b")
   }
 
-  /** Multi-probe radius for [[simAnnLsh]] — probe-side only, so raising
-    * it costs NOTHING at index time or in the banded shuffle (the fan-out
-    * is a broadcast of (1 + 6 + [15]) × 12 = 84 or 264 rows). Radius 1
-    * (exact bucket + every Hamming-1 sign flip) is the shipped default,
-    * golden-pinned at the gate scales; radius 2 adds the Hamming-2 pair
-    * flips — the knob a CLUSTERED corpus grows first (r20: the 100×
-    * mixture fixture cost LSH its only measured recall loss, 9/10, while
-    * IVF/PQ held 10/10; see SCALE.md r20 for what radius 2 recovers).
-    * Dual-read escape (`graft.lshProbeRadius` sys-prop within a JVM /
-    * `SPARK_GRAFT_LSH_PROBE_RADIUS` env) — the Tuning.statePartitions
-    * idiom, so DevRecall can pair radii in one session. */
-  private[graft] def probeRadius: Int =
-    sys.props.get("graft.lshProbeRadius")
-      .orElse(sys.env.get("SPARK_GRAFT_LSH_PROBE_RADIUS"))
-      .map { s =>
-        val n = scala.util.Try(s.trim.toInt)
-        require(n.isSuccess && n.get >= 1 && n.get <= 2,
-          s"LSH probe radius must be 1 or 2, got '$s' " +
-            "(graft.lshProbeRadius sys-prop / SPARK_GRAFT_LSH_PROBE_RADIUS env)")
-        n.get
-      }
-      .getOrElse(1)
-
-  /** The XOR masks the probe fans out over: Hamming-0 (exact bucket),
-    * all Hamming-1 single-bit flips, and — at radius 2 — all Hamming-2
-    * pair flips. */
-  private[graft] def probeMasks: Seq[Int] = {
-    val singles = (0 until BitsPerTable).map(b => 1 << b)
-    val base = 0 +: singles
-    if (probeRadius < 2) base
-    else base ++ (for {
-      a <- 0 until BitsPerTable
-      b <- a + 1 until BitsPerTable
-    } yield (1 << a) | (1 << b))
-  }
+  /** The XOR masks the [[simAnnLsh]] probe fans out over: the exact
+    * bucket plus every Hamming-1 single-bit flip. Probe-side only, so the
+    * fan-out costs nothing at index time or in the banded shuffle (a
+    * broadcast of (1 + 6) × 12 = 84 rows). Radius 1 is golden-pinned at
+    * the gate scales; what radius 2 recovers on a clustered corpus is
+    * recorded in SCALE.md r20. */
+  private[graft] val probeMasks: Seq[Int] = 0 +: (0 until BitsPerTable).map(b => 1 << b)
 
   /** `sim_ann_lsh`: approximate top-10 neighbours of probe vec_id=0 —
     * candidates share at least one LSH bucket with the probe, ranked by

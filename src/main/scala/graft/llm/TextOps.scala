@@ -320,8 +320,6 @@ object TextOps {
         converged = prevSum.contains(sumNow)
         prevSum = Some(sumNow)
         i += 1
-        if (sys.env.contains("GRAFT_DEV_STREAMPROFILE"))
-          println(s"[ccprofile] iter=$i sum=$sumNow")
       }
       if (!converged)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1078,45 +1076,25 @@ object TextOps {
     * [[ngramJaccard]] (sorted shingle-hash sets, codegen merge-scan
     * verify), with the containment variant of the prefix filter: the
     * required overlap ⌈τ·|A|⌉ depends only on the CONTAINED side, so
-    * A joins through its (|A| − ⌈τ·|A|⌉ + 1)-element prefix while B
+    * A joins through an (|A| − ⌈τ·|A|⌉ + 1)-element prefix while B
     * must index every shingle (no size-symmetric bound exists — that
-    * asymmetry is the price of the asymmetric predicate); the
-    * first-common-token positional bound min(|A|−pa, |B|−pb) ≥ τ·|A|
-    * and the |B| ≥ τ·|A| size gate prune before the verify join.
-    * Output: directed (contained, container, containment) pairs.
+    * asymmetry is the price of the asymmetric predicate).
     *
-    * `lengthBucketed` moves the |B| ≥ τ·|A| size gate INTO the posting
-    * join key (the r17-verdict candidate lever): every B posting carries
-    * its doc's base-4 length bucket g(|B|) = ⌊log₄|B|⌋ (computed with
-    * integer bit-length arithmetic, `(length(bin(n))−1) div 2` — no
-    * float-rounding edge at exact powers), and each A prefix posting is
-    * replicated across the buckets [g(⌈τ·|A|⌉), g(max |n|)] that can
-    * still satisfy the gate, so too-short containers are never FORMED as
-    * candidates instead of formed-then-filtered. Buckets strictly below
-    * g(⌈τ·|A|⌉) hold only nb < ⌈τ·|A|⌉ ≤ alpha-rejects, so the bucketed
-    * candidate set equals the unbucketed one minus rows the size filter
-    * discarded anyway — bit-identical output (DevStress `containment`
-    * asserts it while timing the A/B). Default ON: measured 26.2 s vs
-    * the flat join's 43.9 s at salted-100× (the suite's worst 100×
-    * slope, 25.0 in r17 — this was the one lever that survived the
-    * accept/revert discipline after r17's dropDuplicates negative;
-    * SCALE.md r18).
-    *
-    * `dfOrderedPrefix` (default ON since r19) swaps the probe prefix
-    * for the AllPairs/PPJoin document-frequency order — the prefixLen
-    * RAREST tokens — so probes walk the SHORTEST posting lists. Won
-    * every same-session pairing at the default-heap regime (27.8 /
-    * 25.9 / 27.1 s at salted-100× vs bucketed 29.9 / 38.1 / 40.4 and
-    * flat 31.8 / 73.5 / 39.0) with far LOWER variance than either
-    * rival — the rare-token candidate set is small enough to stop
-    * tracking heap churn — at ~0.1 s extra at fixture scale (the df
-    * aggregate + per-doc top-k). The r19 A/Bs also exposed that the
-    * r18 flat-vs-bucketed ordering is HEAP-REGIME-DEPENDENT (48 g
-    * reverses it); the df form dominated in both regimes' majorities.
-    * Full record in SCALE.md r19. */
-  def dedupContainment(spark: SparkSession, sfDir: String, threshold: Double = 0.8,
-      lengthBucketed: Boolean = true, dfOrderedPrefix: Boolean = true,
-      bloomPrefilterB: Boolean = false): DataFrame = {
+    * Three pruning steps run before the verify join:
+    *  - the probe prefix is A's RAREST tokens (the AllPairs/PPJoin
+    *    document-frequency order), so probes walk the shortest posting
+    *    lists;
+    *  - the |B| ≥ τ·|A| size gate sits INSIDE the posting join key: each
+    *    B posting carries its doc's base-4 length bucket g(|B|) = ⌊log₄|B|⌋
+    *    and each A posting is replicated across the buckets that can
+    *    still pass the gate, so too-short containers are never formed;
+    *  - the A-side positional bound |A| − rank ≥ τ·|A| for the first
+    *    common token in df order.
+    * Output: directed (contained, container, containment) pairs. The
+    * flat, hash-order-prefix and broadcast-prefilter forms this plan beat
+    * are measured in SCALE.md r18–r20 and
+    * `plans/r22/dedup_containment_prefilter_ab.txt`. */
+  def dedupContainment(spark: SparkSession, sfDir: String, threshold: Double = 0.8): DataFrame = {
     import spark.implicits._
     val sets = Tables.documents(spark, sfDir)
       .select($"doc_id",
@@ -1131,115 +1109,50 @@ object TextOps {
     // bound by that half-ulp (plus a float guard) so the filters are a
     // superset of the accepts at any |A|
     val tauLo = threshold - 5e-5
-    val prefixLen = ($"n" - ceil($"n" * lit(tauLo)) + 1).cast("int")
     // ⌊log₄ n⌋ via bit length — exact integer arithmetic (a float log at
     // n = 4^k could round across the bucket edge and silently prune a
     // legitimate pair)
     def g4(n: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       floor((length(bin(n)) - 1) / 2.0).cast("int")
     // Probe prefix: the filter is correct for ANY (na − ⌈τ·na⌉ + 1)-sized
-    // subset of A's tokens (if none of them hits B, at most
-    // na − prefixLen = ⌈τ·na⌉ − 1 < τ·na tokens can overlap), so the
-    // DEFAULT head-of-array prefix (hash order ≈ random) can be swapped
-    // for the AllPairs/PPJoin document-frequency order — the prefixLen
-    // RAREST tokens — which probes the shortest posting lists at the
-    // price of building the df table (one full posting aggregate) and a
-    // per-doc top-k. POSITIONAL bounds do NOT carry over unchanged: the
-    // bound overlap ≤ min(na − pa, nb − pb) is valid only for the FIRST
-    // common token under the SAME total order that defines both
-    // positions — a df-chosen prefix probed against hash-order
-    // positions prunes true pairs (caught live by the DevStress
-    // equality gate at salted-100×). In df mode, `pa` is therefore the
-    // token's df-order RANK within A (free from the prefix-selection
-    // window) and only the A-side half of the bound applies: for the
-    // df-minimal common token every common token ranks ≥ it in df
-    // order, so overlap ≤ na − pa holds with no B-side position at all
-    // (computing a valid pb would need a second full-posting window on
-    // the index side, which is the lever's cost story gone before it
-    // starts). Kept behind `dfOrderedPrefix` for the same-session A/B
-    // (DevStress containment) — see SCALE.md for the measured outcome.
-    val a0 =
-      if (!dfOrderedPrefix) sets
-        .select($"doc_id".as("doc_a"), $"n".as("na"),
-          posexplode(slice($"toks", lit(1), prefixLen)))
-        .toDF("doc_a", "na", "pa", "tok")
-      else {
-        // explode, not posexplode: the hash-order position is dead in df
-        // mode (the df rank `rk` replaces it), and it would otherwise
-        // ride through the widest exploded frame (r19 advisor note)
-        val aAll = sets
-          .select($"doc_id".as("doc_a"), $"n".as("na"), explode($"toks"))
-          .toDF("doc_a", "na", "tok")
-        val dfTab = aAll.groupBy($"tok").agg(count(lit(1)).as("tok_df"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy($"doc_a").orderBy($"tok_df", $"tok")
-        aAll.join(dfTab, "tok")
-          .withColumn("rk", row_number().over(w))
-          .filter($"rk" <= $"na" - ceil($"na" * lit(tauLo)) + 1)
-          .select($"doc_a", $"na", ($"rk" - 1).as("pa"), $"tok")
-      }
+    // subset of A's tokens (if none of them hits B, at most ⌈τ·na⌉ − 1 <
+    // τ·na tokens can overlap), so it takes the df-rarest ones. `pa` is
+    // the token's df-order RANK within A, and only the A-side half of the
+    // positional bound holds: for the df-minimal common token every common
+    // token ranks ≥ it, so overlap ≤ na − pa with no B-side position (a
+    // hash-order pb would prune true pairs).
+    val aAll = sets
+      .select($"doc_id".as("doc_a"), $"n".as("na"), explode($"toks"))
+      .toDF("doc_a", "na", "tok")
+    val dfTab = aAll.groupBy($"tok").agg(count(lit(1)).as("tok_df"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"doc_a").orderBy($"tok_df", $"tok")
+    val a0 = aAll.join(dfTab, "tok")
+      .withColumn("rk", row_number().over(w))
+      .filter($"rk" <= $"na" - ceil($"na" * lit(tauLo)) + 1)
+      .select($"doc_a", $"na", ($"rk" - 1).as("pa"), $"tok")
     val alpha = lit(tauLo) * $"na" - lit(1e-9)
-    // df mode: A-side-only positional bound (see the prefix comment)
-    val posBound =
-      if (dfOrderedPrefix) $"na" - $"pa"
-      else least($"na" - $"pa", $"nb" - $"pb")
-    // §3.2 pre-reduction of the INDEX side (r21 verdict item 3, behind a
-    // flag for the DevStress same-session A/B): only B postings whose
-    // token appears in SOME probe prefix can ever join — dropping the
-    // rest BEFORE the (tok, g) exchange. Prefix tokens are the df-RAREST
-    // per doc, so the dropped mass is the common-token posting bulk.
-    // Costs: a0 is localCheckpoint'ed (computed once, reused by the
-    // reducer build and the join) plus the per-row membership probe.
-    val (a0r, bReduce: (DataFrame => DataFrame)) =
-      if (!bloomPrefilterB)
-        // identity reduce: the default (shipped) plan is byte-identical
-        // to the pre-flag form
-        (a0, identity[DataFrame] _)
-      else {
-        val a0c = a0.localCheckpoint()
-        // codegen-friendly variant of the bloom probe (the UDF bloom
-        // form lost 24.6→29.7 s at 100×): broadcast the DISTINCT prefix
-        // token set and left-semi the B postings against it — same rows
-        // dropped (exact, not probabilistic), no UDF per row, no bloom
-        // build pass; the per-row cost is a broadcast-hash probe inside
-        // whole-stage codegen. Semi-join keeps multiplicity/columns of B
-        // exactly, so the candidate set — and the output — is unchanged.
-        val prefixToks = broadcast(a0c.select($"tok").distinct())
-        (a0c, (b: DataFrame) => b.join(prefixToks, Seq("tok"), "left_semi"))
-      }
-    val cand =
-      if (!lengthBucketed) {
-        val b = bReduce(sets
-          .select($"doc_id".as("doc_b"), $"n".as("nb"), posexplode($"toks"))
-          .toDF("doc_b", "nb", "pb", "tok"))
-        a0r.join(b, Seq("tok"))
-          .filter($"doc_a" =!= $"doc_b" && $"nb" >= alpha && posBound >= alpha)
-          .select($"doc_a", $"doc_b")
-      } else {
-        // one scalar over the checkpointed stats frame (the LPA
-        // stats-switch idiom — a documented driver-side aggregate, not a
-        // collect loop): the top bucket every A row replicates up to.
-        // coalesce: max over an EMPTY documents table is SQL null, and
-        // this path must degrade to an empty result like the flat form
-        // does (the bogus-sfDir Verify flow), not NPE on getInt
-        val maxN = sets.agg(coalesce(max($"n"), lit(0))).first().getInt(0).toLong
-        val gMax = (63 - java.lang.Long.numberOfLeadingZeros(math.max(maxN, 1L))) / 2
-        val b = bReduce(sets
-          .select($"doc_id".as("doc_b"), $"n".as("nb"), posexplode($"toks"))
-          .toDF("doc_b", "nb", "pb", "tok"))
-          .withColumn("g", g4($"nb"))
-        val gMin = g4(greatest(ceil(lit(tauLo) * $"na" - lit(1e-9)), lit(1.0)).cast("long"))
-        // when τ·na exceeds every doc (gMin > gMax), sequence() runs
-        // DESCENDING rather than empty — the stray buckets it emits are
-        // all ≤ gMin, their pairs still die on the nb ≥ alpha filter
-        // below, and the case needs a doc longer than any container
-        // exists for; correctness is unaffected (DevStress asserts
-        // output equality with the flat form)
-        val a = a0r.select($"*", explode(sequence(gMin, lit(gMax))).as("g"))
-        a.join(b, Seq("tok", "g"))
-          .filter($"doc_a" =!= $"doc_b" && $"nb" >= alpha && posBound >= alpha)
-          .select($"doc_a", $"doc_b")
-      }
+    // one scalar over the checkpointed stats frame: the top bucket every
+    // A row replicates up to. coalesce: max over an EMPTY documents table
+    // is SQL null, and the query must degrade to an empty result (the
+    // bogus-sfDir Verify flow), not NPE on getInt
+    val maxN = sets.agg(coalesce(max($"n"), lit(0))).first().getInt(0).toLong
+    val gMax = (63 - java.lang.Long.numberOfLeadingZeros(math.max(maxN, 1L))) / 2
+    // `pb` is unused; explode instead of posexplode would change the
+    // plan the SCALE.md timings measured, so that is left to a measured
+    // change
+    val b = sets
+      .select($"doc_id".as("doc_b"), $"n".as("nb"), posexplode($"toks"))
+      .toDF("doc_b", "nb", "pb", "tok")
+      .withColumn("g", g4($"nb"))
+    val gMin = g4(greatest(ceil(lit(tauLo) * $"na" - lit(1e-9)), lit(1.0)).cast("long"))
+    // when τ·na exceeds every doc (gMin > gMax), sequence() runs
+    // DESCENDING rather than empty — the stray buckets it emits are all
+    // ≤ gMin and their pairs still die on the nb ≥ alpha filter below
+    val cand = a0.select($"*", explode(sequence(gMin, lit(gMax))).as("g"))
+      .join(b, Seq("tok", "g"))
+      .filter($"doc_a" =!= $"doc_b" && $"nb" >= alpha && $"na" - $"pa" >= alpha)
+      .select($"doc_a", $"doc_b")
     cand
       .join(sets.select($"doc_id".as("doc_a"), $"toks".as("ta"), $"n".as("na")), "doc_a")
       .join(sets.select($"doc_id".as("doc_b"), $"toks".as("tb")), "doc_b")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The contract between the blueprint and the code: SURVEY.md §2.2's
@@ -29,5 +31,27 @@ class InventorySpec extends AnyFunSuite {
   test("every oracle key names a declared query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL for undeclared queries: $orphans")
+  }
+
+  // Session knobs and A/B escapes are not options of the engine: only the
+  // deployment settings (fixture dir and cores in Bench and Verify, the
+  // staging roots, the Kafka bootstrap servers and topic) and the dev
+  // mains' own protocol knobs may read the environment or system
+  // properties. A new reader must be a deliberate edit of this list.
+  test("only deployment settings and dev mains read sys.env / sys.props") {
+    val allowed = Set("Bench.scala", "Verify.scala", "StageDirs.scala", "KafkaWire.scala",
+      "DevExplain.scala", "DevStress.scala", "DevSweep.scala")
+    val reader = """sys\.(env|props)|System\.(getenv|getProperty)""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src", "main"))
+    val readers =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => reader.findFirstIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(_.getFileName.toString).toSet
+      finally files.close()
+    assert(readers.nonEmpty, "the scan must see src/main")
+    assert(readers.subsetOf(allowed),
+      s"new sys.env/sys.props readers: ${(readers -- allowed).toSeq.sorted}")
   }
 }

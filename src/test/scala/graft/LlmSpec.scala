@@ -276,4 +276,82 @@ class LlmSpec extends AnyFunSuite {
       assert(r.getAs[Long]("n_tokens_kept") == kept.map(d => nTok(d._3)).sum)
     }
   }
+
+  // ── dedup_containment ──────────────────────────────────────────────
+
+  /** Planted containment fixture at the base-4 length-bucket edges: each
+    * group's container sits EXACTLY at a 4^k bucket boundary with
+    * containment exactly at τ = 0.8 — where a float-rounded ⌊log₄ n⌋ or
+    * an off-by-one in the bucket replication range would delete output.
+    * Disjoint vocab per group, so the only shingle overlaps are the
+    * planted prefixes; ShingleSize = 3 ⇒ a w-word doc has w − 2
+    * shingles. */
+  private def withEdgeFixture[T](body: String => T): T = {
+    val s = spark
+    import s.implicits._
+    def words(group: String, w: Int): String =
+      (0 until w).map(i => s"${group}tok$i").mkString(" ")
+    val docs = Seq(
+      // g1: container at n=16 (exactly 4²), contained at n=20 with
+      // ceil(0.8·20) = 16 ⇒ containment 16/20 = τ
+      (1L, words("g1", 22)), (2L, words("g1", 18)),
+      // g2: same shape one bucket up — 64 = 4³ of 80
+      (3L, words("g2", 82)), (4L, words("g2", 66)),
+      // g3: container one shingle SHORT of the gate (15 < 16): (5,6)
+      // must not pair; (6,5) is full containment 15/15
+      (5L, words("g3", 22)), (6L, words("g3", 17)))
+    val dir = StageDirs.fresh("containment-edge")
+    try {
+      docs.toDF("doc_id", "text")
+        .select($"doc_id", $"text", lit("en").as("lang"),
+          lit("planted").as("source"), length($"text").cast("long").as("n_chars"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      body(dir.toString)
+    } finally StageDirs.rm(dir)
+  }
+
+  private def containmentRows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** All-pairs reference with no candidate pruning: every ordered pair
+    * of distinct docs, exact intersection count, the query's 4-decimal
+    * rounding and threshold. */
+  private def bruteForceContainment(dir: String, threshold: Double = 0.8) = {
+    val s = spark
+    import s.implicits._
+    val sets = Tables.documents(spark, dir)
+      .select($"doc_id", graft.functions.ShingleFunctions
+        .word_shingle_hashes($"text", MinHash.ShingleSize, sorted = true).as("toks"))
+    val a = sets.select($"doc_id".as("doc_a"), $"toks".as("ta"))
+    val b = sets.select($"doc_id".as("doc_b"), $"toks".as("tb"))
+    a.crossJoin(b)
+      .filter($"doc_a" =!= $"doc_b")
+      .select($"doc_a", $"doc_b",
+        round(graft.functions.ArrayFunctions.sorted_intersect_count($"ta", $"tb")
+          .cast("double") / size($"ta"), 4).as("containment"))
+      .filter($"containment" >= threshold)
+  }
+
+  test("dedup_containment: 4^k bucket-boundary pairs at exactly τ survive the bucketed join") {
+    withEdgeFixture { dir =>
+      val got = containmentRows(TextOps.dedupContainment(spark, dir))
+      val expected = Set(
+        (1L, 2L, 0.8), (2L, 1L, 1.0),
+        (3L, 4L, 0.8), (4L, 3L, 1.0),
+        (6L, 5L, 1.0))
+      assert(got == expected, s"output diverged from the hand-computed truth: $got")
+    }
+  }
+
+  test("dedup_containment equals a brute-force all-pairs reference (fixture and 4^k edges)") {
+    val onFixture = containmentRows(TextOps.dedupContainment(spark, sf))
+    assert(onFixture.nonEmpty, "the fixture must plant containment pairs")
+    assert(onFixture == containmentRows(bruteForceContainment(sf)),
+      "pruned plan diverged from the all-pairs reference on the fixture")
+    withEdgeFixture { dir =>
+      assert(containmentRows(TextOps.dedupContainment(spark, dir)) ==
+        containmentRows(bruteForceContainment(dir)),
+        "pruned plan diverged from the all-pairs reference at the bucket edges")
+    }
+  }
 }

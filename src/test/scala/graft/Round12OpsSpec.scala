@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -16,12 +16,13 @@ import graft.rel.{FuncSurface, Modern}
 class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkFixture.spark
   private val sf = SparkFixture.Sf
+  private val TmpRoot = SparkFixture.target("r12-tmp")
 
   // planted fixtures are read-and-collected inside each test; drop the
   // whole root when the suite ends (same accumulation leak the r15
   // advisor flagged on r15-tmp)
   override def afterAll(): Unit =
-    StageDirs.rm(Paths.get("/root/repo/target/r12-tmp"))
+    StageDirs.rm(TmpRoot)
 
   test("asof tolerance: planted boundary fixture (≤24h in, >24h out, no-click null)") {
     val s = spark
@@ -41,7 +42,7 @@ class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (9L, 5L, "click", 0L), (10L, 5L, "click", 2 * h),
       (11L, 5L, "purchase", 3 * h))
     val dir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/r12-tmp")), "asof")
+      Files.createDirectories(TmpRoot), "asof")
     rows.toDF("event_id", "user_id", "event_type", "ts_us")
       .select($"event_id", $"user_id", $"event_type",
         timestamp_micros($"ts_us").as("ts"), lit(0L).as("value"))
@@ -193,11 +194,11 @@ class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("skew/kurtosis: exact zero on a planted symmetric fixture, sign on a skewed one") {
     val s = spark
     import s.implicits._
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     // symmetric {1,2,3} per flag -> skewness 0, excess kurtosis -1.5;
     // right-tailed {1,1,1,7} -> positive skewness
     val dir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/r12-tmp")), "skew")
+      Files.createDirectories(TmpRoot), "skew")
     (Seq(("A", 1.0), ("A", 2.0), ("A", 3.0)) ++
       Seq(("B", 1.0), ("B", 1.0), ("B", 1.0), ("B", 7.0)))
       .toDF("l_returnflag", "l_quantity")
@@ -309,9 +310,9 @@ class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("rolling zscore: constant series yields null z, a planted spike flags") {
     val s = spark
     import s.implicits._
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val dir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/r12-tmp")), "zs")
+      Files.createDirectories(TmpRoot), "zs")
     // user 1: constant 5.0 (variance 0 -> z null); user 2: flat 10.0
     // with one 100.0 spike (must flag)
     val rows = (1 to 8).map(i => (i.toLong, 1L, 5.0)) ++
@@ -331,9 +332,9 @@ class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("rolling median: exact lower-median on a planted series") {
     val s = spark
     import s.implicits._
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val dir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/r12-tmp")), "med")
+      Files.createDirectories(TmpRoot), "med")
     val vals = Seq(5.0, 1.0, 3.0, 2.0, 4.0, 9.0)
     vals.zipWithIndex.map { case (v, i) => ((i + 1).toLong, v) }
       .toDF("event_id", "value")
@@ -365,9 +366,9 @@ class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("entropy/gini: closed forms on planted uniform and single-class cohorts") {
     val s = spark
     import s.implicits._
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val dir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/r12-tmp")), "ent")
+      Files.createDirectories(TmpRoot), "ent")
     // cohort 1 (user 1): 4 types x 25 events -> uniform over 4;
     // cohort 2 (user 2): single type -> entropy 0, gini 0
     val rows = (1 to 100).map(i => (i.toLong, 1L, s"t${i % 4}")) ++
@@ -409,9 +410,9 @@ class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pmi: planted single-token corpus scores exactly zero") {
     val s = spark
     import s.implicits._
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val dir = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/r12-tmp")), "pmi")
+      Files.createDirectories(TmpRoot), "pmi")
     Seq((0L, "x x x x", "en", "src0", 7L)).toDF(
         "doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

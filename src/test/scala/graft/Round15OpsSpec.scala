@@ -14,19 +14,18 @@ import org.apache.spark.sql.functions._
 class Round15OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkFixture.spark
 
-  private val TmpRoot = "/root/repo/target/r15-tmp"
+  private val TmpRoot = SparkFixture.target("r15-tmp")
 
   private def tmp(prefix: String): String = {
-    import java.nio.file.{Files, Paths}
-    Files.createTempDirectory(
-      Files.createDirectories(Paths.get(TmpRoot)), prefix).toString
+    import java.nio.file.Files
+    Files.createTempDirectory(Files.createDirectories(TmpRoot), prefix).toString
   }
 
   // planted fixtures are read-and-collected inside each test, so the
   // whole root can go when the suite ends (r15 advisor note: the temp
   // dirs otherwise accumulate across test runs)
   override def afterAll(): Unit =
-    StageDirs.rm(java.nio.file.Paths.get(TmpRoot))
+    StageDirs.rm(TmpRoot)
 
   test("bfs: planted 2-component graph — exact hops, multi-source min, 4-round horizon") {
     val s = spark

@@ -1,11 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
-/** Round-18 mechanism guards: direct unit coverage for the two
-  * correctness-load-bearing helpers this round introduced and for the
-  * stamp-signature advisor fix.
+/** Round-18 mechanism guards: direct unit coverage for the golden-hash
+  * rendering, the state-partition derivation and the replica stamp
+  * signature.
   *
   * (1) [[Golden]]'s canonical rendering claims INJECTIVITY (r17 advisor
   * low): a string value containing a structural delimiter must never
@@ -15,16 +14,8 @@ import org.apache.spark.sql.functions._
   * unquoted rendering; the pins would have been blind to a drift
   * between them.
   *
-  * (2) `dedup_containment`'s length-bucketed posting join computes
-  * ⌊log₄ n⌋ with integer bit-length arithmetic because a float log at
-  * n = 4^k could round across the bucket edge and silently prune a
-  * legitimate pair. The planted fixture puts container docs EXACTLY at
-  * the 4² and 4³ bucket boundaries with containment exactly at the 0.8
-  * threshold — the coordinates where such a rounding bug (or an
-  * off-by-one in the replication range) deletes output — and asserts
-  * the bucketed form against both the flat form and the hand-computed
-  * truth. This is the in-suite twin of the `DevStress containment`
-  * equality assertion, which only runs on salted replicas out-of-suite.
+  * (2) The streaming state-partition count derives from the replayed
+  * volume ([[Tuning.statePartitions]]).
   *
   * (3) `StageDirs.srcSig` must key replica memo stamps on the part files
   * INSIDE a fixture directory, not the directory inode's mtime (r17
@@ -89,100 +80,18 @@ class Round18OpsSpec extends AnyFunSuite {
     assert(Golden.hash(base.select($"v", $"id")) == h)
   }
 
-  // ── (2) containment bucket-edge fixture ────────────────────────────
-
-  test("dedup_containment: 4^k bucket-boundary pairs at exactly τ survive the bucketed join") {
-    val s = spark
-    import s.implicits._
-    // disjoint vocab per group so the only shingle overlaps are the
-    // planted prefixes; ShingleSize=3 ⇒ a w-word doc has w−2 shingles
-    def words(group: String, w: Int): String =
-      (0 until w).map(i => s"${group}tok$i").mkString(" ")
-    val docs = Seq(
-      // group g1: container at n=16 (exactly 4², the g4 bucket edge),
-      // contained at n=20 with ceil(0.8·20)=16 ⇒ containment 16/20 = τ
-      (1L, words("g1", 22)), (2L, words("g1", 18)),
-      // group g2: same shape one bucket up — 64 = 4³ of 80
-      (3L, words("g2", 82)), (4L, words("g2", 66)),
-      // group g3: container one shingle SHORT of the gate (15 < 16):
-      // (5,6) must not pair; (6,5) is full containment 15/15
-      (5L, words("g3", 22)), (6L, words("g3", 17)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cont-edge").toFile
-    try {
-      docs.toDF("doc_id", "text")
-        .select($"doc_id", $"text", lit("en").as("lang"),
-          lit("planted").as("source"), length($"text").cast("long").as("n_chars"))
-        .write.mode("overwrite").parquet(s"${dir.getPath}/documents.parquet")
-      def rows(lengthBucketed: Boolean): Set[(Long, Long, Double)] =
-        graft.llm.TextOps.dedupContainment(spark, dir.getPath,
-            lengthBucketed = lengthBucketed)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val bucketed = rows(lengthBucketed = true)
-      val expected = Set(
-        (1L, 2L, 0.8), (2L, 1L, 1.0),
-        (3L, 4L, 0.8), (4L, 3L, 1.0),
-        (6L, 5L, 1.0))
-      assert(bucketed == expected,
-        s"bucketed output diverged from the hand-computed truth: $bucketed")
-      assert(rows(lengthBucketed = false) == expected,
-        "flat form diverged from the hand-computed truth")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
-  }
-
-  // ── (2b) streaming state-partition derivation ───────────────────────
+  // ── (2) streaming state-partition derivation ───────────────────────
 
   test("statePartitions: fixture volumes land on the pre-r18 floor of 4; large replays scale") {
     // the streaming launch-time twin of roundPartitions: the count is
     // checkpoint-pinned at first start, so the floor must hold at every
     // fixture scale (identical checkpoints/state layouts to the old
-    // literal) and the derivation must engage for big replays.
-    // statePartitions honors a sys-prop/env override chain (the A/B
-    // reproduction knob) — pin the sys-prop layer around the derivation
-    // asserts so a leaked graft.statePartitions from another test (or a
-    // SPARK_GRAFT_STATE_PARTITIONS in the ambient environment, which a
-    // JVM can't unset) can't fail them spuriously, then restore it
-    val saved = sys.props.remove("graft.statePartitions")
-    try {
-      if (sys.env.contains("SPARK_GRAFT_STATE_PARTITIONS")) {
-        // env layer is active and unclearable in-JVM: assert the
-        // derivation through roundPartitions directly (same math,
-        // no override chain) and the override through statePartitions
-        assert(Tuning.statePartitions(0L) ==
-          sys.env("SPARK_GRAFT_STATE_PARTITIONS").trim.toInt)
-      } else {
-        assert(Tuning.statePartitions(0L) == 4)
-        assert(Tuning.statePartitions(100000L) == 4)     // sf0.1 events
-        assert(Tuning.statePartitions(8000000L) == 4)    // floor edge
-        assert(Tuning.statePartitions(8000001L) == 5)
-        assert(Tuning.statePartitions(2000000000L) == 1000)
-        // the sys-prop override layer wins over the derivation…
-        sys.props("graft.statePartitions") = "17"
-        assert(Tuning.statePartitions(2000000000L) == 17)
-        // …and a malformed/non-positive override fails descriptively,
-        // not with a bare NumberFormatException
-        for (bad <- Seq("banana", "0", "-3", "")) {
-          sys.props("graft.statePartitions") = bad
-          val e = intercept[IllegalArgumentException] {
-            Tuning.statePartitions(100L)
-          }
-          assert(e.getMessage.contains("positive integer"),
-            s"override '$bad' should name the knob and constraint: ${e.getMessage}")
-        }
-      }
-      // the derivation itself, independent of any override layer
-      assert(Tuning.roundPartitions(0L) == 4)
-      assert(Tuning.roundPartitions(8000000L) == 4)
-      assert(Tuning.roundPartitions(8000001L) == 5)
-      assert(Tuning.roundPartitions(2000000000L) == 1000)
-    } finally {
-      sys.props.remove("graft.statePartitions")
-      saved.foreach(v => sys.props("graft.statePartitions") = v)
-    }
+    // literal) and the derivation must engage for big replays
+    assert(Tuning.statePartitions(0L) == 4)
+    assert(Tuning.statePartitions(100000L) == 4)     // sf0.1 events
+    assert(Tuning.statePartitions(8000000L) == 4)    // floor edge
+    assert(Tuning.statePartitions(8000001L) == 5)
+    assert(Tuning.statePartitions(2000000000L) == 1000)
   }
 
   // ── (3) srcSig stamp signature ──────────────────────────────────────

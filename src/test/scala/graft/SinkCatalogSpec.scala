@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,8 +24,7 @@ class SinkCatalogSpec extends AnyFunSuite {
   test("topic log: per-topic offset order, all records preserved") {
     val s = spark
     import s.implicits._
-    val out = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "topiclog").toString
+    val out = StageDirs.fresh("topiclog").toString
     val ev = buildEvents()
     ChangelogSink.writeTopicLog(ev.select($"key", $"value", $"topic", $"offset"), out)
     val back = spark.read.parquet(out)
@@ -42,8 +39,7 @@ class SinkCatalogSpec extends AnyFunSuite {
   test("reading one topic prunes partitions (no full-log scan)") {
     val s = spark
     import s.implicits._
-    val out = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "topiclog").toString
+    val out = StageDirs.fresh("topiclog").toString
     ChangelogSink.writeTopicLog(
       buildEvents().select($"key", $"value", $"topic", $"offset"), out)
     val topic = s"${Envelope.Namespace}.${Envelope.Keyspace}.c"

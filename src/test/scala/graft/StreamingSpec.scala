@@ -236,4 +236,37 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got == want && got.nonEmpty)
   }
+
+  // A source regenerated in place within one JVM must re-stage under its
+  // new part-file signature AND the superseded staged copy (a full
+  // parquet copy of the log) must be deleted eagerly, not leaked until
+  // JVM exit.
+  test("staged-log memo evicts and deletes the superseded staged copy on in-place regeneration") {
+    val s2 = spark
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-restage").toFile
+    try {
+      val ev = Tables.events(spark, sf)
+      ev.write.mode("overwrite").parquet(s"${dir.getPath}/events.parquet")
+      val staged1 = graft.cdc.StreamingLatest.stagedEventLog(spark, dir.getPath)
+      assert(new java.io.File(staged1).exists(), "first staging must exist")
+      // memo hit: same signature → same dir, nothing deleted
+      assert(graft.cdc.StreamingLatest.stagedEventLog(spark, dir.getPath) == staged1)
+      // regenerate IN PLACE with different content (drops half the rows,
+      // so the part-file signature moves)
+      ev.filter($"event_id" % 2 === 0)
+        .write.mode("overwrite").parquet(s"${dir.getPath}/events.parquet")
+      val staged2 = graft.cdc.StreamingLatest.stagedEventLog(spark, dir.getPath)
+      assert(staged2 != staged1,
+        "a regenerated source must re-stage under its new signature")
+      assert(new java.io.File(staged2).exists(), "second staging must exist")
+      assert(!new java.io.File(staged1).exists(),
+        "the superseded staged copy must be deleted eagerly, not leaked until JVM exit")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
 }

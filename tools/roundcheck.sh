@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
 # Mechanized round-close checklist (SURVEY "End-of-round checklist"):
 #   1. tools/inventory_check.py exits 0        (SURVEY §2.2 ↔ SparkEntry ↔ Oracle)
-#   2. sbt test green                          (full suite)
+#   2. sbt test green                          (full suite), then the
+#      benchmark's own suite (perfbench/: it compiles all of src/main,
+#      dev mains included, and calls engine helpers directly)
 #   3. full Verify + tools/compare.py at sf0.01 all-pass
 #   4. bench JSON parses with no negative per-query values (sf0.001 run)
 #   5. stamp .roundcheck_ok with a hash of every .scala source
@@ -82,6 +84,7 @@ case "${1:-}" in
     fi
     python3 tools/inventory_check.py
     sbt -batch test
+    (cd perfbench && sbt -batch test)
     out=$(mktemp -d /tmp/roundcheck-verify.XXXXXX)
     sbt -batch "runMain graft.Verify $SF $out"
     python3 tools/compare.py "$SF" "$out"
