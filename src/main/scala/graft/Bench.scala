@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Outlier self-defense (r08 lesson: q8 read 3.86 s in the driver
     * window while its warm band is 1.38–1.94 s — min-of-2 does not
@@ -23,34 +22,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Production AQE form (r16 verdict item 2): over-provision the
-      // pre-coalesce shuffle partition count and let AQE coalesce to the
-      // data, so the benched config is the config a cluster would ship
-      // with — a fixed count equal to the core count becomes per-reducer
-      // spill the moment data outgrows the fixture (q21 at 100×: slope
-      // 13.8 pinned at 32 partitions vs 3.9 once partitions scale).
-      // shuffle.partitions above stays as the non-AQE fallback.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // r21 measured default flip: parallelismFirst=false makes AQE
-      // coalesce to the advisory partition size instead of
-      // 1 MB-per-core minimums. Two order-rotated full-bench pairs both
-      // read ~10-13% faster batch subtotals calibration-normalized
-      // (OPTIMIZATION_r21.md), and advisory-size partitions are the
-      // production posture for data that outgrows the fixture (the
-      // mini-partition flood is the §2.2 shuffle-block explosion).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // back-compat for the legacy ns-precision events fixture; the
-      // current µs TIMESTAMP_NTZ fixture ignores this (graft.Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build()
     // untimed warm-up: session/scheduler/codegen startup is not a query
     // cost — warm both the scan path and the parquet-write path (commit
     // protocol + writer codegen otherwise land on whichever streaming

@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev-only plan auditor: prints formatted plans for named queries. */
 object DevExplain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.build()
     args.foreach { name =>
       println(s"===== $name =====")
       try {

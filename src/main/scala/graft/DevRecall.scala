@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: measure ANN recall@10 vs the exact cosine top-10 at both
   * gate scales, to pin the spec thresholds on recorded values.
@@ -16,14 +15,7 @@ import org.apache.spark.sql.SparkSession
   * item 3). */
 object DevRecall {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // production AQE form, same as Bench/DevScale (r16 verdict item 2)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.build()
     val dirs = if (args.nonEmpty) args.toSeq.map {
         case s if s.startsWith("jit:") =>
           DevScale.jitteredEmbeddings(spark, s.stripPrefix("jit:").toInt)

@@ -198,7 +198,8 @@ object DevScale {
     * write completes, so an interrupted write, a regenerated base
     * fixture, or a logic change (bump `tag`) rebuilds instead of
     * silently reusing a stale/partial replica. */
-  private def stamped(out: String, src: String, tag: String)(build: => Unit): String = {
+  private def stamped(name: String, src: String, tag: String)(build: String => Unit): String = {
+    val out = StageDirs.target(name).toString
     val stampFile = new java.io.File(s"$out/.src-stamp")
     val want = Seq(tag, src, StageDirs.srcSig(src)).mkString("\n")
     val fresh = stampFile.exists() && {
@@ -206,7 +207,7 @@ object DevScale {
       try in.mkString == want finally in.close()
     }
     if (!fresh) {
-      build
+      build(out)
       val w = new java.io.PrintWriter(stampFile)
       try w.print(want) finally w.close()
     }
@@ -226,8 +227,7 @@ object DevScale {
     * the realistic shape of a 100 TB crawl. Only `documents` is
     * salted/written (the pair miners read nothing else). */
   private def saltedDocs(spark: SparkSession, m: Int): String =
-    stamped(s"/root/repo/target/scale${m}salt", s"$Base/documents.parquet", "salt-v2") {
-      val out = s"/root/repo/target/scale${m}salt"
+    stamped(s"scale${m}salt", s"$Base/documents.parquet", "salt-v2") { out =>
       println(s"[scale] generating $m x token-salted documents at $out")
       val src = spark.read.parquet(s"$Base/documents.parquet")
       (0 until m).map { i =>
@@ -278,8 +278,7 @@ object DevScale {
     * unshifted, so M× means M× rows per trigger and M× per-key depth —
     * the launch-volume axis. */
   private[graft] def eventsReplica(spark: SparkSession, m: Int): String =
-    stamped(s"/root/repo/target/scale${m}ev", s"$Base/events.parquet", "ev-v1") {
-      val out = s"/root/repo/target/scale${m}ev"
+    stamped(s"scale${m}ev", s"$Base/events.parquet", "ev-v1") { out =>
       println(s"[scale] generating $m x events-only replica at $out")
       val src = spark.read.parquet(s"$Base/events.parquet")
       (0 until m).map { i =>
@@ -302,8 +301,7 @@ object DevScale {
     * (`DevStress streamvol join`); this replica is the one whose slope
     * judges the ENGINE, the unshifted one documents the M² artifact. */
   private[graft] def eventsUsersReplica(spark: SparkSession, m: Int): String =
-    stamped(s"/root/repo/target/scale${m}evu", s"$Base/events.parquet", "evu-v1") {
-      val out = s"/root/repo/target/scale${m}evu"
+    stamped(s"scale${m}evu", s"$Base/events.parquet", "evu-v1") { out =>
       println(s"[scale] generating $m x user-shifted events replica at $out")
       val src = spark.read.parquet(s"$Base/events.parquet")
       (0 until m).map { i =>
@@ -328,8 +326,7 @@ object DevScale {
     * true Hamming-0 pair set grows LINEARLY with M and the measured
     * output can be asserted against the planted count. */
   private[graft] def phashDocs(spark: SparkSession, m: Int): String =
-    stamped(s"/root/repo/target/scale${m}ph", s"$Base/documents.parquet", "ph-v1") {
-      val out = s"/root/repo/target/scale${m}ph"
+    stamped(s"scale${m}ph", s"$Base/documents.parquet", "ph-v1") { out =>
       println(s"[scale] generating $m x phash-safe documents at $out")
       val src = spark.read.parquet(s"$Base/documents.parquet")
         .select("doc_id", "lang", "source", "n_chars")
@@ -350,9 +347,9 @@ object DevScale {
     }
 
   private[graft] def jitteredEmbeddings(spark: SparkSession, m: Int): String =
-    stamped(s"/root/repo/target/scale${m}jit", s"$Base/embeddings.parquet", "jit-v1") {
-      println(s"[scale] generating $m x jittered embeddings at /root/repo/target/scale${m}jit")
-      jitterReplica(spark, Base, s"/root/repo/target/scale${m}jit", m)
+    stamped(s"scale${m}jit", s"$Base/embeddings.parquet", "jit-v1") { out =>
+      println(s"[scale] generating $m x jittered embeddings at $out")
+      jitterReplica(spark, Base, out, m)
     }
 
   /** Number of mixture clusters in the clustered embedding replica, and
@@ -409,29 +406,15 @@ object DevScale {
   }
 
   private[graft] def mixedEmbeddings(spark: SparkSession, m: Int): String =
-    stamped(s"/root/repo/target/scale${m}mix", s"$Base/embeddings.parquet", "mix-v1") {
-      println(s"[scale] generating $m x mixture-clustered embeddings at /root/repo/target/scale${m}mix")
-      mixReplica(spark, Base, s"/root/repo/target/scale${m}mix", m)
+    stamped(s"scale${m}mix", s"$Base/embeddings.parquet", "mix-v1") { out =>
+      println(s"[scale] generating $m x mixture-clustered embeddings at $out")
+      mixReplica(spark, Base, out, m)
     }
 
   def main(args: Array[String]): Unit = {
     val m = args.headOption.map(_.toInt).getOrElse(10)
-    val out = s"/root/repo/target/scale$m"
-    // Production AQE form by default (r16 verdict item 2): a high
-    // pre-coalesce initialPartitionNum + AQE coalesce, so the measured
-    // config is the config a cluster would ship — this removes the
-    // 32p-vs-256p dual-column bookkeeping that r16 needed (q21 read
-    // slope 13.8 pinned at 32 partitions / per-reducer spill vs 3.9 at
-    // 256; salted-100× containment 153 vs 54).
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val out = StageDirs.target(s"scale$m").toString
+    val spark = Sessions.build()
 
     // events-only build for the streaming volume measurements — must
     // branch BEFORE the full-replica build below (the whole point is

@@ -30,28 +30,17 @@ import org.apache.spark.sql.functions._
   */
 object DevStress {
   private val Base = "/root/testdata/sf0.1"
+  private def replica(name: String): String = StageDirs.target(name).toString
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // production AQE form, same as Bench/DevScale (r16 verdict item 2)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", "1024"))
-      // DEFAULT stays the historical DevStress regime (Spark default
-      // parallelismFirst=true) so recorded slope tables remain
-      // comparable; the env override exists for the r22 scale-shape
-      // A/B of the bench's r21 flip (VERDICT r21 item 7)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The shipped profile (Sessions) with DevStress's own partition
+    * regime on top: the defaults 1024/true keep the recorded slope tables
+    * comparable; the overrides exist for the scale-shape A/B of the
+    * bench's r21 `parallelismFirst` flip (VERDICT r21 item 7). */
+  private def session(): SparkSession = Sessions.build(conf = Map(
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", "1024"),
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+      sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")))
 
   /** Warm run + timed run; returns (seconds, timed run's result) so
     * callers never re-execute a pipeline just to read its count. */
@@ -67,7 +56,7 @@ object DevStress {
     case Some("graph") =>
       graph(args.lift(1).map(_.toInt).getOrElse(60000),
         args.lift(2).getOrElse("bfs"))
-    case Some("scd2")  => scd2(args.lift(1).getOrElse("/root/repo/target/scale10"))
+    case Some("scd2")  => scd2(args.lift(1).getOrElse(replica("scale10")))
     case Some("streamvol") =>
       val rest = args.drop(1).toSeq
       val family = if (rest.contains("join")) "join" else "state"
@@ -83,12 +72,12 @@ object DevStress {
       val flags = Set("join", "rocksdb", "rocksonly", "rev", "sync")
       val dirs = rest.filterNot(flags)
       streamvol(if (dirs.nonEmpty) dirs
-        else Seq(Base, "/root/repo/target/scale10", "/root/repo/target/scale100"),
+        else Seq(Base, replica("scale10"), replica("scale100")),
         family, providers, rev = rest.contains("rev"),
         syncAfterStage = rest.contains("sync"))
     case Some("phash") =>
       phash(if (args.length > 1) args.drop(1).toSeq
-        else Seq(Base, "/root/repo/target/scale10ph", "/root/repo/target/scale100ph"))
+        else Seq(Base, replica("scale10ph"), replica("scale100ph")))
     case _ => System.err.println(
       "usage: DevStress skew [srcDir] | graph [nEdges] [bfs|lpa|pagerank] | " +
         "scd2 [replicaDir] | " +
@@ -103,7 +92,7 @@ object DevStress {
   private def skew(src: String): Unit = {
     val spark = session()
     import spark.implicits._
-    val out = s"/root/repo/target/skew-${new java.io.File(src).getName}"
+    val out = replica(s"skew-${new java.io.File(src).getName}")
     // memo stamp (r15 advisor note): key the cached twin on the source's
     // absolute path + per-table part-file signature (name+size+mtime of
     // the files INSIDE each table dir — StageDirs.srcSig),
@@ -150,12 +139,8 @@ object DevStress {
           round(sum($"o_totalprice".cast("decimal(18,4)")).cast("double"), 4)
             .as("revenue"))
     }
-    def withNoBroadcast[T](body: => T): T = {
-      val k = "spark.sql.autoBroadcastJoinThreshold"
-      val prev = spark.conf.get(k)
-      spark.conf.set(k, "-1")
-      try body finally spark.conf.set(k, prev)
-    }
+    def withNoBroadcast[T](body: => T): T =
+      Tuning.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
     println(f"${"case"}%-34s ${"uniform_s"}%10s ${"skewed_s"}%10s")
     def row(name: String, f: String => Double): Unit = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only multi-scan sweep (r21 verdict item 6, re-run each round):
   * for every batch query, counts parquet scans, exchanges, and — the
@@ -19,13 +18,7 @@ object DevSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val minDupes = args.headOption.map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.build()
     val skip = Set("dedup_cluster_canonical", "graph_pagerank",
       "graph_label_propagation", "graph_bfs_distance") ++
       SparkEntry.queries.keys.filter(_.startsWith("cdc_stream_")) + "cdc_state_reader"

@@ -12,21 +12,21 @@ import java.nio.file.{Files, Path, Paths}
   * inodes, not megabytes). The root lives under the checkout's `target/`
   * so a clean build also reclaims everything. */
 object StageDirs {
-  private def root: Path = Paths.get(
-    sys.props.getOrElse("graft.stage.tmp",
-      // derive from the working directory, not a hardcoded checkout path
-      // (a clone elsewhere must stage under ITS OWN target/)
-      Paths.get(sys.props.getOrElse("user.dir", "."), "target", "stage-tmp")
-        .toString))
+  /** `<checkout>/target/<name>`, derived from the working directory
+    * (sbt forks runs and tests in the project base dir) so a clone or
+    * worktree elsewhere writes under its own `target/`. */
+  def target(name: String): Path =
+    Paths.get(sys.props.getOrElse("user.dir", "."), "target", name)
+
+  private def root: Path =
+    sys.props.get("graft.stage.tmp").map(Paths.get(_)).getOrElse(target("stage-tmp"))
 
   /** Streaming staged-log/run/checkpoint root — its own sysprop and
     * directory so streaming scaffolding (staged event log, checkpoints)
     * and batch format staging stay independently re-rootable, but ONE
     * ownership/purge idiom (this object) governs both trees. */
-  private[graft] def streamRoot: Path = Paths.get(
-    sys.props.getOrElse("graft.stream.tmp",
-      Paths.get(sys.props.getOrElse("user.dir", "."), "target", "stream-tmp")
-        .toString))
+  private[graft] def streamRoot: Path =
+    sys.props.get("graft.stream.tmp").map(Paths.get(_)).getOrElse(target("stream-tmp"))
 
   /** Recursive delete; each Files.list stream is closed (try/finally) so
     * a deep purge doesn't leak one fd per directory visited. */

@@ -297,10 +297,8 @@ object Bucketing {
         // pinned LOW so the skew-split mechanism is exercised even at
         // the sf0.001 smoke fixture (whose per-flag shuffle blocks
         // compress to a few KB); production keeps the 64 MB default
-        val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        val prev = spark.conf.get(advisoryKey)
-        spark.conf.set(advisoryKey, "2048")
-        try {
+        graft.Tuning.withConf(spark,
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2048") {
           // AQE splits a rebalance partition at MAPPER-BLOCK granularity,
           // and an adjacent repartition(8) would just COLLAPSE into the
           // rebalance exchange (leaving the smoke fixture's single-file
@@ -319,7 +317,7 @@ object Bucketing {
             spark.sql(
               s"SELECT /*+ REBALANCE(l_returnflag) */ * FROM ${v("graft_rebal_src")}")
           }.write.mode("overwrite").parquet(s"$d/rebalanced")
-        } finally spark.conf.set(advisoryKey, prev)
+        }
         d
       }) + "/rebalanced"
   }

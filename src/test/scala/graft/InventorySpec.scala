@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,25 +35,45 @@ class InventorySpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracle SQL for undeclared queries: $orphans")
   }
 
+  /** Names of the `src/main` Scala files whose text matches `pattern`. */
+  private def mainFilesMatching(pattern: String): Set[String] = {
+    val re = pattern.r
+    val files = Files.walk(Paths.get("src", "main"))
+    try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => re.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .map(_.getFileName.toString).toSet
+    finally files.close()
+  }
+
   // Session knobs and A/B escapes are not options of the engine: only the
-  // deployment settings (fixture dir and cores in Bench and Verify, the
+  // deployment settings (Bench's fixture dir, the cores in Sessions, the
   // staging roots, the Kafka bootstrap servers and topic) and the dev
   // mains' own protocol knobs may read the environment or system
   // properties. A new reader must be a deliberate edit of this list.
   test("only deployment settings and dev mains read sys.env / sys.props") {
-    val allowed = Set("Bench.scala", "Verify.scala", "StageDirs.scala", "KafkaWire.scala",
+    val allowed = Set("Bench.scala", "Sessions.scala", "StageDirs.scala", "KafkaWire.scala",
       "DevExplain.scala", "DevStress.scala", "DevSweep.scala")
-    val reader = """sys\.(env|props)|System\.(getenv|getProperty)""".r
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src", "main"))
-    val readers =
-      try files.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => reader.findFirstIn(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
-        .map(_.getFileName.toString).toSet
-      finally files.close()
+    val readers = mainFilesMatching("""sys\.(env|props)|System\.(getenv|getProperty)""")
     assert(readers.nonEmpty, "the scan must see src/main")
     assert(readers.subsetOf(allowed),
       s"new sys.env/sys.props readers: ${(readers -- allowed).toSeq.sorted}")
+  }
+
+  test("only Sessions builds a session") {
+    assert(mainFilesMatching("""SparkSession\.builder""") == Set("Sessions.scala"))
+  }
+
+  // The benchmark keeps its own copy of the session profile
+  // (perfbench/src/.../Setup.scala): the suite must run the same AQE values.
+  test("the suite runs the benchmarked AQE config") {
+    val setup = new String(Files.readAllBytes(Paths.get(
+      "perfbench", "src", "main", "scala", "graft", "perfbench", "Setup.scala")), "UTF-8")
+    val benched = """\.config\("(spark\.sql\.adaptive\.[^"]+)", "([^"]+)"\)""".r
+      .findAllMatchIn(setup).map(m => m.group(1) -> m.group(2)).toMap
+    assert(benched.size == 3, s"the benchmark's AQE values: $benched")
+    benched.foreach { case (k, v) =>
+      assert(SparkFixture.spark.conf.get(k) == v, s"$k differs from the benchmark")
+    }
   }
 }

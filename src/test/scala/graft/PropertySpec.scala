@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
@@ -274,21 +275,23 @@ class PropertySpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val docs = (0L until 200L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    def run() = graft.llm.TextOps.shuffleShardOnDocs(spark, docs).collect()
+    def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    try {
-      spark.conf.set(key, "3")
-      val p3 = run()
-      spark.conf.set(key, "32")
-      val p32 = run()
-      assert(p3 == p32, "epoch order must not depend on physical partitioning")
-      // different seed ⇒ different order (the shuffle actually shuffles)
-      val other = graft.llm.TextOps.shuffleShardOnDocs(spark, docs, seed = "43")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-      assert(other != p32, "changing the seed must change the order")
-    } finally spark.conf.set(key, prev)
+    // the session's initialPartitionNum overrides shuffle.partitions as
+    // the pre-coalesce count, so both are set
+    def run(n: Int) = Tuning.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString,
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n.toString) {
+      val df = graft.llm.TextOps.shuffleShardOnDocs(spark, docs)
+      (rows(df), SparkFixture.shuffleShape(df)._1)
+    }
+    val (p3, pre3) = run(3)
+    val (p32, pre32) = run(32)
+    assert(pre3.contains(3) && pre32.contains(32),
+      s"the shard shuffle must run at 3 vs 32 partitions: $pre3 vs $pre32")
+    assert(p3 == p32, "epoch order must not depend on physical partitioning")
+    // different seed ⇒ different order (the shuffle actually shuffles)
+    val other = rows(graft.llm.TextOps.shuffleShardOnDocs(spark, docs, seed = "43"))
+    assert(other != p32, "changing the seed must change the order")
   }
 
   test("property: salted twins equal the unsalted plans over 100 generated key distributions") {

@@ -16,7 +16,7 @@ import graft.rel.{FuncSurface, Modern}
 class Round12OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkFixture.spark
   private val sf = SparkFixture.Sf
-  private val TmpRoot = SparkFixture.target("r12-tmp")
+  private val TmpRoot = StageDirs.target("r12-tmp")
 
   // planted fixtures are read-and-collected inside each test; drop the
   // whole root when the suite ends (same accumulation leak the r15

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 class Round15OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkFixture.spark
 
-  private val TmpRoot = SparkFixture.target("r15-tmp")
+  private val TmpRoot = StageDirs.target("r15-tmp")
 
   private def tmp(prefix: String): String = {
     import java.nio.file.Files
