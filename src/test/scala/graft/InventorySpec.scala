@@ -60,6 +60,20 @@ class InventorySpec extends AnyFunSuite {
       s"new sys.env/sys.props readers: ${(readers -- allowed).toSeq.sorted}")
   }
 
+  // Staged input copies go through one memo (StageDirs.staged): a fresh
+  // staging dir taken anywhere else in the engine is a hand-rolled memo.
+  // The replay runner takes one scratch dir per replay; the dev mains
+  // are not engine code.
+  test("only StageDirs, the replay runner and the dev mains take fresh staging dirs") {
+    val takers = mainFilesMatching("""StageDirs\.fresh\(""").filterNot(_.startsWith("Dev"))
+    assert(takers.subsetOf(Set("StageDirs.scala", "StreamingLatest.scala")),
+      s"hand-rolled staging outside StageDirs.staged: ${takers.toSeq.sorted}")
+    val replay = new String(Files.readAllBytes(Paths.get(
+      "src", "main", "scala", "graft", "cdc", "StreamingLatest.scala")), "UTF-8")
+    assert("""StageDirs\.fresh\(""".r.findAllMatchIn(replay).size == 1,
+      "StreamingLatest takes a fresh dir only in its replay runner")
+  }
+
   test("only Sessions builds a session") {
     assert(mainFilesMatching("""SparkSession\.builder""") == Set("Sessions.scala"))
   }
