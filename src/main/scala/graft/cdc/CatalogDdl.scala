@@ -20,10 +20,11 @@ object CatalogDdl {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // last (session, db) -> sfDir registered, so the several SQL-surface
-  // queries in one session don't re-run 10 DROP+CREATE DDLs each — the
-  // registration is idempotent per (session, db, sfDir) and only
-  // re-executes when the data directory actually changes
+  // last (Spark context, db) -> sfDir registered, so the several
+  // SQL-surface queries of a context's sessions don't re-run 10
+  // DROP+CREATE DDLs each — the catalog lives in the context's shared
+  // state, so the registration is idempotent per (context, db, sfDir)
+  // and only re-executes when the data directory actually changes
   // keyed on the sharedState REFERENCE (not identityHashCode, which can
   // be reused after GC and would skip registration against a fresh empty
   // catalog — same fix as TextOps.pairsCache)

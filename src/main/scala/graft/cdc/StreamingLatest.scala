@@ -93,6 +93,11 @@ object StreamingLatest {
   /** The streaming half of a replay: the frame, its output mode, its sink. */
   private[graft] final case class Query[T](frame: Dataset[T], mode: String, sink: Sink)
 
+  /** How a replay writes its checkpoint (see [[replay]]). */
+  private[graft] val CheckpointConf = Seq(
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFileManager].getName)
+
   /** The one streaming lifecycle: allocate a [[Run]] dir, build the
     * query, start it under `Trigger.AvailableNow`, wait until it has
     * drained its source, read the result back, clean up.
@@ -102,10 +107,16 @@ object StreamingLatest {
     *    checkpoint as the state-store partition count for the
     *    checkpoint's lifetime, so callers derive it from the replayed
     *    volume ([[graft.Tuning.statePartitions]]), never from the session.
-    *  - Checkpoint-file checksums off. They double the WAL/commit writes
-    *    per micro-batch to guard long-lived checkpoints against disk
-    *    corruption; a replay's checkpoint lives for seconds and is
-    *    deleted. A long-lived deployment should leave them on.
+    *  - [[CheckpointConf]]: checkpoint-file checksums off, and every
+    *    checkpoint file written through [[LocalCheckpointFileManager]].
+    *    Checksums double the WAL/commit writes per micro-batch to guard
+    *    long-lived checkpoints against disk corruption; a replay's
+    *    checkpoint lives for seconds and is deleted. A long-lived
+    *    deployment should leave them on. The manager exists because
+    *    there is no native Hadoop: Spark's default manager then shells
+    *    out to `chmod` on every create and mkdir and to `readlink` twice
+    *    per rename, ~29 ms per atomic write, which was most of each
+    *    batch's WAL, commit and state-store commit time.
     *  - The trailing no-data micro-batch. It exists to advance the
     *    watermark after the last data batch — evicting state, firing
     *    timeouts and timers, finalizing append-mode windows, sessions
@@ -129,9 +140,7 @@ object StreamingLatest {
     * session. */
   private[graft] def replay[T](spark: SparkSession, parts: Int, keepNoDataBatch: Boolean,
       layout: StateLayout)(query: Run => Query[T])(readBack: Run => DataFrame): DataFrame = {
-    val conf = Seq(
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") ++
+    val conf = Seq("spark.sql.shuffle.partitions" -> parts.toString) ++ CheckpointConf ++
       (if (keepNoDataBatch) Nil
        else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
       layout.conf
@@ -191,17 +200,20 @@ object StreamingLatest {
     * a Round20OpsSpec test. */
   private def cleanupCkpt(spark: SparkSession, run: Run): Unit = {
     if (spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        .exists(_.contains("RocksDB"))) {
-      // private[sql] at compile time, public in bytecode (Scala access
-      // modifiers don't survive erasure) — reflection is the supported
-      // way to reach it from outside the spark.sql package tree
-      val ss = Class.forName(
-        "org.apache.spark.sql.execution.streaming.state.StateStore$")
-      ss.getMethod("unloadAll").invoke(ss.getField("MODULE$").get(null))
-    }
+        .exists(_.contains("RocksDB"))) unloadStateStores()
     val out = Paths.get(run.out)
     listDir(run.dir).filter(_ != out).foreach(graft.StageDirs.rm)
     if (!Files.exists(out)) Files.deleteIfExists(run.dir)
+  }
+
+  /** `StateStore.unloadAll()`: closes every state store provider loaded in this JVM. */
+  private[graft] def unloadStateStores(): Unit = {
+    // private[sql] at compile time, public in bytecode (Scala access
+    // modifiers don't survive erasure) — reflection is the supported
+    // way to reach it from outside the spark.sql package tree
+    val ss = Class.forName(
+      "org.apache.spark.sql.execution.streaming.state.StateStore$")
+    ss.getMethod("unloadAll").invoke(ss.getField("MODULE$").get(null))
   }
 
   private def listDir(dir: Path): Seq[Path] = {

@@ -345,10 +345,14 @@ object SqlSurface {
   def columnDefault(spark: SparkSession, sfDir: String): DataFrame = {
     CatalogDdl.registerStarSchema(spark, sfDir)
     // one location per context: DROP TABLE keeps an external table's
-    // files, so the old rows are cleared before the table is recreated
+    // files, so the old rows are cleared before the table is recreated;
+    // the emptied dir is re-created because CREATE TABLE probes the
+    // location for a streaming-sink log and logs a stack trace when it
+    // is missing
     val loc = graft.StageDirs.location(spark, "graft-def", sfDir)
     spark.sql("DROP TABLE IF EXISTS graft.orders_def")
     graft.StageDirs.rm(loc.resolve("t"))
+    java.nio.file.Files.createDirectories(loc.resolve("t"))
     spark.sql(
       s"""CREATE TABLE graft.orders_def (
          |  o_orderkey BIGINT,

@@ -42,7 +42,7 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the StateStore.unloadAll reflective lookup in cleanupCkpt resolves") {
-    // mirrors the exact lookup cleanupCkpt performs — if Spark renames
+    // mirrors the exact lookup unloadStateStores performs — if Spark renames
     // either piece, this fails here instead of inside a query teardown
     val ss = Class.forName(
       "org.apache.spark.sql.execution.streaming.state.StateStore$")

@@ -148,4 +148,29 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val want = math.round(perYear.foldLeft(0.0)(_ + _) * 10000) / 10000.0
     assert(row.getDouble(2) == want)
   }
+
+  test("sql_column_default: two runs log no FileNotFoundException and fill the declared defaults") {
+    val s = spark
+    import s.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toSeq
+    val (log, runs) = LogCapture.during {
+      Seq.fill(2)(rows(SqlSurface.columnDefault(spark, sf)))
+    }
+    assert(!log.contains("FileNotFoundException"), log)
+    val o = Tables.orders(spark, sf)
+    val want = rows(o.filter($"o_orderkey" % 3 === 0)
+        .select(lit("backfill").as("channel"), lit(0).as("priority_boost"),
+          $"o_orderkey", $"o_totalprice")
+      .unionByName(o.filter($"o_orderkey" % 3 === 1)
+        .select(lit("live").as("channel"),
+          when($"o_orderpriority" === "1-URGENT", 1).otherwise(0).as("priority_boost"),
+          $"o_orderkey", $"o_totalprice"))
+      .groupBy($"channel", $"priority_boost")
+      .agg(count(lit(1)), min($"o_orderkey".cast("long")),
+        sum($"o_totalprice".cast("double").cast("decimal(18,4)")).cast("double"))
+      .orderBy($"channel", $"priority_boost"))
+    assert(runs.forall(_ == want) && want.nonEmpty)
+  }
 }

@@ -54,6 +54,32 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpoint resume (R18): restart picks up only new files, final state correct") {
+    resumeScenario()
+  }
+
+  // The scenario again under the replay runner's checkpoint conf, on
+  // each state store provider the runner uses: recovery reads offsets,
+  // commits and state written through the replay checkpoint manager.
+  for ((provider, layout) <- Seq(
+      "HDFS" -> Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"),
+      "RocksDB + changelog" -> StreamingLatest.StateLayout.RocksDb.conf))
+    test(s"checkpoint resume through the replay checkpoint manager on the $provider provider") {
+      val ckpt = Tuning.withConf(spark, StreamingLatest.CheckpointConf ++ layout: _*) {
+        try resumeScenario() finally StreamingLatest.unloadStateStores()
+      }
+      // Spark's default manager writes through Hadoop's checksummed
+      // local FileContext, which leaves a .crc sidecar per file
+      val sidecars = Seq("offsets", "commits").flatMap { d =>
+        val s = java.nio.file.Files.list(ckpt.resolve(d))
+        try s.toArray.toSeq.map(_.toString).filter(_.endsWith(".crc")) finally s.close()
+      }
+      assert(sidecars.isEmpty, s"written by Spark's default checkpoint manager: $sidecars")
+    }
+
+  /** Replays half the log into a checkpoint, appends the other half and
+    * resumes; returns the checkpoint dir. */
+  private def resumeScenario(): java.nio.file.Path = {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
@@ -105,6 +131,7 @@ class StreamingSpec extends AnyFunSuite {
     // appended by run 2 reflects only keys whose latest changed or arrived
     assert(afterSecond - afterFirst <=
       secondHalf.select($"user_id").distinct().count())
+    java.nio.file.Paths.get(ckpt)
   }
 
   test("derived state-partition count is checkpoint-pinned: a grown source keeps the launch count, correctly") {
