@@ -31,7 +31,7 @@ object Bench {
     // below) so concurrent bench runs can't clobber each other
     val warmDir = java.nio.file.Files.createTempDirectory("bench-warmup")
     val warm = spark.read.parquet(s"$sfDir/region.parquet")
-    warm.count()
+    val warmRows = warm.count()
     warm.limit(1).write.mode("overwrite").parquet(s"$warmDir/wu.parquet")
     // Pre-build every staged input (the event log and the format/layout
     // copies of fixture tables): a production consumer reads sources that
@@ -93,62 +93,54 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => () }
     // ...and one throwaway micro-batch so streaming planner + state-store
     // class loading (session startup, same as the codegen warm-up above)
-    // doesn't land on whichever streaming query runs first.
+    // doesn't land on whichever streaming query runs first. The warm-up
+    // streams run through the queries' own lifecycle
+    // (StreamingLatest.replay), so they warm the path the queries take.
     var calibStream = -1.0  // -1 = probe failed; consumers must not divide by it
     try {
-      import org.apache.spark.sql.functions.{session_window, col, count}
+      import org.apache.spark.sql.functions.{session_window, col, count, lit}
+      import graft.cdc.StreamingLatest.{Query, Sink, StateLayout, replay}
+      val parts = Tuning.statePartitions(warmRows)
       // one stateless-dedup batch (state-store machinery) ...
-      val wq = spark.readStream.schema(warm.schema)
-        .parquet(s"$warmDir/wu.parquet")
-        .dropDuplicates()
-        .writeStream.format("noop")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$warmDir/ckpt")
-        .start()
-      wq.awaitTermination()
-      // ...and one watermarked session-window batch through a foreachBatch
-      // parquet sink: warms the streaming-aggregate planner and the
+      def dedupBatch(): Unit =
+        replay(spark, parts, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+          Query(spark.readStream.schema(warm.schema).parquet(s"$warmDir/wu.parquet")
+            .dropDuplicates(), "append", Sink.Discard)
+        }(_ => spark.emptyDataFrame)
+      dedupBatch()
+      // ...and one watermarked session-window batch through the parquet
+      // append sink: warms the streaming-aggregate planner and the
       // parquet-sink commit path inside a streaming context (otherwise
       // both land on whichever streaming query runs first)
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"))
         .limit(4)
       ev.write.mode("overwrite").parquet(s"$warmDir/ev.parquet")
-      val wq2 = spark.readStream.schema(ev.schema)
-        .parquet(s"$warmDir/ev.parquet")
-        .withWatermark("ts", "1 hour")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(org.apache.spark.sql.functions.lit(1)))
-        .writeStream.outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$warmDir/ckpt2")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("append").parquet(s"$warmDir/wout.parquet")
-        }
-        .start()
-      wq2.awaitTermination()
-      // Streaming calibration probe: a FIXED stateful AvailableNow
-      // micro-query (same shape as the wq warm-up just above, so its
-      // machinery is warm), timed min-of-2 over fresh checkpoints. The
-      // batch calib_s below anchors CPU-throughput regime only — this
-      // round measured the streaming floor swinging 33.7→46.0 s between
-      // runs whose batch calibration IMPROVED (0.40→0.20 s): the
-      // micro-batch lifecycle wobbles on a scheduler/latency axis the
-      // throughput probe cannot see, so it gets its own anchor.
+      replay(spark, parts, keepNoDataBatch = true, StateLayout.SessionDefault) { _ =>
+        Query(spark.readStream.schema(ev.schema).parquet(s"$warmDir/ev.parquet")
+          .withWatermark("ts", "1 hour")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1))), "append", Sink.Append)
+      } { run =>
+        // nothing to read back; dropping the output lets cleanup remove the run dir
+        StageDirs.rm(java.nio.file.Paths.get(run.out))
+        spark.emptyDataFrame
+      }
+      // Streaming calibration probe: the FIXED stateful dedup batch just
+      // above (its machinery is warm), timed min-of-2, each over a fresh
+      // checkpoint. The batch calib_s below anchors CPU-throughput regime
+      // only — this round measured the streaming floor swinging
+      // 33.7→46.0 s between runs whose batch calibration IMPROVED
+      // (0.40→0.20 s): the micro-batch lifecycle wobbles on a
+      // scheduler/latency axis the throughput probe cannot see, so it
+      // gets its own anchor.
       calibStream = {
-        def sprobe(tag: String): Double = {
+        def sprobe(): Double = {
           val t0 = System.nanoTime()
-          val q = spark.readStream.schema(warm.schema)
-            .parquet(s"$warmDir/wu.parquet")
-            .dropDuplicates()
-            .writeStream.format("noop")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"$warmDir/ckpt-cal-$tag")
-            .start()
-          q.awaitTermination()
+          dedupBatch()
           (System.nanoTime() - t0) / 1e9
         }
-        math.min(sprobe("a"), sprobe("b"))
+        math.min(sprobe(), sprobe())
       }
     } catch { case scala.util.control.NonFatal(_) => () }
     finally StageDirs.rm(warmDir)

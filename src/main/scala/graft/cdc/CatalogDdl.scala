@@ -27,7 +27,7 @@ object CatalogDdl {
   // and only re-executes when the data directory actually changes
   // keyed on the sharedState REFERENCE (not identityHashCode, which can
   // be reused after GC and would skip registration against a fresh empty
-  // catalog — same fix as TextOps.pairsCache)
+  // catalog — the same rule as graft.Materialize.memo)
   private val registered =
     new java.util.concurrent.ConcurrentHashMap[(AnyRef, String), String]()
 

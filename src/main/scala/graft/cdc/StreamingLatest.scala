@@ -1017,7 +1017,7 @@ object StreamingLatest {
           round(col("last_value"), 4).as("last_value"))
         .orderBy(col("user_id"))
         // materialize before cleanup deletes the snapshot dirs the plan reads
-        .localCheckpoint(true)
+        .transform(graft.Materialize.reuse)
     }
   }
 
@@ -1050,6 +1050,6 @@ object StreamingLatest {
           round(col("value.sum").cast("double"), 4).as("sum_value"))
         .orderBy(col("user_id"))
         // materialize BEFORE cleanup deletes the checkpoint the reader scans
-        .localCheckpoint(true)
+        .transform(graft.Materialize.reuse)
     }
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Random-hyperplane LSH over the embedding column — the scale path for
   * cosine-based operations (the brute-force baseline is
@@ -60,7 +60,7 @@ object EmbedLsh {
     val emb = Tables.embeddings(spark, sfDir).select($"vec_id", $"embedding")
     // materialize the banded id table once — both candidate join sides
     // consume it (hyperplane hashing ×2 otherwise)
-    val banded = withBuckets(emb).localCheckpoint()
+    val banded = Materialize.reuse(withBuckets(emb))
     val a = banded.select($"vec_id".as("vec_a"), $"table_id", $"bucket")
     val b = banded.select($"vec_id".as("vec_b"), $"table_id", $"bucket")
     val pairs = a.join(b, Seq("table_id", "bucket"))
@@ -99,7 +99,7 @@ object EmbedLsh {
     val emb = Tables.embeddings(spark, sfDir).select($"vec_id", $"embedding")
     // materialize the banded id table once — both candidate join sides
     // consume it (hyperplane hashing ×2 otherwise)
-    val banded = withBuckets(emb).localCheckpoint()
+    val banded = Materialize.reuse(withBuckets(emb))
     // Multi-probe (Lv et al., VLDB'07): probe the exact bucket PLUS every
     // Hamming-1 perturbation (flip each of the BitsPerTable sign bits).
     // Only the probe side fans out — (1+bits)×tables ≈ 84 broadcast rows —

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Link-graph analytics over the near-duplicate pair graph — the corpus-
   * quality signal family (a web-crawl pipeline scores documents by link
   * centrality before sampling training data).
@@ -48,54 +50,41 @@ object GraphOps {
   private[graft] def pageRankOnPairs(
       spark: SparkSession, pairs: DataFrame, iters: Int = 6): DataFrame = {
     import spark.implicits._
-    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .cache()
-    // materialize at full parallelism BEFORE resizing shuffle partitions
-    // (the near-dup pair join is the expensive stage; the rank rounds
-    // below are sized to the materialized edge count via
-    // graft.Tuning.roundPartitions — derived, not a fixture literal) —
-    // same staging as connectedComponents
-    val edgeCnt = edges.count()
-    // cached frames are released in the finally block (not the success
-    // path) so a failed iteration can't leave them pinned for the session
-    var edgesD: DataFrame = null
-    try graft.Tuning.withRoundPartitions(spark, edgeCnt) {
+    Materialize.withSymmetricEdges(spark, pairs) { (edges, _) =>
       // symmetric edges: out-degree = in-degree and every node has both,
       // so the per-iteration aggregate covers exactly the node set (no
       // dangling-node mass correction needed)
       val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-      edgesD = edges.join(deg, "src")
-        .select($"src", $"dst", $"outdeg")
-        .cache()
-      edgesD.count()
-      val n = edgesD.select($"src").distinct().count()
-      require(n > 0, "empty pair graph")
-      val initNano = 1000000000L / n  // floor(1e9 / N)
-      val baseNano = 150000000L / n   // floor(0.15e9 / N)
-      var rank = edgesD.select($"src".as("id")).distinct()
-        .select($"id", lit(initNano).as("rank_nano"))
-      for (_ <- 1 to iters) {
-        rank = edgesD.join(rank, edgesD("src") === rank("id"))
-          .select($"dst", expr("rank_nano div outdeg").as("c"))
-          .groupBy($"dst").agg(sum($"c").as("s"))
-          .select($"dst".as("id"),
-            (lit(baseNano) + expr("(85 * s) div 100")).as("rank_nano"))
-      }
-      val out = rank
-        .select($"id".as("doc_id"), $"rank_nano",
-          // intentional global window: one final rank pass over the
-          // node-sized result (near-dup members only, orders of
-          // magnitude below corpus size); a multi-billion-node graph
-          // would swap this for a range-partitioned prefix rank
-          row_number().over(Window.orderBy($"rank_nano".desc, $"id"))
-            .as("pr_pos"))
-        .orderBy($"doc_id")
-        .localCheckpoint(true)
-      out
-    } finally {
-      if (edgesD != null) edgesD.unpersist(false)
-      edges.unpersist(false)
+      val edgesD = Materialize.cached(edges.join(deg, "src")
+        .select($"src", $"dst", $"outdeg"))
+      // released in finally (not on the success path) so a failed
+      // iteration can't leave it pinned for the session
+      try {
+        edgesD.count()
+        val n = edgesD.select($"src").distinct().count()
+        require(n > 0, "empty pair graph")
+        val initNano = 1000000000L / n  // floor(1e9 / N)
+        val baseNano = 150000000L / n   // floor(0.15e9 / N)
+        var rank = edgesD.select($"src".as("id")).distinct()
+          .select($"id", lit(initNano).as("rank_nano"))
+        for (_ <- 1 to iters) {
+          rank = edgesD.join(rank, edgesD("src") === rank("id"))
+            .select($"dst", expr("rank_nano div outdeg").as("c"))
+            .groupBy($"dst").agg(sum($"c").as("s"))
+            .select($"dst".as("id"),
+              (lit(baseNano) + expr("(85 * s) div 100")).as("rank_nano"))
+        }
+        rank
+          .select($"id".as("doc_id"), $"rank_nano",
+            // intentional global window: one final rank pass over the
+            // node-sized result (near-dup members only, orders of
+            // magnitude below corpus size); a multi-billion-node graph
+            // would swap this for a range-partitioned prefix rank
+            row_number().over(Window.orderBy($"rank_nano".desc, $"id"))
+              .as("pr_pos"))
+          .orderBy($"doc_id")
+          .transform(Materialize.reuse)
+      } finally Materialize.release(edgesD)
     }
   }
 
@@ -157,11 +146,7 @@ object GraphOps {
       spark: SparkSession, pairs: DataFrame, iters: Int = 4,
       frontierMinEdges: Long = 16384): DataFrame = {
     import spark.implicits._
-    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .cache()
-    val edgeCnt = edges.count()
-    try graft.Tuning.withRoundPartitions(spark, edgeCnt) {
+    Materialize.withSymmetricEdges(spark, pairs) { (edges, edgeCnt) =>
       if (edgeCnt < frontierMinEdges) {
         // dense form: one lazy unrolled plan (see scaladoc)
         var labels = edges.select($"src".as("id")).distinct()
@@ -176,9 +161,9 @@ object GraphOps {
         labels
           .select($"id".as("doc_id"), $"lbl".as("community"))
           .orderBy($"doc_id")
-          .localCheckpoint(true)
+          .transform(Materialize.reuse)
       } else frontierLpa(spark, edges, iters)
-    } finally edges.unpersist(false)
+    }
   }
 
   /** The frontier form of [[labelPropagationOnPairs]] (edges must be the
@@ -193,7 +178,7 @@ object GraphOps {
     import spark.implicits._
     {
       var labels = edges.select($"src".as("id")).distinct()
-        .select($"id", $"id".as("lbl")).localCheckpoint(true)
+        .select($"id", $"id".as("lbl")).transform(Materialize.reuse)
       // round-1 frontier: every node (labels were just initialized) —
       // represented as None so round 1 takes the dense path (the
       // all-node semi/anti joins would be pure overhead there)
@@ -206,7 +191,7 @@ object GraphOps {
         // changed; the synchronous update has no other input)
         val affected = changed.map(ch =>
           edges.join(ch, edges("dst") === ch("cid"), "left_semi")
-            .select($"src".as("aid")).distinct().localCheckpoint(true))
+            .select($"src".as("aid")).distinct().transform(Materialize.reuse))
         val voteEdges = affected.fold(edges)(a =>
           edges.join(a, edges("src") === a("aid"), "left_semi"))
         val votes = voteEdges
@@ -215,22 +200,21 @@ object GraphOps {
           .groupBy($"src")
           .agg(min(struct((-$"c").as("nc"), $"lbl".as("l"))).as("m"))
           .select($"src".as("id"), $"m.l".as("lbl"))
-          .localCheckpoint(true)
+          .transform(Materialize.reuse)
         // every node has ≥1 edge (symmetric union), so the dense round's
         // vote output covers exactly the node set — no anti-join needed
         val next = affected.fold(votes)(a =>
           labels.join(a, labels("id") === a("aid"), "left_anti")
             .union(votes)
-            .localCheckpoint(true))
+            .transform(Materialize.reuse))
         val delta = votes.join(labels.select($"id", $"lbl".as("prev")), "id")
           .filter($"lbl" =!= $"prev")
           .select($"id".as("cid"))
-          .localCheckpoint(true)
+          .transform(Materialize.reuse)
         changedCnt = delta.count()
         // free the round's scratch blocks now that next/delta exist
-        (Seq(labels) ++ changed ++ affected ++
-          (if (affected.isDefined) Seq(votes) else Nil))
-          .foreach(graft.SessionCache.freeLocalCheckpoint)
+        Materialize.release(Seq(labels) ++ changed ++ affected ++
+          (if (affected.isDefined) Seq(votes) else Nil): _*)
         labels = next
         changed = Some(delta)
         i += 1
@@ -238,14 +222,11 @@ object GraphOps {
       val out = labels
         .select($"id".as("doc_id"), $"lbl".as("community"))
         .orderBy($"doc_id")
-        .localCheckpoint(true)
-      (Seq(labels) ++ changed).foreach(graft.SessionCache.freeLocalCheckpoint)
+        .transform(Materialize.reuse)
+      Materialize.release(Seq(labels) ++ changed: _*)
       out
     }
   }
-
-  private val orientedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** The degree-oriented edge set of the co-purchase graph, staged ONCE
     * per (session, sfDir) — the same shared-stage rule as
@@ -254,14 +235,10 @@ object GraphOps {
     * pipeline is the dominant build stage, consumed three times by the
     * wedge/closure joins plus the vertex/edge counts, and a 100 TB
     * pipeline would stage the oriented edge list to parquet before its
-    * graph passes. The cache holds one eagerly-materialized
-    * localCheckpoint per key (bounded, evicted checkpoints unpersisted
-    * eagerly; keyed on the session REFERENCE — see TextOps.pairsCache
-    * for why not identityHashCode). */
-  private[graft] def orientedEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.SessionCache.prune(orientedCache, (spark, sfDir))(
-      graft.SessionCache.freeLocalCheckpoint)
-    orientedCache.computeIfAbsent((spark, sfDir), _ => {
+    * graph passes. The memo holds one lineage-cut frame per key
+    * ([[Materialize.memo]]). */
+  private[graft] def orientedEdges(spark: SparkSession, sfDir: String): DataFrame =
+    Materialize.memo(spark, ("oriented_edges", sfDir)) {
       import spark.implicits._
       val po = graft.Tables.lineitem(spark, sfDir)
         .select($"l_orderkey".as("ok"), $"l_partkey".as("p")).distinct()
@@ -280,9 +257,8 @@ object GraphOps {
           when(struct($"da", $"pa") < struct($"db", $"pb"), $"pa").otherwise($"pb").as("lo"),
           when(struct($"da", $"pa") < struct($"db", $"pb"), $"pb").otherwise($"pa").as("hi"),
           when(struct($"da", $"pa") < struct($"db", $"pb"), $"db").otherwise($"da").as("dhi"))
-        .localCheckpoint(true)
-    })
-  }
+        .transform(Materialize.reuse)
+    }
 
   /** `graph_triangle_count`: distributed triangle counting over the
     * co-purchase graph (parts co-occurring in ≥2 orders — the
@@ -388,14 +364,7 @@ object GraphOps {
   private[graft] def bfsOnPairs(
       spark: SparkSession, pairs: DataFrame, rounds: Int = 4): DataFrame = {
     import spark.implicits._
-    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .cache()
-    // materialize at full parallelism, then size the relaxation-round
-    // shuffles to the edge count (graft.Tuning.roundPartitions — derived,
-    // not a fixture literal) — same staging economics as pageRank
-    val edgeCnt = edges.count()
-    try graft.Tuning.withRoundPartitions(spark, edgeCnt) {
+    Materialize.withSymmetricEdges(spark, pairs) { (edges, _) =>
       // Each relaxation round consumes `dist` TWICE (the union carry-over
       // and the edge join), so a lazy chain doubles the plan per round —
       // measured at sf0.1 as a 389-operator tree (2^rounds duplicated
@@ -409,22 +378,22 @@ object GraphOps {
       var dist = edges.select($"src".as("id")).distinct()
         .filter($"id" % 25 === 0)
         .select($"id", lit(0).as("hops"))
-        .localCheckpoint(true)
+        .transform(Materialize.reuse)
       for (_ <- 1 to rounds) {
         val next = dist.union(
             edges.join(dist, edges("src") === dist("id"))
               .select(edges("dst").as("id"), (dist("hops") + 1).as("hops")))
           .groupBy($"id").agg(min($"hops").as("hops"))
-          .localCheckpoint(true)
-        graft.SessionCache.freeLocalCheckpoint(dist)
+          .transform(Materialize.reuse)
+        Materialize.release(dist)
         dist = next
       }
       // the returned frame reads the LAST round's checkpoint only — no
       // final re-materialization (the old trailing localCheckpoint
       // re-copied the node-sized result a second time), and lineage is
-      // already cut so the finally-block unpersist of `edges` is safe
+      // already cut so releasing `edges` when the scope ends is safe
       dist.select($"id".as("doc_id"), $"hops")
         .orderBy($"doc_id")
-    } finally edges.unpersist(false)
+    }
   }
 }

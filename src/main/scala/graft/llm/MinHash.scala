@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** MinHash + LSH near-duplicate detection over `documents`
   * (SURVEY.md §2.2 `dedup_fuzzy_minhash`; the standard
@@ -79,7 +79,7 @@ object MinHash {
     // and both verification joins (4 consumers), and each re-derivation
     // repeats the explode + signature shuffle. Same staging rationale as
     // the tokenized corpus in TextOps.ngramJaccardPairs.
-    val sigs = signatures(Tables.documents(spark, sfDir)).localCheckpoint()
+    val sigs = Materialize.reuse(signatures(Tables.documents(spark, sfDir)))
     // candidate generation on (doc_id, band, band_hash) only — the 32-long
     // signature arrays do not ride through the band join's shuffle; they
     // are joined back just for the verification of the (few) candidates.

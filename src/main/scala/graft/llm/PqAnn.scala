@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Product-quantization (PQ) approximate nearest neighbour — the third
   * ANN scale path next to the hyperplane LSH ([[EmbedLsh]]) and the
@@ -46,9 +46,6 @@ object PqAnn {
   val ShortList = 1000
   val LloydIters = 2
 
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** (sub, sub-vector) rows: one per subspace per input row. */
   private def subVecs(df: DataFrame): DataFrame =
     df.select(col("vec_id"), posexplode(transform(
@@ -88,7 +85,7 @@ object PqAnn {
         .groupBy(col("sub"), col("code"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
           x => x.getField("cv")).as("cvec"))
-        .localCheckpoint(true)
+        .transform(Materialize.reuse)
     }
     cents
   }
@@ -108,20 +105,13 @@ object PqAnn {
     // artifact a production PQ deployment builds offline (the
     // GraphOps.orientedEdges shared-stage rule): the two full-corpus
     // Lloyd passes are index-build cost, not per-query cost; encode/
-    // ADC/re-rank stay in the per-query path. The cached frame is the
-    // refine loop's final eager localCheckpoint (128 rows, bounded).
-    // cache hygiene: stopped-session sweep + per-entry eviction (never
-    // clear()) — the idiom this cache pioneered, now shared via
-    // SessionCache so every frame memo behaves identically; evicted
-    // codebooks also release their checkpoint blocks eagerly here
-    // instead of waiting on GC + ContextCleaner
-    graft.SessionCache.prune(codebookCache, (spark, sfDir))(
-      graft.SessionCache.freeLocalCheckpoint)
-    val cents = codebookCache.computeIfAbsent((spark, sfDir), _ => {
+    // ADC/re-rank stay in the per-query path. The memoized frame is the
+    // refine loop's final lineage-cut frame (128 rows, bounded).
+    val cents = Materialize.memo(spark, ("pq_codebook", sfDir)) {
       val seeds = subVecs(emb.filter($"vec_id" < NumCodes))
         .select($"sub", $"vec_id".cast("int").as("code"), $"svec".as("cvec"))
       refine(sv, seeds, LloydIters)
-    })
+    }
     // encode: nearest sub-centroid per (vector, subspace)
     val codes = sv.filter($"vec_id" =!= 0)
       .join(broadcast(cents), "sub")

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** SimHash near-duplicate detection (Charikar random-hyperplane sketch in
   * its Manku/Jain/Sarma web-dedup form): each document gets a 64-bit
@@ -45,7 +45,7 @@ object SimHash {
     import spark.implicits._
     // materialize the fingerprint table once — both banded join sides
     // re-derive it otherwise (explode + bit-vote shuffle ×2)
-    val fp = fingerprints(Tables.documents(spark, sfDir)).localCheckpoint()
+    val fp = Materialize.reuse(fingerprints(Tables.documents(spark, sfDir)))
     val chunkCols = (0 until Chunks).map { i =>
       struct(lit(i).as("chunk_idx"),
         shiftright($"simhash", i * ChunkBits).bitwiseAND(lit((1L << ChunkBits) - 1))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Text-pipeline operators over `documents` (SURVEY.md §2.2 Group C +
   * the LLM-training-data extension surface).
@@ -110,7 +110,7 @@ object TextOps {
       .filter(length($"word") >= 2)
       .groupBy($"word").agg(count(lit(1)).as("wc"))
       .select(concat(lit(" "), regexp_replace($"word", "(.)", "$1 ")).as("s"), $"wc")
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     def pairCounts(w: DataFrame): DataFrame =
       w.select($"wc", split(trim($"s"), " ").as("t"))
         .filter(size($"t") >= 2)
@@ -129,11 +129,11 @@ object TextOps {
       w.withColumn("k", lit(1))
         .join(broadcast(top.select(lit(1).as("k"), $"a", $"b")), "k")
         .select(replace(replace($"s", pat, rep), pat, rep).as("s"), $"wc")
-        .localCheckpoint()
+        .transform(Materialize.reuse)
     }
-    val t1 = topPair(pairCounts(vocab0)).localCheckpoint()
+    val t1 = Materialize.reuse(topPair(pairCounts(vocab0)))
     val v1 = applyMerge(vocab0, t1)
-    val t2 = topPair(pairCounts(v1)).localCheckpoint()
+    val t2 = Materialize.reuse(topPair(pairCounts(v1)))
     val v2 = applyMerge(v1, t2)
     val t3 = topPair(pairCounts(v2))
     def row(r: Int, t: DataFrame) = t.select(lit(r).as("merge_rank"),
@@ -179,27 +179,17 @@ object TextOps {
     * the dominant shared stage, and a 100 TB pipeline would stage the
     * verified pair set to parquet before running its downstream graph
     * passes — same structure, same reason as [[graft.cdc.StreamingLatest
-    * .stagedEventLog]]. The cache holds one eagerly-materialized
-    * localCheckpoint per key (bounded: one per scale dir per session;
-    * blocks are reclaimed by the ContextCleaner when the session dies). */
+    * .stagedEventLog]]. The memo holds one lineage-cut frame per key
+    * ([[Materialize.memo]]): one per scale dir and τ per session. A
+    * stopped session's entry has its blocks freed eagerly, at the next
+    * memo call, not when the ContextCleaner gets to it; an entry evicted
+    * past the memo's cap is only dropped, since a live holder may still
+    * read its blocks. */
   private[graft] def ngramJaccardPairs(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    // bound the cache for long-lived multi-session JVMs: entries keyed by
-    // dead sessions would otherwise pin checkpoint blocks until exit.
-    // Keyed on the session REFERENCE (not identityHashCode, which can be
-    // reused after a session is GC'd and hand a new session a frame
-    // bound to a dead SparkContext); evicted checkpoints are unpersisted
-    // eagerly rather than waiting on GC + ContextCleaner, and live
-    // sessions' entries survive another session crossing the cap.
-    graft.SessionCache.prune(pairsCache, (spark, sfDir, threshold))(
-      graft.SessionCache.freeLocalCheckpoint)
-    pairsCache.computeIfAbsent(
-      (spark, sfDir, threshold),
-      _ => ngramJaccardPairsUncached(spark, sfDir, threshold).localCheckpoint(true))
-  }
-
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Double), DataFrame]()
+      threshold: Double = 0.5): DataFrame =
+    Materialize.memo(spark, ("ngram_pairs", sfDir, threshold)) {
+      Materialize.reuse(ngramJaccardPairsUncached(spark, sfDir, threshold))
+    }
 
   private[graft] def ngramJaccardPairsUncached(spark: SparkSession, sfDir: String,
       threshold: Double = 0.5): DataFrame = {
@@ -213,7 +203,7 @@ object TextOps {
     // Materialize the tokenized corpus ONCE: the pair pipeline consumes
     // `sets` four times (both prefix-explode sides + both verify
     // broadcasts) and recomputing the shingle hashing per consumer is
-    // the dominant redundant work. localCheckpoint stores the computed
+    // the dominant redundant work. Materialize.reuse stores the computed
     // blocks (memory+disk) and cuts the lineage; blocks are reclaimed by
     // the ContextCleaner when the frame is GC'd. A 100 TB pipeline would
     // stage the tokenized corpus to parquet instead — same idea.
@@ -222,7 +212,7 @@ object TextOps {
         graft.functions.ShingleFunctions
           .word_shingle_hashes($"text", MinHash.ShingleSize, sorted = true).as("toks"))
       .select($"doc_id", $"toks", size($"toks").as("n"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     val prefixLen = ($"n" - ceil($"n" * lit(threshold)) + 1).cast("int")
     val prefixes = sets
       .select($"doc_id", $"n", posexplode(slice($"toks", lit(1), prefixLen)))
@@ -284,58 +274,43 @@ object TextOps {
   private[graft] def connectedComponents(
       spark: SparkSession, pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     import spark.implicits._
-    val edges = pairs.toDF("doc_a", "doc_b")
-      .union(pairs.toDF("doc_a", "doc_b").select($"doc_b", $"doc_a"))
-      .toDF("src", "dst")
-      .cache()
-    // materialize the edge cache BEFORE resizing shuffle partitions:
-    // the pair-graph build (the near-dup join) is the expensive part and
-    // wants the session's full scan/shuffle parallelism — only the
-    // propagation rounds below are sized down, and they scale with the
-    // MATERIALIZED EDGE COUNT (graft.Tuning.roundPartitions; restored
-    // after the fixpoint) — the r17 fix for the fixture-sized literal
-    // this comment used to apologize for
-    val edgeCnt = edges.count()
-    graft.Tuning.withRoundPartitions(spark, edgeCnt) {
+    Materialize.withSymmetricEdges(spark, pairs.toDF("doc_a", "doc_b")) { (edges, _) =>
       var labels = edges.select($"src".as("doc_id"))
         .distinct()
         .select($"doc_id", $"doc_id".as("label"))
-      // Convergence check without a per-round diff join: min-propagation
-      // only ever DECREASES labels, so Σlabel is strictly monotone until
-      // the fixpoint — equal consecutive sums ⟺ no label changed. The
-      // 1-row sum action doubles as the cache materialization.
-      var prevSum = Option.empty[Long]
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        val prop = edges.join(labels, edges("dst") === labels("doc_id"))
-          .select(edges("src").as("doc_id"), col("label"))
-        val next = labels.union(prop)
-          .groupBy($"doc_id").agg(min($"label").as("label"))
-          .cache()
-        val sumNow = Option(next.agg(sum($"label")).first().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        labels.unpersist(false)
-        labels = next
-        converged = prevSum.contains(sumNow)
-        prevSum = Some(sumNow)
-        i += 1
-      }
-      if (!converged)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"connectedComponents exited after maxIter=$maxIter without convergence; " +
-            "labels may not be a fixpoint")
-      // Materialize off the cached lineage (localCheckpoint blocks are
-      // reclaimed by the ContextCleaner on GC) so the last iteration's
-      // cache can be dropped here instead of leaking for the session.
-      val out = labels
-        .select($"doc_id", $"label".as("cluster_id"),
-          ($"doc_id" === $"label").cast(IntegerType).as("is_canonical"))
-        .orderBy($"doc_id")
-        .localCheckpoint(true)
-      labels.unpersist(false)
-      edges.unpersist(false)
-      out
+      try {
+        // Convergence check without a per-round diff join: min-propagation
+        // only ever DECREASES labels, so Σlabel is strictly monotone until
+        // the fixpoint — equal consecutive sums ⟺ no label changed. The
+        // 1-row sum action doubles as the cache materialization.
+        var prevSum = Option.empty[Long]
+        var converged = false
+        var i = 0
+        while (!converged && i < maxIter) {
+          val prev = labels
+          val prop = edges.join(prev, edges("dst") === prev("doc_id"))
+            .select(edges("src").as("doc_id"), col("label"))
+          labels = Materialize.cached(prev.union(prop)
+            .groupBy($"doc_id").agg(min($"label").as("label")))
+          val sumNow = try Option(labels.agg(sum($"label")).first().get(0))
+              .map(_.asInstanceOf[Long]).getOrElse(0L)
+            finally Materialize.release(prev)
+          converged = prevSum.contains(sumNow)
+          prevSum = Some(sumNow)
+          i += 1
+        }
+        if (!converged)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"connectedComponents exited after maxIter=$maxIter without convergence; " +
+              "labels may not be a fixpoint")
+        // cut off the cached lineage so the last round's cache can be
+        // dropped here instead of leaking for the session
+        labels
+          .select($"doc_id", $"label".as("cluster_id"),
+            ($"doc_id" === $"label").cast(IntegerType).as("is_canonical"))
+          .orderBy($"doc_id")
+          .transform(Materialize.reuse)
+      } finally Materialize.release(labels)
     }
   }
 
@@ -1101,7 +1076,7 @@ object TextOps {
         graft.functions.ShingleFunctions
           .word_shingle_hashes($"text", MinHash.ShingleSize, sorted = true).as("toks"))
       .select($"doc_id", $"toks", size($"toks").as("n"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     // pruning must never be stricter than the ROUNDED accept rule: the
     // final keep compares containment rounded to 4 decimals, so a pair
     // with true containment in [τ − 5e-5, τ) still rounds up to τ and
@@ -1451,7 +1426,7 @@ object TextOps {
       .agg(min(struct($"doc_id", $"lang", $"n_toks")).as("m"))
       .select($"m.doc_id".as("doc_id"), $"m.lang".as("lang"),
         $"m.n_toks".as("n_toks"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     // intentional global windows: frames are the per-lang aggregate
     // (#langs rows at any corpus size)
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
@@ -1787,7 +1762,7 @@ object TextOps {
     // contrast GraphOps' per-round frees, whose consumers are fully
     // materialized before the free).
     val cxy = pairs.groupBy($"a", $"b").agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     val cx = cxy.groupBy($"a").agg(sum($"c_xy").as("c_x"))
     val cy = cxy.groupBy($"b").agg(sum($"c_xy").as("c_y"))
     // coalesce: empty-corpus sum is NULL where the old count said 0

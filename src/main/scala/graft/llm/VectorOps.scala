@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Vector/similarity operators over `embeddings` (64-dim float vectors).
   *
@@ -227,7 +227,7 @@ object VectorOps {
       .select($"vec_id", posexplode($"embedding").as(Seq("dim", "x")))
       .select($"vec_id", $"dim",
         floor($"x".cast(DoubleType) * 1e6 + 0.5).cast(LongType).as("x_u"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     def iterate(v: DataFrame): DataFrame = {
       val s = e.join(broadcast(v), "dim")
         .groupBy($"vec_id")
@@ -288,10 +288,10 @@ object VectorOps {
       .select($"vec_id", expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT))")
         .as("xu"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     val c0 = v.filter($"vec_id" < K)
       .select($"vec_id".cast(IntegerType).as("cid"), $"xu".as("cu"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     // nearest centroid per vector: the K-row centroid frame folded into
     // ONE array-of-(cid, cu) row and broadcast, so the assignment is a
     // per-row array_min over the K distances — MAP-ONLY. The old form
@@ -324,7 +324,7 @@ object VectorOps {
         .groupBy($"cid")
         .agg(transform(array_sort(collect_list(struct($"dim", $"cu_d"))),
           x => x.getField("cu_d")).as("cu"))
-        .localCheckpoint()
+        .transform(Materialize.reuse)
     val c1 = update(assign(c0))
     val c2 = update(assign(c1))
     val a3 = assign(c2)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * payloads with typed metadata, plus decode / feature-extract /
@@ -533,7 +533,7 @@ object MultiModal {
         rows.map(m => PhashRow(m.media_id, dhashDecoded(syntheticBmp(m.payload))))
       }
       .toDF()
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     val bandCols = (0 until PhashBands).map { i =>
       struct(lit(i).as("band_idx"),
         shiftright($"phash", i * PhashBandBits)

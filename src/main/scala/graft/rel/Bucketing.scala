@@ -2,7 +2,7 @@ package graft.rel
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Bucketed co-located joins — the storage-layout half of the scale
   * story: write both fact tables bucketed (and sorted) by the join key
@@ -110,32 +110,15 @@ object Bucketing {
       .orderBy($"o_orderpriority")
   }
 
-  private val cachedDims =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The customer dim pinned in Spark's in-memory columnar cache, once
     * per (session, sfDir); materialized eagerly so the declared query
     * reads the cache, not the build. */
-  private[graft] def cachedCustomer(spark: SparkSession, sfDir: String): DataFrame = {
-    // evicted frames are unpersisted eagerly EVEN for live sessions
-    // (releaseLive): CacheManager holds a strong ref, so a dropped memo
-    // reference alone would pin executor storage until session stop —
-    // and a persist()-backed frame rebuilds lazily from lineage, so the
-    // eager release is safe for any concurrent holder (unlike the
-    // localCheckpoint-backed memos, which keep the default)
-    graft.SessionCache.prune(cachedDims, (spark, sfDir),
-      releaseLive = true)(_.unpersist())
-    cachedDims.computeIfAbsent((spark, sfDir), _ => {
-      val df = Tables.customer(spark, sfDir)
-        .select(org.apache.spark.sql.functions.col("c_custkey"),
-          org.apache.spark.sql.functions.col("c_nationkey"),
-          org.apache.spark.sql.functions.col("c_mktsegment"),
-          org.apache.spark.sql.functions.col("c_acctbal"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      df.count()
-      df
-    })
-  }
+  private[graft] def cachedCustomer(spark: SparkSession, sfDir: String): DataFrame =
+    Materialize.memo(spark, ("customer_dim", sfDir)) {
+      import org.apache.spark.sql.functions.col
+      Materialize.inMemory(Tables.customer(spark, sfDir)
+        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"), col("c_acctbal")))
+    }
 
   /** `layout_cached_scan`: the in-memory columnar cache as a layout
     * op — the standard treatment for a hot dimension that every query

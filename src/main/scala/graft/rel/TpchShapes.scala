@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Classic TPC-H query shapes adapted to the driver star schema
   * (SURVEY.md §2.2 Group B widening, round 3). The driver tables lack
@@ -211,7 +211,7 @@ object TpchShapes {
       .filter($"l_shipdate" >= ts("1996-01-01") && $"l_shipdate" < ts("1996-04-01"))
       .groupBy($"l_suppkey")
       .agg(round(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 4).as("total_revenue"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     val top = revenue.agg(max($"total_revenue").as("max_revenue"))
     revenue
       .join(broadcast(top), $"total_revenue" === $"max_revenue")
@@ -391,7 +391,7 @@ object TpchShapes {
     val perPart = Tables.lineitem(spark, sfDir)
       .groupBy($"l_partkey")
       .agg(round(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 4).as("part_value"))
-      .localCheckpoint()
+      .transform(Materialize.reuse)
     val thr = perPart.agg(
       (sum($"part_value".cast(DecimalType(18, 4))).cast(DoubleType) * lit(0.0005))
         .as("threshold"))

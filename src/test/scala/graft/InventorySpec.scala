@@ -74,6 +74,25 @@ class InventorySpec extends AnyFunSuite {
       "StreamingLatest takes a fresh dir only in its replay runner")
   }
 
+  // Query work is materialized, released and memoized per session through
+  // one module (graft.Materialize); the dev mains are not engine code.
+  test("only Materialize materializes, releases or memoizes frames") {
+    val sites = mainFilesMatching(
+      """localCheckpoint\(|\.cache\(\)|\.persist\(|unpersist\(|ConcurrentHashMap\[\(SparkSession""")
+      .filterNot(_.startsWith("Dev"))
+    assert(sites == Set("Materialize.scala"),
+      s"materialization outside Materialize: ${(sites - "Materialize.scala").toSeq.sorted}")
+  }
+
+  // Every stream runs through one lifecycle, the replay runner.
+  test("only the replay runner starts a stream") {
+    assert(mainFilesMatching("""\.writeStream""") == Set("StreamingLatest.scala"))
+    val replay = new String(Files.readAllBytes(Paths.get(
+      "src", "main", "scala", "graft", "cdc", "StreamingLatest.scala")), "UTF-8")
+    assert("""\.writeStream""".r.findAllMatchIn(replay).size == 1,
+      "StreamingLatest starts a stream only in its replay runner")
+  }
+
   test("only Sessions builds a session") {
     assert(mainFilesMatching("""SparkSession\.builder""") == Set("Sessions.scala"))
   }
