@@ -108,10 +108,10 @@ object Bench {
             .dropDuplicates(), "append", Sink.Discard)
         }(_ => spark.emptyDataFrame)
       dedupBatch()
-      // ...and one watermarked session-window batch through the parquet
-      // append sink: warms the streaming-aggregate planner and the
-      // parquet-sink commit path inside a streaming context (otherwise
-      // both land on whichever streaming query runs first)
+      // ...and one watermarked session-window batch through the append
+      // sink: warms the streaming-aggregate planner and the sink's
+      // in-engine batch materialization inside a streaming context
+      // (otherwise both land on whichever streaming query runs first)
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"))
         .limit(4)
@@ -121,11 +121,7 @@ object Bench {
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1))), "append", Sink.Append)
-      } { run =>
-        // nothing to read back; dropping the output lets cleanup remove the run dir
-        StageDirs.rm(java.nio.file.Paths.get(run.out))
-        spark.emptyDataFrame
-      }
+      }(_ => spark.emptyDataFrame)
       // Streaming calibration probe: the FIXED stateful dedup batch just
       // above (its machinery is warm), timed min-of-2, each over a fresh
       // checkpoint. The batch calib_s below anchors CPU-throughput regime

@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import org.apache.spark.graftbridge.BlockBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
@@ -44,14 +45,16 @@ object Materialize {
   }
 
   /** Frees each frame's materialized blocks: a cached frame is
-    * unpersisted, a lineage-cut frame's checkpoint blocks are dropped,
-    * anything else is left alone. Best effort: a release that races a
-    * stopping session is swallowed, since the ContextCleaner reclaims
-    * the blocks anyway. */
+    * unpersisted, a lineage-cut frame's checkpoint blocks are dropped
+    * (through [[org.apache.spark.graftbridge.BlockBridge]], which skips
+    * `RDD.unpersist`'s cannot-be-recomputed warning: the release is
+    * intended), anything else is left alone. Best effort: a release that
+    * races a stopping session is swallowed, since the ContextCleaner
+    * reclaims the blocks anyway. */
   def release(dfs: DataFrame*): Unit = dfs.foreach { df =>
     try {
       if (isCached(df)) df.unpersist(blocking = false)
-      else checkpointBlocks(df).foreach(_.unpersist(blocking = false))
+      else checkpointBlocks(df).foreach(BlockBridge.free)
     } catch { case NonFatal(_) => () }
   }
 

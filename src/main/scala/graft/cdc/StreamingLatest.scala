@@ -2,11 +2,11 @@ package graft.cdc
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 /** Structured-Streaming latest-wins materialization — the streaming heart
   * of the reference pipeline (Kafka-Connect poll loop + offset tracking,
@@ -15,12 +15,16 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   *
   *   file source (the CDC-log surrogate) -> watermark -> keyed
   *   flatMapGroupsWithState (latest per key by (ts, event_id)) ->
-  *   foreachBatch append sink, with a checkpoint dir playing the role of
-  *   the Connect offsets file (R18).
+  *   foreachBatch sink that keeps each micro-batch's output as an
+  *   in-engine frame, with a checkpoint dir playing the role of the
+  *   Connect offsets file (R18).
   *
   * Every query in this file runs through one lifecycle, [[replay]]; a
   * query body supplies only its streaming frame, its output mode and
-  * sink, and its read-back.
+  * sink, and its read-back over what the sink kept. The consumer needs
+  * only the final keyed state, so no micro-batch output is written to
+  * files (the versioned-snapshot MERGE of [[streamForeachBatchMerge]]
+  * excepted: its parquet table is what that query is about).
   *
   * Scale notes: state is one small record per key, partitioned by the
   * grouping key across executors; the watermark bounds how long late data
@@ -68,23 +72,52 @@ object StreamingLatest {
       Rocks :+ ("spark.sql.streaming.join.stateFormatVersion" -> "3"))
   }
 
-  /** One replay's scratch directory: the sink writes `out`, which the
-    * read-back reads; `ckpt` is the query's checkpoint. */
-  private[graft] final class Run(val dir: Path) {
-    val out: String = s"$dir/out"
+  /** One replay: its scratch directory (`ckpt` is the query's
+    * checkpoint) and the output its sink keeps ([[emitted]]). */
+  private[graft] final class Run(val dir: Path, spark: SparkSession) {
     val ckpt: String = s"$dir/ckpt"
+    // set by [[replay]] before the query starts; the sink appends on the
+    // stream's thread and the read-back reads after the query has ended
+    @volatile private var schema = new StructType()
+    @volatile private var kept = Vector.empty[DataFrame]
+
+    /** What the sink kept: the union of its batch frames, or an empty
+      * frame with the sink's schema when no batch ran (or the sink keeps
+      * nothing). */
+    def emitted: DataFrame =
+      if (kept.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else kept.reduce(_ unionByName _)
+
+    private[StreamingLatest] def sinkSchema(s: StructType): Unit = schema = s
+
+    /** Keeps `batch` as a lineage-cut frame, computed now; `replace`
+      * releases the frames kept so far once the new one exists. */
+    private[StreamingLatest] def keep(batch: DataFrame, replace: Boolean): Unit = {
+      val cut = graft.Materialize.reuse(batch)
+      if (replace) {
+        graft.Materialize.release(kept: _*)
+        kept = Vector(cut)
+      } else kept :+= cut
+    }
   }
 
-  /** How each micro-batch leaves a replay. */
+  /** How each micro-batch leaves a replay. The three keeping sinks hold
+    * each batch in the [[Run]] as a lineage-cut frame
+    * ([[graft.Materialize.reuse]]), computed once inside `foreachBatch`
+    * and read back through [[Run.emitted]]. Lineage-cut, not cached: a
+    * batch frame recomputed after its batch commits would re-run the
+    * stateful operator against a state version that is already
+    * committed. */
   private[graft] sealed trait Sink
   private[graft] object Sink {
-    /** The batch replaces `out` (complete mode: each batch is the whole answer). */
+    /** Only the last batch is kept, releasing the one it replaces
+      * (complete mode: each batch is the whole answer). */
     case object Overwrite extends Sink
-    /** The batch is appended to `out`. */
+    /** Every batch is kept. */
     case object Append extends Sink
-    /** The batch is appended to `out` with its micro-batch id as `batch_id`. */
+    /** Every batch is kept with its micro-batch id as `batch_id`. */
     case object AppendBatchId extends Sink
-    /** A custom per-batch body. */
+    /** A custom per-batch body; nothing is kept. */
     final case class Each(body: (DataFrame, Long) => Unit) extends Sink
     /** Output discarded; the read-back inspects the checkpoint instead. */
     case object Discard extends Sink
@@ -126,14 +159,14 @@ object StreamingLatest {
     *    on watermark advance keep it.
     *  - `layout`'s state store provider and join state format.
     *
-    * The read-back runs before cleanup, so a result that reads the
-    * checkpoint or other scratch dirs must be materialized there.
-    * Cleanup runs in `finally`: a failed replay still stops its query,
-    * unloads its RocksDB stores and deletes everything in the run dir
-    * except `out`, which the returned frame may read lazily. RocksDB
-    * stores are unloaded before the delete because loaded providers
-    * survive query stop, and their native background threads crash
-    * the JVM at shutdown if still alive (see [[cleanupCkpt]]).
+    * The read-back runs before cleanup. The sink's output is in memory
+    * ([[Run.emitted]]), so a read-back over it can stay lazy; one that
+    * reads the checkpoint or other scratch dirs must be materialized
+    * there. Cleanup runs in `finally`: a failed replay still stops its
+    * query, unloads its RocksDB stores and deletes the whole run dir.
+    * RocksDB stores are unloaded before the delete because loaded
+    * providers survive query stop, and their native background threads
+    * crash the JVM at shutdown if still alive (see [[cleanupCkpt]]).
     *
     * Sequential sessions only: the conf scope and the store unload are
     * session-global, so two replays must not run concurrently in one
@@ -145,9 +178,13 @@ object StreamingLatest {
        else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
       layout.conf
     graft.Tuning.withConf(spark, conf: _*) {
-      val run = new Run(graft.StageDirs.fresh(graft.StageDirs.streamRoot, "run"))
+      val run = new Run(graft.StageDirs.fresh(graft.StageDirs.streamRoot, "run"), spark)
       try {
         val Query(frame, mode, sink) = query(run)
+        run.sinkSchema(sink match {
+          case Sink.AppendBatchId => frame.schema.add("batch_id", LongType, nullable = false)
+          case _ => frame.schema
+        })
         val w = frame.writeStream.outputMode(mode)
           .trigger(Trigger.AvailableNow())
           .option("checkpointLocation", run.ckpt)
@@ -155,10 +192,10 @@ object StreamingLatest {
           case Sink.Discard => w.format("noop").start()
           case s => w.foreachBatch { (b: Dataset[T], id: Long) =>
             s match {
-              case Sink.Overwrite => b.write.mode("overwrite").parquet(run.out)
-              case Sink.Append => b.write.mode("append").parquet(run.out)
+              case Sink.Overwrite => run.keep(b.toDF(), replace = true)
+              case Sink.Append => run.keep(b.toDF(), replace = false)
               case Sink.AppendBatchId =>
-                b.withColumn("batch_id", lit(id)).write.mode("append").parquet(run.out)
+                run.keep(b.withColumn("batch_id", lit(id)), replace = false)
               case Sink.Each(body) => body(b.toDF(), id)
               case Sink.Discard => ()
             }
@@ -179,9 +216,8 @@ object StreamingLatest {
   private def logParts(spark: SparkSession, sfDir: String): Int =
     graft.Tuning.statePartitions(staged(spark, sfDir).rows)
 
-  /** Delete a finished replay's scratch (all of the run dir but `out`),
-    * closing the native state stores FIRST when the session ran it on
-    * the RocksDB provider. Loaded providers SURVIVE query stop (they
+  /** Delete a finished replay's run dir, closing the native state stores
+    * FIRST when the session ran it on the RocksDB provider. Loaded providers SURVIVE query stop (they
     * unload on reclaim or maintenance timeout), so RocksDB instances
     * with live background compaction threads linger after the query
     * ends; those threads SIGSEGV the JVM when they log through the JNI
@@ -201,9 +237,7 @@ object StreamingLatest {
   private def cleanupCkpt(spark: SparkSession, run: Run): Unit = {
     if (spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
         .exists(_.contains("RocksDB"))) unloadStateStores()
-    val out = Paths.get(run.out)
-    listDir(run.dir).filter(_ != out).foreach(graft.StageDirs.rm)
-    if (!Files.exists(out)) Files.deleteIfExists(run.dir)
+    graft.StageDirs.rm(run.dir)
   }
 
   /** `StateStore.unloadAll()`: closes every state store provider loaded in this JVM. */
@@ -293,7 +327,7 @@ object StreamingLatest {
     replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
       Query(hourlyByType(logStream(spark, sfDir, Seq("ts", "event_type", "value"))),
         "complete", Sink.Overwrite)
-    } { run => hourlyRows(spark.read.parquet(run.out)) }
+    } { run => hourlyRows(run.emitted) }
 
   /** Watermarked hourly (window, event_type) count + decimal-exact sum. */
   private def hourlyByType(events: DataFrame): DataFrame =
@@ -330,7 +364,7 @@ object StreamingLatest {
           max(col("event_id")).as("max_event_id")),
         "complete", Sink.Overwrite)
     } { run =>
-      spark.read.parquet(run.out)
+      run.emitted
         .select(unix_micros(col("w.start")).as("win_start_us"), col("event_type"),
           col("n_events"), col("min_event_id"), col("max_event_id"))
         .orderBy(col("win_start_us"), col("event_type"))
@@ -360,7 +394,7 @@ object StreamingLatest {
           sum(col("value").cast(DecimalType(18, 6))).as("sum_dec")),
         "append", Sink.Append)
     } { run =>
-      spark.read.parquet(run.out)
+      run.emitted
         .filter(unix_micros(col("sw.end")) < horizonUs(spark, sfDir))
         .select(col("user_id"),
           unix_micros(col("sw.start")).as("session_start_us"),
@@ -400,7 +434,7 @@ object StreamingLatest {
         .dropDuplicatesWithinWatermark("event_id"),
         "append", Sink.Append)
     } { run =>
-      spark.read.parquet(run.out)
+      run.emitted
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .orderBy(col("event_type"))
@@ -426,7 +460,7 @@ object StreamingLatest {
     } { run =>
       // final emission per group = the total over the whole log
       val w = Window.partitionBy(col("event_type")).orderBy(col("batch_id").desc)
-      spark.read.parquet(run.out)
+      run.emitted
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("event_type"), col("n_events"),
@@ -455,7 +489,7 @@ object StreamingLatest {
         .filter(col("event_type") === "click")
         .select(col("ts"), col("event_type"), lit(0.0).as("value"))
       Query(hourlyByType(purchases.unionByName(clicks)), "complete", Sink.Overwrite)
-    } { run => hourlyRows(spark.read.parquet(run.out)) }
+    } { run => hourlyRows(run.emitted) }
 
   /** `cdc_stream_windowed_append`: the tumbling aggregate in APPEND
     * mode — each window row is emitted exactly ONCE, when the watermark
@@ -476,7 +510,7 @@ object StreamingLatest {
       Query(hourlyByType(logStream(spark, sfDir, Seq("ts", "event_type", "value"))),
         "append", Sink.Append)
     } { run =>
-      hourlyRows(spark.read.parquet(run.out)
+      hourlyRows(run.emitted
         .filter(unix_micros(col("w.end")) < horizonUs(spark, sfDir)))
     }
 
@@ -512,7 +546,7 @@ object StreamingLatest {
     replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDbJoinV3) { _ =>
       Query(clickJoin(spark, sfDir, "inner").select(PairCols: _*), "append", Sink.Append)
     } { run =>
-      spark.read.parquet(run.out).orderBy(col("purchase_event_id"), col("click_event_id"))
+      run.emitted.orderBy(col("purchase_event_id"), col("click_event_id"))
     }
 
   /** `cdc_stream_join_outer`: watermarked stream-stream LEFT OUTER
@@ -535,7 +569,7 @@ object StreamingLatest {
     replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
       Query(clickJoin(spark, sfDir, "left_outer").select(PairCols: _*), "append", Sink.Append)
     } { run =>
-      spark.read.parquet(run.out).orderBy(col("purchase_event_id"), col("click_event_id"))
+      run.emitted.orderBy(col("purchase_event_id"), col("click_event_id"))
     }
 
   /** `cdc_stream_join_full`: watermarked stream-stream FULL OUTER
@@ -554,7 +588,7 @@ object StreamingLatest {
     replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
       Query(clickJoin(spark, sfDir, "full_outer").select(PairCols: _*), "append", Sink.Append)
     } { run =>
-      spark.read.parquet(run.out)
+      run.emitted
         .orderBy(col("purchase_event_id").asc_nulls_first, col("click_event_id").asc_nulls_first)
     }
 
@@ -579,7 +613,7 @@ object StreamingLatest {
         .select(col("p_id").as("purchase_event_id"), col("p_user").as("user_id"),
           unix_micros(col("p_ts")).as("p_ts_us")),
         "append", Sink.Append)
-    } { run => spark.read.parquet(run.out).orderBy(col("purchase_event_id")) }
+    } { run => run.emitted.orderBy(col("purchase_event_id")) }
 
   /** `cdc_stream_static_join`: stream-static enrichment join — the
     * streaming side (the replayed CDC log) joined per micro-batch
@@ -601,7 +635,7 @@ object StreamingLatest {
         .select(col("event_id"), col("user_id"), col("first_us"),
           (unix_micros(col("ts")) - col("first_us")).as("since_first_us")),
         "append", Sink.Append)
-    } { run => spark.read.parquet(run.out).orderBy(col("event_id")) }
+    } { run => run.emitted.orderBy(col("event_id")) }
 
   // ── keyed state: latest-wins and its variants ──────────────────────
 
@@ -728,7 +762,7 @@ object StreamingLatest {
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateKey),
         "update", Sink.Append)
-    } { run => finalLatestRows(spark.read.parquet(run.out)) }
+    } { run => finalLatestRows(run.emitted) }
 
   /** `cdc_stream_state_ttl`: latest-wins with EVENT-TIME state TTL —
     * the bounded-state discipline a 100 TB CDC consumer actually needs:
@@ -756,7 +790,7 @@ object StreamingLatest {
       Query(eventsByUser(spark, sfDir)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(ttlKey),
         "update", Sink.Append)
-    } { run => finalTtlRows(spark.read.parquet(run.out)) }
+    } { run => finalTtlRows(run.emitted) }
 
   /** Latest-wins as a Spark 4 state-API-v2 [[StatefulProcessor]]: one
     * typed ValueState per key, the [[latestOf]] winner rule, new latest
@@ -790,7 +824,7 @@ object StreamingLatest {
       Query(eventsByUser(spark, sfDir).transformWithState(new LatestWinsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
         "update", Sink.Append)
-    } { run => finalLatestRows(spark.read.parquet(run.out)) }
+    } { run => finalLatestRows(run.emitted) }
 
   /** [[LatestWinsProcessor]] plus NATIVE event-time eviction on the
     * state-API-v2 timer surface: same winner rule and update-mode
@@ -844,7 +878,7 @@ object StreamingLatest {
       Query(eventsByUser(spark, sfDir).transformWithState(new LatestWinsTtlProcessor,
           org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update()),
         "update", Sink.Append)
-    } { run => finalTtlRows(spark.read.parquet(run.out)) }
+    } { run => finalTtlRows(run.emitted) }
 
   case class TopEntry(event_id: Long, value: Double)
   case class TopkRow(user_id: Long, upd: Long, rank: Int, event_id: Long, value: Double)
@@ -903,7 +937,7 @@ object StreamingLatest {
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
         "update", Sink.Append)
     } { run =>
-      spark.read.parquet(run.out)
+      run.emitted
         .withColumn("mx", max(col("upd")).over(Window.partitionBy(col("user_id"))))
         .filter(col("upd") === col("mx"))
         .select(col("user_id"), col("rank"), col("event_id"),
@@ -955,7 +989,7 @@ object StreamingLatest {
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
         "update", Sink.Append)
     } { run =>
-      spark.read.parquet(run.out)
+      run.emitted
         .groupBy(col("user_id"), col("event_type"))
         .agg(max(col("n_events")).as("n_events"))
         .orderBy(col("user_id"), col("event_type"))

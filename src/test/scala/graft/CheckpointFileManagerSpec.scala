@@ -87,33 +87,50 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
     }
   }
 
-  // Hadoop without native libhadoop shells out to chmod/readlink on
-  // local creates, mkdirs and FileContext renames; a replay's checkpoint
-  // writes must not.
-  test("a RocksDB stateful replay starts no process from a checkpoint file manager") {
+  /** `command from frames` for each process started while `body` runs
+    * whose stack has a frame (`Class.method`) matching `frame`. Cancels
+    * the test when JFR is unavailable. */
+  private def spawnsFrom(frame: String)(body: => Unit): Seq[String] = {
     import jdk.jfr.{FlightRecorder, Recording}
     import jdk.jfr.consumer.RecordingFile
     assume(FlightRecorder.isAvailable, "JFR is not available in this JVM")
-    val spark = SparkFixture.spark
     val dump = Files.createTempFile("graft-spawns", ".jfr")
     val rec = new Recording()
     try {
       rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
-      try StreamingLatest.streamStatefulRocksDb(spark, SparkFixture.Sf).collect()
-      finally rec.stop()
+      try body finally rec.stop()
       rec.dump(dump)
-      val spawns = RecordingFile.readAllEvents(dump).asScala.flatMap { e =>
+      RecordingFile.readAllEvents(dump).asScala.toSeq.flatMap { e =>
         val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
           .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
-        if (frames.exists(_.matches(".*CheckpointFileManager(\\$.*)?\\.[^.]+")))
+        if (frames.exists(_.matches(frame)))
           Some(e.getString("command") + " from " + frames.take(30).mkString(" < "))
         else None
       }
-      assert(spawns.isEmpty, s"${spawns.size} process starts on the checkpoint path")
     } finally {
       rec.close()
       Files.deleteIfExists(dump)
     }
+  }
+
+  // Hadoop without native libhadoop shells out to chmod/readlink on
+  // local creates, mkdirs and FileContext renames; a replay's checkpoint
+  // writes must not.
+  test("a RocksDB stateful replay starts no process from a checkpoint file manager") {
+    val spawns = spawnsFrom(".*CheckpointFileManager(\\$.*)?\\.[^.]+") {
+      StreamingLatest.streamStatefulRocksDb(SparkFixture.spark, SparkFixture.Sf).collect()
+    }
+    assert(spawns.isEmpty, s"${spawns.size} process starts on the checkpoint path")
+  }
+
+  // The replay sinks keep each micro-batch in the engine: no file write,
+  // so none of the parquet output path's chmod spawns.
+  test("a stateful replay starts no process from a file-output commit or writer") {
+    val spawns = spawnsFrom(
+        ".*\\.(HadoopMapReduceCommitProtocol|ParquetOutputCommitter|HadoopOutputFile)(\\$.*)?\\.[^.]+") {
+      StreamingLatest.streamStateful(SparkFixture.spark, SparkFixture.Sf).collect()
+    }
+    assert(spawns.isEmpty, s"${spawns.size} process starts on the file-output path")
   }
 }

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.graftbridge.BlockProbe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.llm.{GraphOps, TextOps}
 
@@ -23,9 +26,14 @@ class MaterializeSpec extends AnyFunSuite {
 
   private def isCached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
 
-  /** Whether a lineage-cut frame still holds its checkpoint blocks. */
+  private def checkpointRdd(df: DataFrame) =
+    df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+
+  /** Whether a lineage-cut frame's checkpoint blocks are still registered
+    * with the Spark context (a release drops the registration at once,
+    * the blocks themselves asynchronously). */
   private def holdsBlocks(df: DataFrame): Boolean =
-    df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.getStorageLevel != StorageLevel.NONE
+    spark.sparkContext.getPersistentRDDs.contains(checkpointRdd(df).id)
 
   test("release frees a cached frame and a lineage-cut frame, and ignores a plain one") {
     val cached = Materialize.inMemory(frame(spark, 101))
@@ -34,6 +42,23 @@ class MaterializeSpec extends AnyFunSuite {
     Materialize.release(cached, cut, frame(spark, 103))
     assert(!isCached(cached))
     assert(!holdsBlocks(cut))
+  }
+
+  test("releasing a lineage-cut frame logs no warning and drops its blocks") {
+    val warning = "cannot be recomputed after unpersisting"
+    // control: RDD.unpersist on a lineage-cut frame warns, and the capture sees it
+    val control = checkpointRdd(Materialize.reuse(frame(spark, 104)))
+    val (unpersistLog, _) = LogCapture.during(control.unpersist(blocking = true))
+    assert(unpersistLog.contains(warning), unpersistLog)
+    val cut = Materialize.reuse(frame(spark, 105))
+    val id = checkpointRdd(cut).id
+    assert(BlockProbe.rddBlocks(spark.sparkContext, id) > 0)
+    val (log, _) = LogCapture.during(Materialize.release(cut))
+    assert(!log.contains(warning), log)
+    assert(!holdsBlocks(cut))
+    eventually(timeout(Span(10, Seconds))) {
+      assert(BlockProbe.rddBlocks(spark.sparkContext, id) == 0, "the blocks must be dropped")
+    }
   }
 
   test("memo: a stopped session's entries are released and dropped") {

@@ -237,7 +237,7 @@ class StreamingSpec extends AnyFunSuite {
           .groupBy(col("user_id")).count()
         // run the stateful batch first so the RocksDB stores are loaded
         Query(counts, "update", Sink.Each { (b, _) => b.collect(); sys.error("sink failed") })
-      } { run => spark.read.parquet(run.out) }
+      } { run => run.emitted }
     }
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(e => Option(e.getMessage).exists(_.contains("sink failed"))),
@@ -247,6 +247,98 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.streams.active.isEmpty, "a failed replay must leave no active query")
     assert(spark.conf.getOption(provider) == providerBefore,
       "the replay's state layout must not outlive it")
+  }
+
+  /** Three parquet files, `file` = 0, 1, 2 with 2, 3 and 4 rows (`id`),
+    * replayed oldest first; returns their dir. */
+  private def threeFileLog(): String = {
+    import org.apache.spark.sql.functions.lit
+    val dir = StageDirs.fresh(StageDirs.streamRoot, "threefile")
+    val t0 = System.currentTimeMillis()
+    (0 to 2).foreach { f =>
+      val part = dir.resolve(s"f$f")
+      spark.range(0, f + 2).withColumn("file", lit(f.toLong))
+        .coalesce(1).write.parquet(part.toString)
+      val s = java.nio.file.Files.list(part)
+      val file = try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".parquet")).head finally s.close()
+      val dst = java.nio.file.Files.move(file, dir.resolve(s"f$f.parquet"))
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + 1000L * f))
+      StageDirs.rm(part)
+    }
+    dir.toString
+  }
+
+  /** Replays `dir` one file per micro-batch through `sink`; `frame`
+    * shapes the stream. Returns the emitted rows, sorted. */
+  private def replayThree(dir: String, mode: String, sink: StreamingLatest.Sink)(
+      frame: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+    import StreamingLatest.{Query, StateLayout}
+    val log = spark.readStream.schema("id LONG, file LONG")
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    StreamingLatest.replay(spark, 2, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      Query(frame(log), mode, sink)
+    } { run => run.emitted }.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+  }
+
+  test("Append keeps every micro-batch's rows, AppendBatchId tags each with its batch") {
+    val dir = threeFileLog()
+    try {
+      val all = (0L to 2L).flatMap(f => (0L until f + 2).map(id => Seq[Any](id, f)))
+        .sortBy(_.mkString(","))
+      assert(replayThree(dir, "append", StreamingLatest.Sink.Append)(identity) == all)
+      val tagged = replayThree(dir, "append", StreamingLatest.Sink.AppendBatchId)(identity)
+      assert(tagged.map(_.take(2)) == all)
+      assert(tagged.forall(r => r(2) == r(1)), s"file i is batch i: $tagged")
+    } finally StageDirs.rm(java.nio.file.Paths.get(dir))
+  }
+
+  test("complete-mode Overwrite returns only the last micro-batch's answer") {
+    import org.apache.spark.sql.functions.{count, lit, max}
+    val dir = threeFileLog()
+    try {
+      // each batch is the whole answer so far: (rows, newest file); keeping
+      // every batch would return (2, 0), (5, 1) and (9, 2)
+      val got = replayThree(dir, "complete", StreamingLatest.Sink.Overwrite)(
+        _.agg(count(lit(1)), max("file")))
+      assert(got == Seq(Seq[Any](9L, 2L)))
+    } finally StageDirs.rm(java.nio.file.Paths.get(dir))
+  }
+
+  test("a replay over a source with no file returns an empty frame with the query's schema") {
+    import StreamingLatest.{Query, Sink, StateLayout}
+    import org.apache.spark.sql.functions.col
+    val dir = StageDirs.fresh(StageDirs.streamRoot, "nofile")
+    try {
+      val frame = spark.readStream.schema("id LONG, file LONG").parquet(dir.toString)
+        .select(col("id"), (col("file") * 2).as("twice"))
+      for (sink <- Seq(Sink.Append, Sink.AppendBatchId, Sink.Overwrite)) {
+        val out = StreamingLatest.replay(spark, 2, keepNoDataBatch = false,
+            StateLayout.SessionDefault) { _ =>
+          Query(frame, "append", sink)
+        } { run => run.emitted }
+        val want = if (sink == Sink.AppendBatchId) Seq("id", "twice", "batch_id")
+          else Seq("id", "twice")
+        assert(out.columns.toSeq == want, sink)
+        assert(out.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
+        assert(out.count() == 0, sink)
+      }
+    } finally StageDirs.rm(dir)
+  }
+
+  test("a replay leaves nothing of its run dir once it returns and its frame is read") {
+    val mine = StageDirs.streamRoot.resolve(s"jvm-${ProcessHandle.current().pid()}")
+    def runDirs(): Set[String] = {
+      val s = java.nio.file.Files.list(mine)
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith("run")).toSet
+      finally s.close()
+    }
+    StreamingLatest.stagedEventLog(spark, sf)
+    val before = runDirs()
+    assert(StreamingLatest.streamStateful(spark, sf).collect().nonEmpty)
+    assert(runDirs() -- before == Set.empty, s"left under $mine")
   }
 
   test("cdc_state_reader: persisted streaming-agg state equals the batch aggregate") {

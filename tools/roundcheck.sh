@@ -6,7 +6,10 @@
 #      dev mains included, and calls engine helpers directly)
 #   3. full Verify + tools/compare.py at sf0.01 all-pass
 #   4. bench JSON parses with no negative per-query values (sf0.001 run)
-#   5. stamp .roundcheck_ok with a hash of every .scala source
+#   5. every streaming query of the benchmark's cdc_replay workload, one
+#      pass at sf0.1, matches its recorded signature (perfbench/run.py
+#      exits non-zero on any failed or mismatched query)
+#   6. stamp .roundcheck_ok with a hash of every .scala source
 #
 # The git pre-commit hook (tools/hooks/pre-commit) runs `--check-staged`
 # whenever ANY src/{main,test} .scala file is staged: it fails the commit
@@ -36,7 +39,7 @@ hash_sources() {
 check_against() { # $1 = hash to validate against the stamp
   if [[ ! -f $STAMP ]] || [[ "$(cat "$STAMP")" != "$1" ]]; then
     echo "ROUNDCHECK STALE: .scala sources changed since the last full gate run."
-    echo "Run tools/roundcheck.sh (inventory -> sbt test -> Verify+compare@sf0.01 -> bench parse -> leak/copy),"
+    echo "Run tools/roundcheck.sh (inventory -> sbt test -> Verify+compare@sf0.01 -> bench parse -> cdc_replay full -> leak/copy),"
     echo "or for a mid-round WIP commit only: SKIP_ROUNDCHECK=1 git commit ..."
     exit 1
   fi
@@ -96,6 +99,7 @@ bad = {k: v for k, v in j.get("queries", {}).items() if not (v >= 0)}
 assert not bad, "bench negative/NaN timings: %r" % bad
 print("bench JSON ok: %s %s over %d queries" % (j["value"], j["unit"], len(j["queries"])))
 '
+    python3 perfbench/run.py --workload cdc_replay --list full --seed 1 --seconds 20
     python3 tools/leakcheck.py
     python3 tools/copycheck.py
     hash_sources > "$STAMP"
