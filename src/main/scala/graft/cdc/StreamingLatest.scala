@@ -2,11 +2,13 @@ package graft.cdc
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.immutable.SortedMap
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Structured-Streaming latest-wins materialization — the streaming heart
   * of the reference pipeline (Kafka-Connect poll loop + offset tracking,
@@ -16,15 +18,17 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
   *   file source (the CDC-log surrogate) -> watermark -> keyed
   *   flatMapGroupsWithState (latest per key by (ts, event_id)) ->
   *   foreachBatch sink that keeps each micro-batch's output as an
-  *   in-engine frame, with a checkpoint dir playing the role of the
-  *   Connect offsets file (R18).
+  *   in-engine frame under its batch id, with a checkpoint dir playing
+  *   the role of the Connect offsets file (R18).
   *
   * Every query in this file runs through one lifecycle, [[replay]]; a
   * query body supplies only its streaming frame, its output mode and
   * sink, and its read-back over what the sink kept. The consumer needs
   * only the final keyed state, so no micro-batch output is written to
   * files (the versioned-snapshot MERGE of [[streamForeachBatchMerge]]
-  * excepted: its parquet table is what that query is about).
+  * excepted: its parquet table is what that query is about). An
+  * update-mode query's final state is read back as the reference
+  * consumer applies change records, an upsert by key ([[Run.lastPer]]).
   *
   * Scale notes: state is one small record per key, partitioned by the
   * grouping key across executors; the watermark bounds how long late data
@@ -73,50 +77,61 @@ object StreamingLatest {
   }
 
   /** One replay: its scratch directory (`ckpt` is the query's
-    * checkpoint) and the output its sink keeps ([[emitted]]). */
+    * checkpoint) and the batches its sink kept, by batch id. A
+    * re-delivered batch id (Structured Streaming re-runs a batch whose
+    * offsets were logged but whose commit was not) replaces and releases
+    * its frame, so the sink is idempotent per batch id. In complete mode
+    * each batch is the whole answer, so only the last one is kept. */
   private[graft] final class Run(val dir: Path, spark: SparkSession) {
     val ckpt: String = s"$dir/ckpt"
-    // set by [[replay]] before the query starts; the sink appends on the
+    // set by [[replay]] before the query starts; the sink keeps on the
     // stream's thread and the read-back reads after the query has ended
     @volatile private var schema = new StructType()
-    @volatile private var kept = Vector.empty[DataFrame]
+    @volatile private var complete = false
+    @volatile private var kept = SortedMap.empty[Long, DataFrame]
 
     /** What the sink kept: the union of its batch frames, or an empty
-      * frame with the sink's schema when no batch ran (or the sink keeps
+      * frame with the query's schema when no batch ran (or the sink keeps
       * nothing). */
     def emitted: DataFrame =
       if (kept.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-      else kept.reduce(_ unionByName _)
+      else kept.values.reduce(_ unionByName _)
 
-    private[StreamingLatest] def sinkSchema(s: StructType): Unit = schema = s
+    /** Update mode applied as an upsert: for each value of `keys`, the
+      * rows of the last batch in which it emitted. */
+    def lastPer(keys: String*): DataFrame =
+      if (kept.isEmpty) emitted
+      else kept.map { case (id, f) => f.withColumn("__batch", lit(id)) }.reduce(_ unionByName _)
+        .withColumn("__last", max("__batch").over(Window.partitionBy(keys.map(col): _*)))
+        .filter(col("__batch") === col("__last")).drop("__batch", "__last")
 
-    /** Keeps `batch` as a lineage-cut frame, computed now; `replace`
-      * releases the frames kept so far once the new one exists. */
-    private[StreamingLatest] def keep(batch: DataFrame, replace: Boolean): Unit = {
+    private[StreamingLatest] def open(s: StructType, mode: String): Unit = {
+      schema = s
+      complete = mode == "complete"
+    }
+
+    /** Keeps `batch` as batch `id`, a lineage-cut frame computed now. It
+      * replaces every kept frame in complete mode and a re-delivery of
+      * `id` otherwise; those are released once it exists. */
+    private[graft] def keep(id: Long, batch: DataFrame): Unit = {
       val cut = graft.Materialize.reuse(batch)
-      if (replace) {
-        graft.Materialize.release(kept: _*)
-        kept = Vector(cut)
-      } else kept :+= cut
+      val (gone, stay) = kept.partition { case (k, _) => complete || k == id }
+      kept = stay.updated(id, cut)
+      graft.Materialize.release(gone.values.toSeq: _*)
     }
   }
 
-  /** How each micro-batch leaves a replay. The three keeping sinks hold
-    * each batch in the [[Run]] as a lineage-cut frame
-    * ([[graft.Materialize.reuse]]), computed once inside `foreachBatch`
-    * and read back through [[Run.emitted]]. Lineage-cut, not cached: a
-    * batch frame recomputed after its batch commits would re-run the
-    * stateful operator against a state version that is already
-    * committed. */
+  /** How each micro-batch leaves a replay. [[Sink.Keep]] holds each batch
+    * in the [[Run]] as a lineage-cut frame ([[graft.Materialize.reuse]]),
+    * computed once inside `foreachBatch` and read back through
+    * [[Run.emitted]] or [[Run.lastPer]]. Lineage-cut, not cached: a batch
+    * frame recomputed after its batch commits would re-run the stateful
+    * operator against a state version that is already committed. */
   private[graft] sealed trait Sink
   private[graft] object Sink {
-    /** Only the last batch is kept, releasing the one it replaces
-      * (complete mode: each batch is the whole answer). */
-    case object Overwrite extends Sink
-    /** Every batch is kept. */
-    case object Append extends Sink
-    /** Every batch is kept with its micro-batch id as `batch_id`. */
-    case object AppendBatchId extends Sink
+    /** Every batch is kept under its batch id; in complete mode only the
+      * last, releasing the ones it replaces. */
+    case object Keep extends Sink
     /** A custom per-batch body; nothing is kept. */
     final case class Each(body: (DataFrame, Long) => Unit) extends Sink
     /** Output discarded; the read-back inspects the checkpoint instead. */
@@ -160,10 +175,11 @@ object StreamingLatest {
     *  - `layout`'s state store provider and join state format.
     *
     * The read-back runs before cleanup. The sink's output is in memory
-    * ([[Run.emitted]]), so a read-back over it can stay lazy; one that
-    * reads the checkpoint or other scratch dirs must be materialized
-    * there. Cleanup runs in `finally`: a failed replay still stops its
-    * query, unloads its RocksDB stores and deletes the whole run dir.
+    * ([[Run.emitted]], [[Run.lastPer]]), so a read-back over it can stay
+    * lazy; one that reads the checkpoint or other scratch dirs must be
+    * materialized there. Cleanup runs in `finally`: a failed replay
+    * still stops its query, unloads its RocksDB stores and deletes the
+    * whole run dir.
     * RocksDB stores are unloaded before the delete because loaded
     * providers survive query stop, and their native background threads
     * crash the JVM at shutdown if still alive (see [[cleanupCkpt]]).
@@ -181,10 +197,7 @@ object StreamingLatest {
       val run = new Run(graft.StageDirs.fresh(graft.StageDirs.streamRoot, "run"), spark)
       try {
         val Query(frame, mode, sink) = query(run)
-        run.sinkSchema(sink match {
-          case Sink.AppendBatchId => frame.schema.add("batch_id", LongType, nullable = false)
-          case _ => frame.schema
-        })
+        run.open(frame.schema, mode)
         val w = frame.writeStream.outputMode(mode)
           .trigger(Trigger.AvailableNow())
           .option("checkpointLocation", run.ckpt)
@@ -192,10 +205,7 @@ object StreamingLatest {
           case Sink.Discard => w.format("noop").start()
           case s => w.foreachBatch { (b: Dataset[T], id: Long) =>
             s match {
-              case Sink.Overwrite => run.keep(b.toDF(), replace = true)
-              case Sink.Append => run.keep(b.toDF(), replace = false)
-              case Sink.AppendBatchId =>
-                run.keep(b.withColumn("batch_id", lit(id)), replace = false)
+              case Sink.Keep => run.keep(id, b.toDF())
               case Sink.Each(body) => body(b.toDF(), id)
               case Sink.Discard => ()
             }
@@ -326,7 +336,7 @@ object StreamingLatest {
   def streamWindowed(spark: SparkSession, sfDir: String): DataFrame =
     replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
       Query(hourlyByType(logStream(spark, sfDir, Seq("ts", "event_type", "value"))),
-        "complete", Sink.Overwrite)
+        "complete", Sink.Keep)
     } { run => hourlyRows(run.emitted) }
 
   /** Watermarked hourly (window, event_type) count + decimal-exact sum. */
@@ -362,7 +372,7 @@ object StreamingLatest {
         .agg(count(lit(1)).as("n_events"),
           min(col("event_id")).as("min_event_id"),
           max(col("event_id")).as("max_event_id")),
-        "complete", Sink.Overwrite)
+        "complete", Sink.Keep)
     } { run =>
       run.emitted
         .select(unix_micros(col("w.start")).as("win_start_us"), col("event_type"),
@@ -392,7 +402,7 @@ object StreamingLatest {
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(DecimalType(18, 6))).as("sum_dec")),
-        "append", Sink.Append)
+        "append", Sink.Keep)
     } { run =>
       run.emitted
         .filter(unix_micros(col("sw.end")) < horizonUs(spark, sfDir))
@@ -432,7 +442,7 @@ object StreamingLatest {
           Some(files.size), Some(inDir.toString))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id"),
-        "append", Sink.Append)
+        "append", Sink.Keep)
     } { run =>
       run.emitted
         .groupBy(col("event_type"))
@@ -444,10 +454,11 @@ object StreamingLatest {
     * the one output mode the suite didn't yet exercise (complete:
     * streamWindowed; append: sessionize/dedup/joins; update so far only
     * via flatMapGroupsWithState). A windowless per-type count re-emits
-    * each CHANGED group per micro-batch; the sink keeps every emission
-    * and the final row per group is the total — which is why this query
-    * shares exact batch-count semantics: the last update for a group
-    * equals the full-log aggregate. At 100 TB this is the live-dashboard
+    * each CHANGED group per micro-batch; the read-back upserts the
+    * emissions by group ([[Run.lastPer]]), so each group's row from its
+    * last emitting batch is its total — which is why this query shares
+    * exact batch-count semantics: the last update for a group equals
+    * the full-log aggregate. At 100 TB this is the live-dashboard
     * shape: bounded state (one row per group), bounded emission
     * (changed groups only), no watermark needed. */
   def streamUpdateCounts(spark: SparkSession, sfDir: String): DataFrame =
@@ -456,13 +467,9 @@ object StreamingLatest {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,6)")).as("sum_value_dec")),
-        "update", Sink.AppendBatchId)
+        "update", Sink.Keep)
     } { run =>
-      // final emission per group = the total over the whole log
-      val w = Window.partitionBy(col("event_type")).orderBy(col("batch_id").desc)
-      run.emitted
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      run.lastPer("event_type")
         .select(col("event_type"), col("n_events"),
           round(col("sum_value_dec").cast("double"), 4).as("sum_value"))
         .orderBy(col("event_type"))
@@ -488,7 +495,7 @@ object StreamingLatest {
       val clicks = logStream(spark, sfDir, cols)
         .filter(col("event_type") === "click")
         .select(col("ts"), col("event_type"), lit(0.0).as("value"))
-      Query(hourlyByType(purchases.unionByName(clicks)), "complete", Sink.Overwrite)
+      Query(hourlyByType(purchases.unionByName(clicks)), "complete", Sink.Keep)
     } { run => hourlyRows(run.emitted) }
 
   /** `cdc_stream_windowed_append`: the tumbling aggregate in APPEND
@@ -508,7 +515,7 @@ object StreamingLatest {
   def streamWindowedAppend(spark: SparkSession, sfDir: String): DataFrame =
     replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.SessionDefault) { _ =>
       Query(hourlyByType(logStream(spark, sfDir, Seq("ts", "event_type", "value"))),
-        "append", Sink.Append)
+        "append", Sink.Keep)
     } { run =>
       hourlyRows(run.emitted
         .filter(unix_micros(col("w.end")) < horizonUs(spark, sfDir)))
@@ -544,7 +551,7 @@ object StreamingLatest {
     * streaming result shares an exact batch oracle. */
   def streamJoin(spark: SparkSession, sfDir: String): DataFrame =
     replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDbJoinV3) { _ =>
-      Query(clickJoin(spark, sfDir, "inner").select(PairCols: _*), "append", Sink.Append)
+      Query(clickJoin(spark, sfDir, "inner").select(PairCols: _*), "append", Sink.Keep)
     } { run =>
       run.emitted.orderBy(col("purchase_event_id"), col("click_event_id"))
     }
@@ -567,7 +574,7 @@ object StreamingLatest {
     * DuckDB twin, no streaming machinery needed on the oracle side. */
   def streamJoinOuter(spark: SparkSession, sfDir: String): DataFrame =
     replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
-      Query(clickJoin(spark, sfDir, "left_outer").select(PairCols: _*), "append", Sink.Append)
+      Query(clickJoin(spark, sfDir, "left_outer").select(PairCols: _*), "append", Sink.Keep)
     } { run =>
       run.emitted.orderBy(col("purchase_event_id"), col("click_event_id"))
     }
@@ -586,7 +593,7 @@ object StreamingLatest {
     * emissions happen on state eviction). */
   def streamJoinFull(spark: SparkSession, sfDir: String): DataFrame =
     replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
-      Query(clickJoin(spark, sfDir, "full_outer").select(PairCols: _*), "append", Sink.Append)
+      Query(clickJoin(spark, sfDir, "full_outer").select(PairCols: _*), "append", Sink.Keep)
     } { run =>
       run.emitted
         .orderBy(col("purchase_event_id").asc_nulls_first, col("click_event_id").asc_nulls_first)
@@ -612,7 +619,7 @@ object StreamingLatest {
       Query(clickJoin(spark, sfDir, "left_semi")
         .select(col("p_id").as("purchase_event_id"), col("p_user").as("user_id"),
           unix_micros(col("p_ts")).as("p_ts_us")),
-        "append", Sink.Append)
+        "append", Sink.Keep)
     } { run => run.emitted.orderBy(col("purchase_event_id")) }
 
   /** `cdc_stream_static_join`: stream-static enrichment join — the
@@ -634,7 +641,7 @@ object StreamingLatest {
         .join(broadcast(firstSeen), col("user_id") === col("d_user"))
         .select(col("event_id"), col("user_id"), col("first_us"),
           (unix_micros(col("ts")) - col("first_us")).as("since_first_us")),
-        "append", Sink.Append)
+        "append", Sink.Keep)
     } { run => run.emitted.orderBy(col("event_id")) }
 
   // ── keyed state: latest-wins and its variants ──────────────────────
@@ -684,31 +691,18 @@ object StreamingLatest {
       ttlRow(b, expired = false)
     }.iterator
 
-  /** Final record per key of a TTL replay: max (ts, event_id); an
-    * eviction row shares its state's (ts, id), so `expired DESC` breaks
-    * the tie in its favor — the eviction is the later lifecycle event. */
-  private def finalTtlRows(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("last_ts_us").desc, col("last_event_id").desc, col("expired").desc)
-    emitted.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("last_event_id"), col("last_event_type"),
-        round(col("last_value"), 4).as("last_value"), col("last_ts_us"), col("expired"))
+  /** A latest-wins read-back's columns, one row per key, by key. The
+    * rows are each key's last emission ([[Run.lastPer]]): latest-wins
+    * bodies emit at most one row per key per batch, and under the
+    * event-time-ordered replay an eviction row always lands in a later
+    * batch than the update it evicts (late events are dropped before the
+    * state body runs, so `last_ts + 2 h` lies above the watermark of the
+    * batch that wrote it). So a key's last emitting batch holds its
+    * final state. */
+  private def latestRows(rows: DataFrame, more: String*): DataFrame =
+    rows.select(Seq(col("user_id"), col("last_event_id"), col("last_event_type"),
+        round(col("last_value"), 4).as("last_value"), col("last_ts_us")) ++ more.map(col): _*)
       .orderBy(col("user_id"))
-  }
-
-  /** Final state per key of a latest-wins replay: multiple micro-batches
-    * append successive per-key snapshots; keep the last one (same
-    * (ts_us, event_id) order as the state body). */
-  private def finalLatestRows(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("last_ts_us").desc, col("last_event_id").desc)
-    emitted.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("last_event_id"), col("last_event_type"),
-        round(col("last_value"), 4).as("last_value"), col("last_ts_us"))
-      .orderBy(col("user_id"))
-  }
 
   /** The watermarked staged log as typed events, grouped by user. */
   private def eventsByUser(spark: SparkSession, sfDir: String) = {
@@ -749,10 +743,10 @@ object StreamingLatest {
     * STREAMING DataFrame carrying the event columns — the staged file
     * log (the gate/bench path) or a real Kafka topic
     * ([[KafkaWire.latestState]]). Everything downstream of the source —
-    * watermark, keyed flatMapGroupsWithState, append sink, checkpoint
-    * lifecycle, final per-key reduce — is THIS one method, so the two
+    * watermark, keyed flatMapGroupsWithState, keeping sink, checkpoint
+    * lifecycle, upsert read-back — is THIS one method, so the two
     * paths cannot drift. */
-  private[cdc] def latestWinsOver(spark: SparkSession, source: => DataFrame, parts: Int,
+  private[graft] def latestWinsOver(spark: SparkSession, source: => DataFrame, parts: Int,
       layout: StateLayout): DataFrame =
     replay(spark, parts, keepNoDataBatch = false, layout) { _ =>
       import spark.implicits._
@@ -761,8 +755,8 @@ object StreamingLatest {
         .select(StagedCols.map(col): _*).as[Ev]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(updateKey),
-        "update", Sink.Append)
-    } { run => finalLatestRows(run.emitted) }
+        "update", Sink.Keep)
+    } { run => latestRows(run.lastPer("user_id")) }
 
   /** `cdc_stream_state_ttl`: latest-wins with EVENT-TIME state TTL —
     * the bounded-state discipline a 100 TB CDC consumer actually needs:
@@ -777,9 +771,9 @@ object StreamingLatest {
     * max(ts) − 1 h and fires the remaining timeouts.
     *
     * Closed-form oracle (the finalized-horizon trick): with the
-    * event-time-ordered replay, the final per-key reduce (max
-    * (ts, event_id), eviction rows winning ties) is exactly the batch
-    * latest state, and a key ends expired iff the final watermark
+    * event-time-ordered replay, each key's last emission (see
+    * [[latestRows]]) is exactly the batch latest state, and a key ends
+    * expired iff the final watermark
     * strictly passed its last activity + TTL:
     * `max_ts − 1 h > last_ts + 2 h` — plain SQL, no streaming
     * machinery. 111 of the 150 fixture users expire; 39 stay live, so
@@ -789,8 +783,8 @@ object StreamingLatest {
       import spark.implicits._
       Query(eventsByUser(spark, sfDir)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(ttlKey),
-        "update", Sink.Append)
-    } { run => finalTtlRows(run.emitted) }
+        "update", Sink.Keep)
+    } { run => latestRows(run.lastPer("user_id"), "expired") }
 
   /** Latest-wins as a Spark 4 state-API-v2 [[StatefulProcessor]]: one
     * typed ValueState per key, the [[latestOf]] winner rule, new latest
@@ -823,8 +817,8 @@ object StreamingLatest {
       import spark.implicits._
       Query(eventsByUser(spark, sfDir).transformWithState(new LatestWinsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
-        "update", Sink.Append)
-    } { run => finalLatestRows(run.emitted) }
+        "update", Sink.Keep)
+    } { run => latestRows(run.lastPer("user_id")) }
 
   /** [[LatestWinsProcessor]] plus NATIVE event-time eviction on the
     * state-API-v2 timer surface: same winner rule and update-mode
@@ -877,31 +871,26 @@ object StreamingLatest {
       import spark.implicits._
       Query(eventsByUser(spark, sfDir).transformWithState(new LatestWinsTtlProcessor,
           org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update()),
-        "update", Sink.Append)
-    } { run => finalTtlRows(run.emitted) }
+        "update", Sink.Keep)
+    } { run => latestRows(run.lastPer("user_id"), "expired") }
 
   case class TopEntry(event_id: Long, value: Double)
-  case class TopkRow(user_id: Long, upd: Long, rank: Int, event_id: Long, value: Double)
+  case class TopkRow(user_id: Long, rank: Int, event_id: Long, value: Double)
 
   /** Per-key top-3 events by (value, event_id) on state-API-v2
     * [[org.apache.spark.sql.streaming.ListState]] — the bounded-list
     * retention pattern (leaderboards, best-N samples per key) that the
     * old API forced into a single opaque blob: v2 stores the list
     * ELEMENT-WISE in RocksDB, so an append touches one entry, not a
-    * reserialized whole. Emissions carry a per-key update version
-    * (ValueState counter) so the finite replay's FINAL top-3 is
-    * recoverable as the max-version rows per key. */
+    * reserialized whole. Each change emits the whole current list, so a
+    * key's last emitting batch holds its final top-3. */
   private[graft] class TopKListProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, TopkRow] {
-    import org.apache.spark.sql.streaming.{ListState, TTLConfig, TimeMode, TimerValues, ValueState}
+    import org.apache.spark.sql.streaming.{ListState, TTLConfig, TimeMode, TimerValues}
     @transient private var top: ListState[TopEntry] = _
-    @transient private var ver: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       top = getHandle.getListState[TopEntry]("top3",
         org.apache.spark.sql.Encoders.product[TopEntry], TTLConfig.NONE)
-      ver = getHandle.getValueState[Long]("ver",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    }
     private def beats(a: TopEntry, b: TopEntry): Boolean =
       a.value > b.value || (a.value == b.value && a.event_id > b.event_id)
     override def handleInputRows(key: Long, rows: Iterator[Ev],
@@ -913,10 +902,8 @@ object StreamingLatest {
       }
       if (best != cur) {
         top.put(best.toArray)
-        val v = (if (ver.exists()) ver.get() else 0L) + 1L
-        ver.update(v)
         best.iterator.zipWithIndex.map { case (t, i) =>
-          TopkRow(key, v, i + 1, t.event_id, t.value)
+          TopkRow(key, i + 1, t.event_id, t.value)
         }
       } else Iterator.empty
     }
@@ -924,22 +911,20 @@ object StreamingLatest {
 
   /** `cdc_stream_tws_topk`: bounded per-key retention on v2 ListState —
     * each user's top-3 events by value maintained incrementally across
-    * the replay (constant state per key: 3 entries + a version counter,
-    * the 100 TB-safe alternative to buffering every event). The final
-    * reduce keeps each key's max-version emission — the last time its
-    * top-3 changed, which IS the final top-3. Oracle: the batch window
-    * top-3 over the same log; a hash match proves incremental list
-    * maintenance equals the global rank. */
+    * the replay (constant state per key: 3 entries, the 100 TB-safe
+    * alternative to buffering every event). The read-back keeps each
+    * key's rows from its last emitting batch ([[Run.lastPer]]) — the
+    * last time its top-3 changed, which IS the final top-3. Oracle: the
+    * batch window top-3 over the same log; a hash match proves
+    * incremental list maintenance equals the global rank. */
   def streamTwsTopk(spark: SparkSession, sfDir: String): DataFrame =
     replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDb) { _ =>
       import spark.implicits._
       Query(eventsByUser(spark, sfDir).transformWithState(new TopKListProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
-        "update", Sink.Append)
+        "update", Sink.Keep)
     } { run =>
-      run.emitted
-        .withColumn("mx", max(col("upd")).over(Window.partitionBy(col("user_id"))))
-        .filter(col("upd") === col("mx"))
+      run.lastPer("user_id")
         .select(col("user_id"), col("rank"), col("event_id"),
           round(col("value"), 4).as("value"))
         .orderBy(col("user_id"), col("rank"))
@@ -951,9 +936,9 @@ object StreamingLatest {
     * [[org.apache.spark.sql.streaming.MapState]] — the keyed sub-map
     * pattern (per-entity feature counters) that the old API also forced
     * into one blob: v2 reads/writes single map ENTRIES in RocksDB, so a
-    * batch touching one event_type leaves the others unread. Counts are
-    * monotone, so the finite replay's final value per (key, type) is
-    * simply the MAX emitted — no version state needed. */
+    * batch touching one event_type leaves the others unread. Each
+    * touched (key, type) emits its counter once per batch, so its last
+    * emission is its final value. */
   private[graft] class TypeCountsProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, TypeCountRow] {
     import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimeMode, TimerValues}
@@ -976,10 +961,10 @@ object StreamingLatest {
 
   /** `cdc_stream_tws_counts`: keyed sub-map aggregation on v2 MapState —
     * per-user event-type counters maintained entry-wise across the
-    * replay; only the types a batch touches are emitted. With counts
-    * monotone per (user, type), max-of-emissions is the final counter.
-    * Oracle: the batch two-column GROUP BY; a hash match proves the
-    * entry-wise map maintenance equals the global aggregate. Completes
+    * replay; only the types a batch touches are emitted, and the
+    * read-back upserts them by (user, type) ([[Run.lastPer]]). Oracle:
+    * the batch two-column GROUP BY; a hash match proves the entry-wise
+    * map maintenance equals the global aggregate. Completes
     * the state-API-v2 slot matrix: ValueState (latest/TTL), timers
     * (eviction), ListState (top-k), MapState (keyed counters). */
   def streamTwsCounts(spark: SparkSession, sfDir: String): DataFrame =
@@ -987,11 +972,10 @@ object StreamingLatest {
       import spark.implicits._
       Query(eventsByUser(spark, sfDir).transformWithState(new TypeCountsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
-        "update", Sink.Append)
+        "update", Sink.Keep)
     } { run =>
-      run.emitted
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(max(col("n_events")).as("n_events"))
+      run.lastPer("user_id", "event_type")
+        .select(col("user_id"), col("event_type"), col("n_events"))
         .orderBy(col("user_id"), col("event_type"))
     }
 

@@ -127,6 +127,14 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(Bench.retimeSuspects(broad, _ => false).size == 20)
   }
 
+  test("bench classifies a query as streaming by whether it starts a stream, not by its name") {
+    def streams(name: String): Boolean =
+      Bench.startsStream(spark)(SparkEntry.queries(name)(spark, sf).count())._2
+    // cdc_stream_tumbling is the batch twin of cdc_stream_windowed
+    assert(!streams("cdc_stream_tumbling"))
+    assert(streams("cdc_stream_windowed"))
+  }
+
   test("vec_kmeans_lloyd partitions the corpus into valid deterministic clusters") {
     val s = spark
     import s.implicits._

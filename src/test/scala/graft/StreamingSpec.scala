@@ -249,80 +249,130 @@ class StreamingSpec extends AnyFunSuite {
       "the replay's state layout must not outlive it")
   }
 
-  /** Three parquet files, `file` = 0, 1, 2 with 2, 3 and 4 rows (`id`),
-    * replayed oldest first; returns their dir. */
-  private def threeFileLog(): String = {
-    import org.apache.spark.sql.functions.lit
-    val dir = StageDirs.fresh(StageDirs.streamRoot, "threefile")
+  /** Writes each frame as one parquet file, replayed in the given order
+    * (stepped mtimes); returns their dir. */
+  private def fileLog(name: String, parts: Seq[org.apache.spark.sql.DataFrame]): String = {
+    import java.nio.file.{Files, Path}
+    val dir = StageDirs.fresh(StageDirs.streamRoot, name)
     val t0 = System.currentTimeMillis()
-    (0 to 2).foreach { f =>
+    parts.zipWithIndex.foreach { case (df, f) =>
       val part = dir.resolve(s"f$f")
-      spark.range(0, f + 2).withColumn("file", lit(f.toLong))
-        .coalesce(1).write.parquet(part.toString)
-      val s = java.nio.file.Files.list(part)
-      val file = try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      df.coalesce(1).write.parquet(part.toString)
+      val s = Files.list(part)
+      val file = try s.toArray.map(_.asInstanceOf[Path])
         .filter(_.toString.endsWith(".parquet")).head finally s.close()
-      val dst = java.nio.file.Files.move(file, dir.resolve(s"f$f.parquet"))
-      java.nio.file.Files.setLastModifiedTime(dst,
+      val dst = Files.move(file, dir.resolve(s"f$f.parquet"))
+      Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(t0 + 1000L * f))
       StageDirs.rm(part)
     }
     dir.toString
   }
 
-  /** Replays `dir` one file per micro-batch through `sink`; `frame`
-    * shapes the stream. Returns the emitted rows, sorted. */
-  private def replayThree(dir: String, mode: String, sink: StreamingLatest.Sink)(
-      frame: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-    import StreamingLatest.{Query, StateLayout}
+  /** Three parquet files, `file` = 0, 1, 2 with 2, 3 and 4 rows (`id`),
+    * replayed oldest first; returns their dir. */
+  private def threeFileLog(): String = {
+    import org.apache.spark.sql.functions.lit
+    fileLog("threefile", (0 to 2).map(f => spark.range(0, f + 2).withColumn("file", lit(f.toLong))))
+  }
+
+  /** Replays `dir` one file per micro-batch through [[StreamingLatest.Sink.Keep]];
+    * `frame` shapes the stream. Returns the rows `readBack` reads, sorted. */
+  private def replayThree(dir: String, mode: String)(
+      frame: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)(
+      readBack: StreamingLatest.Run => org.apache.spark.sql.DataFrame = _.emitted) = {
+    import StreamingLatest.{Query, Sink, StateLayout}
     val log = spark.readStream.schema("id LONG, file LONG")
       .option("maxFilesPerTrigger", "1").parquet(dir)
     StreamingLatest.replay(spark, 2, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
-      Query(frame(log), mode, sink)
-    } { run => run.emitted }.collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+      Query(frame(log), mode, Sink.Keep)
+    }(readBack).collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
   }
 
-  test("Append keeps every micro-batch's rows, AppendBatchId tags each with its batch") {
+  test("Keep keeps every append-mode micro-batch's rows") {
     val dir = threeFileLog()
     try {
       val all = (0L to 2L).flatMap(f => (0L until f + 2).map(id => Seq[Any](id, f)))
         .sortBy(_.mkString(","))
-      assert(replayThree(dir, "append", StreamingLatest.Sink.Append)(identity) == all)
-      val tagged = replayThree(dir, "append", StreamingLatest.Sink.AppendBatchId)(identity)
-      assert(tagged.map(_.take(2)) == all)
-      assert(tagged.forall(r => r(2) == r(1)), s"file i is batch i: $tagged")
+      assert(replayThree(dir, "append")(identity)() == all)
     } finally StageDirs.rm(java.nio.file.Paths.get(dir))
   }
 
-  test("complete-mode Overwrite returns only the last micro-batch's answer") {
+  test("a re-delivered batch id replaces its kept frame") {
+    val dir = StageDirs.fresh(StageDirs.streamRoot, "redeliver")
+    try {
+      val run = new StreamingLatest.Run(dir, spark)
+      def ids() = run.emitted.collect().map(_.getLong(0)).sorted.toSeq
+      run.keep(0, spark.range(0, 3).toDF())
+      run.keep(0, spark.range(10, 12).toDF())
+      assert(ids() == Seq(10L, 11L), "the second delivery of batch 0 is kept, once")
+      run.keep(1, spark.range(20, 21).toDF())
+      assert(ids() == Seq(10L, 11L, 20L))
+    } finally StageDirs.rm(dir)
+  }
+
+  test("lastPer returns each key's rows from the last batch in which it emitted") {
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    val dir = threeFileLog()
+    try {
+      // ids 0 and 1 arrive in batches 0 and 2, id 2 only in batch 1; an
+      // update-mode count re-emits each key in every batch it arrives in
+      val got = replayThree(dir, "update")(_.filter(
+          (col("file") =!= 1 && col("id") < 2) || (col("file") === 1 && col("id") === 2))
+        .groupBy(col("id")).agg(count(lit(1)).as("n"), max(col("file")).as("last_file")))(
+        _.lastPer("id"))
+      assert(got == Seq(Seq[Any](0L, 2L, 2L), Seq[Any](1L, 2L, 2L), Seq[Any](2L, 1L, 1L)))
+    } finally StageDirs.rm(java.nio.file.Paths.get(dir))
+  }
+
+  test("complete-mode Keep returns only the last micro-batch's answer") {
     import org.apache.spark.sql.functions.{count, lit, max}
     val dir = threeFileLog()
     try {
       // each batch is the whole answer so far: (rows, newest file); keeping
       // every batch would return (2, 0), (5, 1) and (9, 2)
-      val got = replayThree(dir, "complete", StreamingLatest.Sink.Overwrite)(
-        _.agg(count(lit(1)), max("file")))
+      val got = replayThree(dir, "complete")(_.agg(count(lit(1)), max("file")))()
       assert(got == Seq(Seq[Any](9L, 2L)))
     } finally StageDirs.rm(java.nio.file.Paths.get(dir))
   }
 
+  test("latest-wins over six event-time-ordered files, one per batch, equals the batch latest state") {
+    val s2 = spark
+    import s2.implicits._
+    import org.apache.spark.sql.functions._
+    val ev = Tables.events(spark, sf)
+      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+    val span = ev.agg(unix_micros(min($"ts")), unix_micros(max($"ts"))).first()
+    val (lo, hi) = (span.getLong(0), span.getLong(1))
+    val slice = floor((unix_micros($"ts") - lo) * 6 / (hi - lo + 1))
+    val dir = fileLog("sixfile", (0 until 6).map(f => ev.filter(slice === f)))
+    try {
+      assert(ev.groupBy($"user_id").agg(countDistinct(slice).as("files"))
+        .filter($"files" > 1).count() > 0, "some key must emit in several batches")
+      val source = spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+      val got = StreamingLatest.latestWinsOver(spark, source, 4,
+        StreamingLatest.StateLayout.SessionDefault).collect().toSeq
+      assert(got == Changelog.latestState(spark, sf).collect().toSeq)
+    } finally StageDirs.rm(java.nio.file.Paths.get(dir))
+  }
+
   test("a replay over a source with no file returns an empty frame with the query's schema") {
-    import StreamingLatest.{Query, Sink, StateLayout}
+    import StreamingLatest.{Query, Run, Sink, StateLayout}
     import org.apache.spark.sql.functions.col
     val dir = StageDirs.fresh(StageDirs.streamRoot, "nofile")
     try {
       val frame = spark.readStream.schema("id LONG, file LONG").parquet(dir.toString)
         .select(col("id"), (col("file") * 2).as("twice"))
-      for (sink <- Seq(Sink.Append, Sink.AppendBatchId, Sink.Overwrite)) {
+      for ((name, readBack) <- Seq[(String, Run => org.apache.spark.sql.DataFrame)](
+          "emitted" -> (_.emitted), "lastPer" -> (_.lastPer("id")))) {
         val out = StreamingLatest.replay(spark, 2, keepNoDataBatch = false,
             StateLayout.SessionDefault) { _ =>
-          Query(frame, "append", sink)
-        } { run => run.emitted }
-        val want = if (sink == Sink.AppendBatchId) Seq("id", "twice", "batch_id")
-          else Seq("id", "twice")
-        assert(out.columns.toSeq == want, sink)
+          Query(frame, "append", Sink.Keep)
+        }(readBack)
+        assert(out.columns.toSeq == Seq("id", "twice"), name)
         assert(out.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
-        assert(out.count() == 0, sink)
+        assert(out.count() == 0, name)
       }
     } finally StageDirs.rm(dir)
   }

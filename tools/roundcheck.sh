@@ -106,7 +106,7 @@ print("bench JSON ok: %s %s over %d queries" % (j["value"], j["unit"], len(j["qu
     echo "ROUNDCHECK PASS — stamp $(cat "$STAMP")"
     ;;
   *)
-    echo "usage: tools/roundcheck.sh [--check]" >&2
+    echo "usage: tools/roundcheck.sh [--check | --check-staged]" >&2
     exit 2
     ;;
 esac
