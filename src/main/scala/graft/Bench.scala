@@ -115,7 +115,9 @@ object Bench {
     // class loading (session startup, same as the codegen warm-up above)
     // doesn't land on whichever streaming query runs first. The warm-up
     // streams run through the queries' own lifecycle
-    // (StreamingLatest.replay), so they warm the path the queries take.
+    // (StreamingLatest.replay), so they warm the path the queries take,
+    // codegen included: replays share the executor's classloader, so code
+    // compiled here is not compiled again by the queries' replays.
     var calibStream = -1.0  // -1 = probe failed; consumers must not divide by it
     try {
       import org.apache.spark.sql.functions.{session_window, col, count, lit}

@@ -86,10 +86,13 @@ object Tuning {
   }
 
   /** Run `body` with `kvs` set on the session conf, then restore each
-    * key's previous value (unsetting keys that had none) — on failure
-    * too. Session-global while `body` runs, like every conf scope here. */
+    * key's previous setting (unsetting keys that were not set, so a key
+    * left at its default goes back to it) — on failure too.
+    * Session-global while `body` runs, like every conf scope here. */
   def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // getOption would read an unset key as its default and pin it
+    val set = spark.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach { case (k, v) =>

@@ -146,6 +146,10 @@ object StreamingLatest {
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
     "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFileManager].getName)
 
+  /** Runs a replay's tasks on the executor's shared classloader (see
+    * [[replay]]), so their generated code compiles once per JVM. */
+  private[graft] val SharedClassLoader = "spark.sql.artifact.isolation.enabled" -> "false"
+
   /** The one streaming lifecycle: allocate a [[Run]] dir, build the
     * query, start it under `Trigger.AvailableNow`, wait until it has
     * drained its source, read the result back, clean up.
@@ -173,6 +177,19 @@ object StreamingLatest {
     *    arrival skip it (`keepNoDataBatch = false`); queries that emit
     *    on watermark advance keep it.
     *  - `layout`'s state store provider and join state format.
+    *  - [[SharedClassLoader]]: artifact isolation off. Starting a stream
+    *    clones the session; with isolation on, the executor runs each
+    *    clone's tasks in a new per-session classloader, and Spark's
+    *    codegen cache is keyed on (context classloader, source), so every
+    *    replay recompiled every task-side projection, sorter and state
+    *    serializer. The clone copies the value, so its tasks run on the
+    *    executor's shared classloader. Contract: a replay's tasks do not
+    *    see session-scoped artifacts (`addArtifact` jars) of the caller's
+    *    session; the engine adds none, its classes come from the
+    *    application classpath. Spark computes a session's artifact state
+    *    on first use, so a caller session whose first SQL execution
+    *    happens inside a replay stays unisolated for its lifetime,
+    *    harmless for the same reason.
     *
     * The read-back runs before cleanup. The sink's output is in memory
     * ([[Run.emitted]], [[Run.lastPer]]), so a read-back over it can stay
@@ -189,7 +206,8 @@ object StreamingLatest {
     * session. */
   private[graft] def replay[T](spark: SparkSession, parts: Int, keepNoDataBatch: Boolean,
       layout: StateLayout)(query: Run => Query[T])(readBack: Run => DataFrame): DataFrame = {
-    val conf = Seq("spark.sql.shuffle.partitions" -> parts.toString) ++ CheckpointConf ++
+    val conf = Seq("spark.sql.shuffle.partitions" -> parts.toString, SharedClassLoader) ++
+      CheckpointConf ++
       (if (keepNoDataBatch) Nil
        else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
       layout.conf

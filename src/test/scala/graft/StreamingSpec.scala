@@ -227,26 +227,53 @@ class StreamingSpec extends AnyFunSuite {
     import StreamingLatest.{Query, Sink, StateLayout}
     val provider = "spark.sql.streaming.stateStore.providerClass"
     val providerBefore = spark.conf.getOption(provider)
-    var ckpt: String = null
-    val err = intercept[Exception] {
-      StreamingLatest.replay(spark, 4, keepNoDataBatch = false, StateLayout.RocksDb) { run =>
-        ckpt = run.ckpt
-        val counts = spark.readStream
-          .schema(Tables.events(spark, sf).select(col("user_id")).schema)
-          .parquet(StreamingLatest.stagedEventLog(spark, sf))
-          .groupBy(col("user_id")).count()
-        // run the stateful batch first so the RocksDB stores are loaded
-        Query(counts, "update", Sink.Each { (b, _) => b.collect(); sys.error("sink failed") })
-      } { run => run.emitted }
+    val isolation = StreamingLatest.SharedClassLoader._1
+    // what the caller set, not the default an unset key reads as
+    def isolationSetting = spark.conf.getAll.get(isolation)
+    val isolationBefore = isolationSetting
+    def setIsolation(v: Option[String]): Unit =
+      v.fold(spark.conf.unset(isolation))(spark.conf.set(isolation, _))
+    // the replay's artifact-isolation value must not outlive it, whether
+    // the caller left the key unset or set it
+    try for (callerIsolation <- Seq(None, Some("true"))) {
+      setIsolation(callerIsolation)
+      var ckpt: String = null
+      val err = intercept[Exception] {
+        StreamingLatest.replay(spark, 4, keepNoDataBatch = false, StateLayout.RocksDb) { run =>
+          ckpt = run.ckpt
+          val counts = spark.readStream
+            .schema(Tables.events(spark, sf).select(col("user_id")).schema)
+            .parquet(StreamingLatest.stagedEventLog(spark, sf))
+            .groupBy(col("user_id")).count()
+          // run the stateful batch first so the RocksDB stores are loaded
+          Query(counts, "update", Sink.Each { (b, _) => b.collect(); sys.error("sink failed") })
+        } { run => run.emitted }
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(_.contains("sink failed"))),
+        s"the sink's exception must reach the caller, got $err")
+      assert(ckpt != null && !Files.exists(Paths.get(ckpt)),
+        "a failed replay must still delete its checkpoint")
+      assert(spark.streams.active.isEmpty, "a failed replay must leave no active query")
+      assert(spark.conf.getOption(provider) == providerBefore,
+        "the replay's state layout must not outlive it")
+      assert(isolationSetting == callerIsolation,
+        s"the caller's $isolation must be restored")
+    } finally setIsolation(isolationBefore)
+  }
+
+  test("a repeated replay compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def round(): Unit = {
+      StreamingLatest.streamStateful(spark, sf).collect()
+      StreamingLatest.streamStatefulRocksDb(spark, sf).collect()
+      StreamingLatest.streamJoin(spark, sf).collect()
     }
-    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-      .exists(e => Option(e.getMessage).exists(_.contains("sink failed"))),
-      s"the sink's exception must reach the caller, got $err")
-    assert(ckpt != null && !Files.exists(Paths.get(ckpt)),
-      "a failed replay must still delete its checkpoint")
-    assert(spark.streams.active.isEmpty, "a failed replay must leave no active query")
-    assert(spark.conf.getOption(provider) == providerBefore,
-      "the replay's state layout must not outlive it")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    round()
+    val before = compiles
+    round()
+    assert(compiles == before, s"the second round compiled ${compiles - before} classes")
   }
 
   /** Writes each frame as one parquet file, replayed in the given order
