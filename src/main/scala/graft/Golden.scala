@@ -60,33 +60,3 @@ object Golden {
     md.digest().take(8).map(x => f"$x%02x").mkString
   }
 }
-
-/** Dev-only: print the golden hash of every no-oracle exempt query at
-  * the three pin scales — the values Round17OpsSpec pins. */
-object DevGolden {
-  /** The 14 oracle-exempt queries (SURVEY §2.2 / CORRECTNESS no_oracle
-    * rows), kept in sync by Round17OpsSpec against the Oracle map.
-    * (`sample_tablesample` left the list in r18: its seeded df.sample
-    * draw was per-partition — the pin held only while scan planning
-    * matched the recording session (r17 advisor) — so the query moved
-    * to content-keyed md5-threshold sampling, which is partitioning-
-    * invariant AND cross-engine, i.e. oracle-eligible.) */
-  val Exempt: Seq[String] = Seq(
-    "agg_approx_distinct", "agg_approx_percentile", "agg_count_min_sketch",
-    "dedup_embed_cosine", "dedup_fuzzy_minhash", "dedup_simhash",
-    "mm_decode_stub", "mm_image_phash", "mm_resize_stub",
-    "sim_ann_ivf", "sim_ann_lsh", "sim_ann_pq",
-    "text_compression_ratio", "text_fingerprint")
-
-  def main(args: Array[String]): Unit = {
-    val spark = Sessions.build()
-    val sfs = if (args.nonEmpty) args.toSeq
-      else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1")
-    for (sf <- sfs; q <- Exempt) {
-      val h = Golden.hash(SparkEntry.queries(q)(spark, sf))
-      println(s"""[golden] ("$q", "$sf") -> "$h",""")
-    }
-    spark.stop()
-  }
-}

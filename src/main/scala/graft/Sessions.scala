@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session profile: Bench, Verify, the test fixture, Golden and
-  * every dev main build their session here, so the correctness gate and
-  * the suite run exactly the config that is benchmarked.
+/** The one session profile: Bench, Verify and the test fixture build
+  * their session here, so the correctness gate and the suite run exactly
+  * the config that is benchmarked.
   *
   * The three AQE values are the production form a cluster would ship:
   *  - `initialPartitionNum=256` over-provisions the pre-coalesce shuffle
@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   *
   * `nanosAsLong` is back-compat for the legacy ns-precision events
   * fixture; the current µs TIMESTAMP_NTZ fixture ignores it
-  * (graft.Tables.events). */
+  * (graft.Tables.events). It is set here only: nothing sets it per read. */
 object Sessions {
 
   /** `SPARK_GRAFT_CPUS`, else every core the JVM sees. */

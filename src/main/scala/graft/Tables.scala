@@ -13,9 +13,10 @@ object Tables {
 
   /** The driver fixture's `events.ts` has drifted across rounds:
     * parquet TIMESTAMP(NANOS) (readable only as a raw long under
-    * `nanosAsLong`), and currently parquet `timestamp[us]` with no
-    * timezone → Spark `TIMESTAMP_NTZ`. Normalize every variant to the
-    * same surface: `ts` as a session-tz `TIMESTAMP` plus a derived
+    * `nanosAsLong`, which `Sessions.build` sets), and currently parquet
+    * `timestamp[us]` with no timezone → Spark `TIMESTAMP_NTZ`, which
+    * reads the same with or without that key. Normalize every variant to
+    * the same surface: `ts` as a session-tz `TIMESTAMP` plus a derived
     * `ts_ns` epoch-nanos long, so downstream operators are
     * fixture-agnostic.
     *
@@ -28,7 +29,6 @@ object Tables {
     * EventsFixtureSpec). Predicates on the derived `ts_ns` do NOT push
     * down under the NTZ fixture — don't filter on it in hot paths. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case LongType => // legacy ns-as-long fixture (µs-aligned, verified)

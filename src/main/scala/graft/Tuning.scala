@@ -70,7 +70,8 @@ object Tuning {
     * hundred MB even at 60M edges), so advisory-size coalescing collapses
     * every relaxation round to a handful of partitions and serializes the
     * iteration on the very shuffles the derived count exists to spread.
-    * Measured on the DevStress BFS slope protocol, order-rotated
+    * Measured on the BFS slope over synthetic graphs (SCALE.md,
+    * `plans/r22/parallelism_first_graph_ab.txt`), order-rotated
     * false/true/true/false sessions: 2M edges 22.9/15.0 s vs 6.2/5.9 s,
     * 20M 43.3/42.5 vs 19.1/18.4, 60M OOM-or-76.0 vs 53.5/50.5 —
     * advisory-size coalescing is 1.5-3.6× slower at every graph size and

@@ -36,12 +36,6 @@ object CatalogDdl {
       db: String = Database): Unit = {
     val key = (spark.sharedState: AnyRef, db)
     if (registered.get(key) == sfDir) return
-    // back-compat for the legacy ns-precision events fixture, whose
-    // CREATE TABLE schema inference would throw PARQUET_TYPE_ILLEGAL
-    // without it; harmless under the current µs fixture (same dynamic
-    // handling as graft.Tables.events, so registration works from a
-    // bare session too)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     TableNames.foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $db.$t")

@@ -356,15 +356,16 @@ object Changelog {
     * natural-looking alternative — equi-join on `user_id` with the
     * interval containment `valid_from ≤ t < valid_to` as a post-join
     * filter — FORMS purchases×versions pairs per user before filtering,
-    * and both factors grow with history depth: measured on the DevScale
-    * replicas (user_id deliberately unshifted, so depth scales), the
-    * join form cost 1.10 s at 10× and 20.2 s at 100× while this form
-    * cost 0.29 s and 0.83 s (24× at 100×, slope ~2.9) with the history
-    * window itself only 1.1 s of the 20.2 — the pair formation, not the
-    * lead() build, owned the old 100× slope. One shuffle (user_id) + one
-    * sort; O(n log n) per key instead of O(purchases·versions).
-    * Semantics preserved exactly (`DevStress scd2` asserts row equality
-    * against the join form before timing): state rows sort before a
+    * and both factors grow with history depth: measured on the
+    * 10×/100× replicas (SCALE.md; user_id deliberately unshifted, so
+    * depth scales), the join form cost 1.10 s at 10× and 20.2 s at
+    * 100× while this form cost 0.29 s and 0.83 s (24× at 100×, slope
+    * ~2.9) with the history window itself only 1.1 s of the 20.2 —
+    * the pair formation, not the lead() build, owned the old 100× slope.
+    * One shuffle (user_id) + one sort; O(n log n) per key instead of
+    * O(purchases·versions).
+    * Semantics preserved exactly (row equality against the join form
+    * was asserted before timing): state rows sort before a
     * probe at the same microsecond (`valid_from ≤ t` is inclusive), and
     * duplicate-timestamp versions resolve to the highest event_id just
     * as the lead()-built history's empty [ts, ts) intervals never match.

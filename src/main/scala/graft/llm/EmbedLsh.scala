@@ -104,7 +104,7 @@ object EmbedLsh {
     // Hamming-1 perturbation (flip each of the BitsPerTable sign bits).
     // Only the probe side fans out — (1+bits)×tables ≈ 84 broadcast rows —
     // the indexed side and its shuffle are untouched, so the recall lift
-    // (measured 4-7/10 → see DevRecall) costs nothing at scale: this is
+    // (measured 4-7/10 → see SCALE.md) costs nothing at scale: this is
     // exactly the trick that lets a 100 TB index keep FEWER tables (less
     // index storage) at equal recall.
     val flipMasks = array(probeMasks.map(lit): _*)

@@ -34,7 +34,7 @@ import graft.{Materialize, Tables}
   * the partials are cast to DECIMAL first (exact, merge-order-free), and
   * every ranking tie-breaks on `vec_id`.
   *
-  * Recall@10 vs the exact panel (DevRecall): 10/10 at sf0.001, sf0.01
+  * Recall@10 vs the exact panel (SCALE.md): 10/10 at sf0.001, sf0.01
   * AND sf0.1 with the 2% shortlist (1000 of 50k at sf0.1) — the
   * shortlist fraction is the production recall knob (the nprobe /
   * efSearch analogue), independent of the plan shape.

@@ -291,8 +291,8 @@ object TpchShapes {
       // satisfies the aggregate's ClusteredDistribution (a subset of
       // its grouping keys) AND the window's — without it Catalyst
       // plans hashpartitioning(partkey, suppkey) for the agg and a
-      // SECOND partkey exchange for the window (verified in
-      // DevExplain). Per-part supplier groups are bounded, so
+      // SECOND partkey exchange for the window (verified in the
+      // formatted plan). Per-part supplier groups are bounded, so
       // partkey-only partitioning is skew-free, and the exchanged row
       // is projected to three narrow columns first.
       .repartition($"l_partkey")
@@ -317,8 +317,8 @@ object TpchShapes {
     * and aggregation twice (verified in the plan), doubling the
     * workload's biggest shuffle at scale. Exchange reuse (round 6): the
     * groupBy(orderkey, suppkey) and the window(orderkey) would plan TWO
-    * fact-scale exchanges (verified in DevExplain — Catalyst does not
-    * coalesce them); an explicit `repartition(l_orderkey)` satisfies the
+    * fact-scale exchanges (verified in the formatted plan — Catalyst does
+    * not coalesce them); an explicit `repartition(l_orderkey)` satisfies the
     * aggregate's ClusteredDistribution (orderkey is a subset of its
     * keys) AND the window's, so one exchange serves both. The late flag
     * is projected to a long BEFORE the shuffle, so the exchanged row is

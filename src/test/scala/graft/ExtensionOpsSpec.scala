@@ -76,7 +76,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
       .map(_.getAs[Long]("vec_id")).toSet
     val annIds = ann.map(_.getAs[Long]("vec_id")).toSet
     // pinned recall@10 vs the exact panel: multi-probe LSH measures
-    // 10/10 at sf0.001/0.01/0.1 (DevRecall, round 5) — threshold 8
+    // 10/10 at sf0.001/0.01/0.1 (round 5, SCALE.md) — threshold 8
     // leaves head-room for corpus regeneration, and a banding-parameter
     // regression (fewer tables / broken perturbation) fails loudly here
     val recall = annIds.intersect(exact).size
@@ -93,7 +93,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
     val cos = ann1.map(_.getAs[Double]("cos_sim")).toSeq
     assert(cos == cos.sorted.reverse) // exact re-rank order
     // pinned recall@10 vs the exact panel: PQ measures 10/10 at
-    // sf0.001/0.01/0.1 (DevRecall, this round) with the 2% shortlist;
+    // sf0.001/0.01/0.1 (SCALE.md) with the 2% shortlist;
     // threshold 8 leaves head-room for corpus regeneration, and a
     // codebook/ADC regression fails loudly here
     val exact = VectorOps.simTopkCosine(spark, sf).collect()

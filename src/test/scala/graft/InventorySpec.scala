@@ -48,12 +48,11 @@ class InventorySpec extends AnyFunSuite {
 
   // Session knobs and A/B escapes are not options of the engine: only the
   // deployment settings (Bench's fixture dir, the cores in Sessions, the
-  // staging roots, the Kafka bootstrap servers and topic) and the dev
-  // mains' own protocol knobs may read the environment or system
-  // properties. A new reader must be a deliberate edit of this list.
-  test("only deployment settings and dev mains read sys.env / sys.props") {
-    val allowed = Set("Bench.scala", "Sessions.scala", "StageDirs.scala", "KafkaWire.scala",
-      "DevExplain.scala", "DevStress.scala", "DevSweep.scala")
+  // staging roots, the Kafka bootstrap servers and topic) may read the
+  // environment or system properties. A new reader must be a deliberate
+  // edit of this list.
+  test("only deployment settings read sys.env / sys.props") {
+    val allowed = Set("Bench.scala", "Sessions.scala", "StageDirs.scala", "KafkaWire.scala")
     val readers = mainFilesMatching("""sys\.(env|props)|System\.(getenv|getProperty)""")
     assert(readers.nonEmpty, "the scan must see src/main")
     assert(readers.subsetOf(allowed),
@@ -62,10 +61,9 @@ class InventorySpec extends AnyFunSuite {
 
   // Staged input copies go through one memo (StageDirs.staged): a fresh
   // staging dir taken anywhere else in the engine is a hand-rolled memo.
-  // The replay runner takes one scratch dir per replay; the dev mains
-  // are not engine code.
-  test("only StageDirs, the replay runner and the dev mains take fresh staging dirs") {
-    val takers = mainFilesMatching("""StageDirs\.fresh\(""").filterNot(_.startsWith("Dev"))
+  // The replay runner takes one scratch dir per replay.
+  test("only StageDirs and the replay runner take fresh staging dirs") {
+    val takers = mainFilesMatching("""StageDirs\.fresh\(""")
     assert(takers.subsetOf(Set("StageDirs.scala", "StreamingLatest.scala")),
       s"hand-rolled staging outside StageDirs.staged: ${takers.toSeq.sorted}")
     val replay = new String(Files.readAllBytes(Paths.get(
@@ -75,11 +73,10 @@ class InventorySpec extends AnyFunSuite {
   }
 
   // Query work is materialized, released and memoized per session through
-  // one module (graft.Materialize); the dev mains are not engine code.
+  // one module (graft.Materialize).
   test("only Materialize materializes, releases or memoizes frames") {
     val sites = mainFilesMatching(
       """localCheckpoint\(|\.cache\(\)|\.persist\(|unpersist\(|ConcurrentHashMap\[\(SparkSession""")
-      .filterNot(_.startsWith("Dev"))
     assert(sites == Set("Materialize.scala"),
       s"materialization outside Materialize: ${(sites - "Materialize.scala").toSeq.sorted}")
   }
@@ -95,6 +92,18 @@ class InventorySpec extends AnyFunSuite {
 
   test("only Sessions builds a session") {
     assert(mainFilesMatching("""SparkSession\.builder""") == Set("Sessions.scala"))
+  }
+
+  // Session conf is fixed where the session is built (Sessions); a query
+  // that needs a different value scopes it with Tuning.withConf, which
+  // restores the caller's setting. A bare set elsewhere would leak into
+  // every later query of the session.
+  test("only Tuning.withConf sets or unsets session conf") {
+    assert(mainFilesMatching("""conf\.(set|unset)\(""") == Set("Tuning.scala"))
+    val tuning = new String(Files.readAllBytes(Paths.get(
+      "src", "main", "scala", "graft", "Tuning.scala")), "UTF-8")
+    assert("""conf\.(set|unset)\(""".r.findAllMatchIn(tuning).size == 3,
+      "Tuning sets and restores conf only in withConf")
   }
 
   // The benchmark keeps its own copy of the session profile

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Whole-inventory plan lint: every declared batch query's physical plan
@@ -266,6 +270,81 @@ class PlanAuditSpec extends AnyFunSuite {
       }.isEmpty
     }
     assert(stale.isEmpty, s"stale global-window pins (no global window in plan): ${stale.mkString(",")}")
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Tables whose parquet scan appears more than once in `df`'s physical
+    * plan (AQE's initial plan and every subquery), with their scan
+    * counts: one query reading the same input twice is the
+    * duplicated-subtree class that a shared scan or a single pass
+    * removes. Named by the scanned directory, e.g. `lineitem.parquet`. */
+  private def duplicatedScans(df: DataFrame): Map[String, Int] =
+    Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        s.relation.location.rootPaths.head.getName
+    }.groupBy(identity).collect { case (t, occ) if occ.size > 1 => t -> occ.size }
+
+  /** The duplicated scans of every batch query at sf0.01, recorded at
+    * commit 8ad6a32. Pinned exactly: a query that gains a duplicated
+    * table or a higher count fails, and so does an entry that no longer
+    * matches, so the map only shrinks. The failure message prints each
+    * differing query's found and pinned counts. */
+  private val duplicatedScansPinned: Map[String, Map[String, Int]] = Map(
+    "agg_hll_sketch" -> Map("events.parquet" -> 2),
+    "cdc_envelope_evolution" -> Map("events.parquet" -> 2),
+    "cdc_merge_upsert" -> Map("events.parquet" -> 2),
+    "cdc_snapshot_union" -> Map("events.parquet" -> 2),
+    "dedup_embed_cosine" -> Map("embeddings.parquet" -> 2),
+    "join_bloom_prefilter" -> Map("customer.parquet" -> 3),
+    "join_dpp_partitioned" -> Map("lineitem.parquet" -> 2),
+    "join_null_aware_anti" -> Map("customer.parquet" -> 3, "orders.parquet" -> 3),
+    "join_radius_grid" -> Map("events.parquet" -> 2),
+    "join_range_bucketed" -> Map("events.parquet" -> 2),
+    "join_scd2_pointintime" -> Map("events.parquet" -> 2),
+    "q17_small_qty_orders" -> Map("lineitem.parquet" -> 2, "part.parquet" -> 2),
+    "q22_idle_customers" -> Map("customer.parquet" -> 2),
+    "q7_volume_shipping" -> Map("nation.parquet" -> 2),
+    "q8_market_share" -> Map("nation.parquet" -> 2),
+    "sample_balanced_classes" -> Map("documents.parquet" -> 2),
+    "sample_poisson_bootstrap" -> Map("documents.parquet" -> 2),
+    "set_ops" -> Map("customer.parquet" -> 4),
+    "set_ops_all" -> Map("customer.parquet" -> 4),
+    "set_ops_intersect" -> Map("customer.parquet" -> 2),
+    "sim_ann_ivf" -> Map("embeddings.parquet" -> 5),
+    "sim_ann_lsh" -> Map("embeddings.parquet" -> 2),
+    "sim_ann_pq" -> Map("embeddings.parquet" -> 5),
+    "sim_knn_join" -> Map("embeddings.parquet" -> 2),
+    "sim_range_search" -> Map("embeddings.parquet" -> 2),
+    "sim_topk_cosine" -> Map("embeddings.parquet" -> 2),
+    "sim_topk_prefix" -> Map("embeddings.parquet" -> 2),
+    "subquery_scalar" -> Map("part.parquet" -> 2),
+    "table_quality_checks" ->
+      Map("customer.parquet" -> 2, "lineitem.parquet" -> 2, "orders.parquet" -> 2),
+    "text_bigram_logprob" -> Map("documents.parquet" -> 3),
+    "text_decontaminate" -> Map("documents.parquet" -> 2),
+    "text_dedup_lines" -> Map("documents.parquet" -> 2),
+    "text_perplexity_bucket" -> Map("documents.parquet" -> 4),
+    "text_repetition_ratio" -> Map("documents.parquet" -> 2),
+    "text_tfidf" -> Map("documents.parquet" -> 2),
+    "text_unigram_logprob" -> Map("documents.parquet" -> 2),
+    "text_vocab_novelty" -> Map("documents.parquet" -> 2),
+    "ts_gapfill_interpolate" -> Map("events.parquet" -> 2),
+    "typed_cogroup_sorted" -> Map("events.parquet" -> 2),
+    "union_by_name_evolution" -> Map("orders.parquet" -> 2),
+    "window_rolling_distinct" -> Map("events.parquet" -> 2))
+
+  test("duplicated parquet scans match the pinned offenders exactly") {
+    val sf01 = "/root/testdata/sf0.01"
+    val found = SparkEntry.queries.filterNot { case (name, _) => skip(name) }
+      .map { case (name, fn) => name -> duplicatedScans(fn(spark, sf01)) }
+      .filter(_._2.nonEmpty)
+    val differ = (found.keySet ++ duplicatedScansPinned.keySet).toSeq.sorted
+      .filter(q => found.get(q) != duplicatedScansPinned.get(q))
+    assert(differ.isEmpty, "duplicated scans differ from the pins (query: found / pinned):\n" +
+      differ.map { q =>
+        s"$q: ${found.getOrElse(q, Map.empty)} / ${duplicatedScansPinned.getOrElse(q, Map.empty)}"
+      }.mkString("\n"))
   }
 
   test("the one intentional cartesian stays broadcast, never a shuffle cartesian") {

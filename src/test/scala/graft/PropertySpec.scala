@@ -297,8 +297,8 @@ class PropertySpec extends AnyFunSuite {
   test("property: salted twins equal the unsalted plans over 100 generated key distributions") {
     val s = spark
     import s.implicits._
-    // r15 verdict item 3: DevStress asserts salted ≡ unsalted on two
-    // FIXED skew fixtures; this property generates 100 key distributions
+    // r15 verdict item 3: the round-15 skew stress (SCALE.md) asserted
+    // salted ≡ unsalted on two FIXED skew fixtures; this property generates 100 key distributions
     // spanning uniform → 99%-one-key and asserts result equality for
     // both salted cores. Each case's keys live in their own namespace
     // (user_id = caseId·1000 + key) and all cases ride ONE planted

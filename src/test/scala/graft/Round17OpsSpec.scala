@@ -130,7 +130,7 @@ class Round17OpsSpec extends AnyFunSuite
     // Floors pinned one notch under the measured 10/10 (jittered 10×
     // and 100× of sf0.1 both read 10/10 for lsh/ivf/pq — SCALE.md r17).
     val dir = jitDir
-    DevScale.jitterReplica(spark, SparkFixture.Sf, dir, 10)
+    Replicas.jitterReplica(spark, SparkFixture.Sf, dir, 10)
     val exact = graft.llm.VectorOps.simTopkCosine(spark, dir).collect()
       .map(_.getAs[Long]("vec_id")).toSet
     val got = Map(
@@ -144,13 +144,8 @@ class Round17OpsSpec extends AnyFunSuite
     }
   }
 
-  test("the exempt list is exactly the no-oracle remainder of the inventory") {
-    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
-      DevGolden.Exempt.toSet)
-  }
-
   test("golden pins: every no-oracle exempt query hashes to its recorded value") {
-    // values recorded by `runMain graft.DevGolden` on Spark 4.1.2,
+    // values recorded with Golden.hash on Spark 4.1.2,
     // 2026-08-15 (r18: re-recorded for the injective canonical form —
     // strings JSON-quoted — and extended to sf0.1, the bench scale where
     // a plan-affecting regression would actually bite; r17 verdict item
@@ -158,7 +153,9 @@ class Round17OpsSpec extends AnyFunSuite
     // suite's own SparkFixture session); Golden.hash sorts columns and
     // rows, so partitioning/order can't move them — a mismatch is a
     // genuine output change. sample_tablesample left the exempt list in
-    // r18 (content-keyed draw → DuckDB-oracled, no pin needed).
+    // r18 (content-keyed draw → DuckDB-oracled, no pin needed). To
+    // re-record a pin, copy the `got` value the mismatch message below
+    // prints for that query@sf.
     val pinned = Map(
       ("agg_approx_distinct", "/root/testdata/sf0.001") -> "d47018d8fad10289",
       ("agg_approx_percentile", "/root/testdata/sf0.001") -> "e692439d96b9aba8",
@@ -202,13 +199,14 @@ class Round17OpsSpec extends AnyFunSuite
       ("sim_ann_pq", "/root/testdata/sf0.1") -> "e7b788728bf960cd",
       ("text_compression_ratio", "/root/testdata/sf0.1") -> "03383a0a7efc455b",
       ("text_fingerprint", "/root/testdata/sf0.1") -> "7081a9ae8121ab30")
-    // completeness: the pins cover EXACTLY the exempt set at all three
-    // fixture scales — an exempt added without a pin (or a pin for a
-    // query that gained an oracle) fails here, not silently
+    // completeness: the pins cover EXACTLY the exempt set — the
+    // declared queries without oracle SQL — at all three fixture scales;
+    // an exempt added without a pin (or a pin for a query that gained an
+    // oracle) fails here, not silently
+    val exempt = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     val scales = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1")
-    assert(pinned.keySet ==
-      (for (q <- DevGolden.Exempt; sf <- scales) yield (q, sf)).toSet)
+    assert(pinned.keySet == (for (q <- exempt; sf <- scales) yield (q, sf)))
     val bad = pinned.toSeq.sortBy(_._1).flatMap { case ((q, sf), want) =>
       val got = Golden.hash(SparkEntry.queries(q)(spark, sf))
       if (got == want) None else Some(s"$q@$sf: got $got, pinned $want")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * otherwise fail INSIDE a RocksDB query teardown; this pins the lookup
   * at a named test (r19 verdict item 4).
   *
-  * (2) The mixture-clustered embedding replica (`DevScale.mixReplica`,
+  * (2) The mixture-clustered embedding replica (`Replicas.mixReplica`,
   * the r19-verdict item-3 occupancy fixture) must be deterministic
   * (rebuild-identical — the recall rows in SCALE.md are only
   * reproducible if the fixture is), keep replica 0 pristine (the probe
@@ -70,8 +70,8 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("mixReplica is deterministic, replica-0-pristine, and genuinely clustered") {
     val s2 = spark
     import s2.implicits._
-    DevScale.mixReplica(spark, sf, mixDirA, 3)
-    DevScale.mixReplica(spark, sf, mixDirB, 3)
+    Replicas.mixReplica(spark, sf, mixDirA, 3)
+    Replicas.mixReplica(spark, sf, mixDirB, 3)
     def load(dir: String): Map[Long, Seq[Float]] =
       spark.read.parquet(s"$dir/embeddings.parquet")
         .select($"vec_id", $"embedding").collect()
@@ -89,7 +89,7 @@ class Round20OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rep = spark.read.parquet(s"$mixDirA/embeddings.parquet")
       .filter($"vec_id" >= 1000000L)
       .select($"vec_id",
-        pmod(hash($"vec_id"), lit(DevScale.MixClusters)).as("cluster"),
+        pmod(hash($"vec_id"), lit(Replicas.MixClusters)).as("cluster"),
         $"embedding")
     val pairs = rep.toDF("ida", "ca", "ea")
       .join(rep.toDF("idb", "cb", "eb"), $"ida" < $"idb")

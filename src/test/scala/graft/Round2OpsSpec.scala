@@ -92,7 +92,7 @@ class Round2OpsSpec extends AnyFunSuite {
     val exact = VectorOps.simTopkCosine(spark, sf).collect()
       .map(_.getAs[Long]("vec_id")).toSet
     // pinned recall@10 vs the exact panel: IVF measures 9/10 at sf0.001
-    // and 10/10 at sf0.01/0.1 (DevRecall, round 5) — threshold 8 makes
+    // and 10/10 at sf0.01/0.1 (round 5, SCALE.md) — threshold 8 makes
     // an nprobe/centroid regression fail loudly instead of decaying to
     // "nonEmpty overlap"
     val recall = ann1.map(_.getAs[Long]("vec_id")).toSet.intersect(exact).size

@@ -94,7 +94,7 @@ class Round9OpsSpec extends AnyFunSuite {
   }
 
   test("ANN recall@10 holds at the gate scale (sf0.01) for LSH, IVF and PQ") {
-    // DevRecall records 10/10 at sf0.001/0.01/0.1 for all three; the
+    // recall measured 10/10 at sf0.001/0.01/0.1 for all three; the
     // smoke-scale specs pin >= 8 but a banding/codebook regression that
     // only bites at larger cardinality would previously surface as a
     // judge spot-check, not a named CI failure — pin the gate scale too

@@ -2,8 +2,8 @@
 # Mechanized round-close checklist (SURVEY "End-of-round checklist"):
 #   1. tools/inventory_check.py exits 0        (SURVEY §2.2 ↔ SparkEntry ↔ Oracle)
 #   2. sbt test green                          (full suite), then the
-#      benchmark's own suite (perfbench/: it compiles all of src/main,
-#      dev mains included, and calls engine helpers directly)
+#      benchmark's own suite (perfbench/: it compiles all of src/main
+#      and calls engine helpers directly)
 #   3. full Verify + tools/compare.py at sf0.01 all-pass
 #   4. bench JSON parses with no negative per-query values (sf0.001 run)
 #   5. every streaming query of the benchmark's cdc_replay workload, one
