@@ -49,14 +49,16 @@ object StreamingLatest {
 
   // ── the replay lifecycle ───────────────────────────────────────────
 
-  /** Where a replay keeps its keyed state. */
+  /** Where a replay keeps its keyed state. Two layouts: the session's
+    * own provider, and RocksDB for the queries that show or require it
+    * (`cdc_stream_stateful_rocksdb`, the `transformWithState` queries).
+    * The stream-stream joins follow the session: below the heap ceiling
+    * the default HDFS-backed provider updates and evicts their state
+    * faster than RocksDB with join state format v3, and commits it no
+    * slower, at 2, 20 and 50 micro-batches (ROADMAP direction 3). So
+    * RocksDB is the session's capacity switch, not a per-query pin. */
   private[graft] sealed abstract class StateLayout(val conf: Seq[(String, String)])
   private[graft] object StateLayout {
-    private val Rocks = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-
     /** Whatever the session is configured with; the replay writes no
       * state-store key. */
     case object SessionDefault extends StateLayout(Nil)
@@ -66,14 +68,10 @@ object StreamingLatest {
       * maintenance cadence — the posture for large stores with small
       * per-batch deltas. Restart replays snapshot + changelog tail, so
       * semantics are unchanged. */
-    case object RocksDb extends StateLayout(Rocks)
-    /** [[RocksDb]] plus stream-stream join state format v3: ONE store
-      * per partition (virtual column families) instead of the legacy
-      * four (keyToNumValues + keyWithIndexToValue per side), so a
-      * commit appends one changelog instead of four. Layout only:
-      * eviction, matching and emission are identical. */
-    case object RocksDbJoinV3 extends StateLayout(
-      Rocks :+ ("spark.sql.streaming.join.stateFormatVersion" -> "3"))
+    case object RocksDb extends StateLayout(Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
   }
 
   /** One replay: its scratch directory (`ckpt` is the query's
@@ -176,7 +174,7 @@ object StreamingLatest {
     *    shutdown, so queries whose output is fully emitted on data
     *    arrival skip it (`keepNoDataBatch = false`); queries that emit
     *    on watermark advance keep it.
-    *  - `layout`'s state store provider and join state format.
+    *  - `layout`'s state store provider.
     *  - [[SharedClassLoader]]: artifact isolation off. Starting a stream
     *    clones the session; with isolation on, the executor runs each
     *    clone's tasks in a new per-session classloader, and Spark's
@@ -542,21 +540,24 @@ object StreamingLatest {
   // ── stream-stream and stream-static joins ──────────────────────────
 
   /** Purchases joined (`how`) to the same user's clicks from the
-    * preceding hour, both sides watermarked streams of the staged log.
-    * The time-bound condition plus the two watermarks is what lets
-    * Spark evict join state (a click older than purchase-watermark − 1 h
-    * can never match a future purchase), so state stays bounded. */
-  private def clickJoin(spark: SparkSession, sfDir: String, how: String): DataFrame = {
-    val cols = Seq("event_id", "ts", "user_id", "event_type")
-    val purchases = logStream(spark, sfDir, cols).filter(col("event_type") === "purchase")
+    * preceding hour, both sides watermarked streams of `source` (read
+    * once per side). The time-bound condition plus the two watermarks is
+    * what lets Spark evict join state (a click older than
+    * purchase-watermark − 1 h can never match a future purchase), so
+    * state stays bounded. */
+  private def clickJoin(source: => DataFrame, how: String): DataFrame = {
+    val purchases = source.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("ts").as("p_ts"), col("user_id").as("p_user"))
       .withWatermark("p_ts", "1 hour")
-    val clicks = logStream(spark, sfDir, cols).filter(col("event_type") === "click")
+    val clicks = source.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("ts").as("c_ts"), col("user_id").as("c_user"))
       .withWatermark("c_ts", "1 hour")
     purchases.join(clicks,
       expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"), how)
   }
+
+  /** The staged log's columns [[clickJoin]] reads. */
+  private val ClickCols = Seq("event_id", "ts", "user_id", "event_type")
 
   private val PairCols = Seq(col("p_id").as("purchase_event_id"), col("c_id").as("click_event_id"))
 
@@ -568,8 +569,13 @@ object StreamingLatest {
     * newer than (watermark − 1 h), which are still in state — so the
     * streaming result shares an exact batch oracle. */
   def streamJoin(spark: SparkSession, sfDir: String): DataFrame =
-    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDbJoinV3) { _ =>
-      Query(clickJoin(spark, sfDir, "inner").select(PairCols: _*), "append", Sink.Keep)
+    joinOver(spark, logStream(spark, sfDir, ClickCols), logParts(spark, sfDir))
+
+  /** [[streamJoin]]'s body over any streaming `source` of the event
+    * columns, replayed on `parts` state partitions. */
+  private[graft] def joinOver(spark: SparkSession, source: => DataFrame, parts: Int): DataFrame =
+    replay(spark, parts, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      Query(clickJoin(source, "inner").select(PairCols: _*), "append", Sink.Keep)
     } { run =>
       run.emitted.orderBy(col("purchase_event_id"), col("click_event_id"))
     }
@@ -591,8 +597,9 @@ object StreamingLatest {
     * rows RESTRICTED to purchases below that horizon — a closed-form
     * DuckDB twin, no streaming machinery needed on the oracle side. */
   def streamJoinOuter(spark: SparkSession, sfDir: String): DataFrame =
-    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
-      Query(clickJoin(spark, sfDir, "left_outer").select(PairCols: _*), "append", Sink.Keep)
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.SessionDefault) { _ =>
+      Query(clickJoin(logStream(spark, sfDir, ClickCols), "left_outer").select(PairCols: _*),
+        "append", Sink.Keep)
     } { run =>
       run.emitted.orderBy(col("purchase_event_id"), col("click_event_id"))
     }
@@ -610,8 +617,9 @@ object StreamingLatest {
     * end-of-replay watermark. Trailing no-data batch KEPT (null
     * emissions happen on state eviction). */
   def streamJoinFull(spark: SparkSession, sfDir: String): DataFrame =
-    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.RocksDbJoinV3) { _ =>
-      Query(clickJoin(spark, sfDir, "full_outer").select(PairCols: _*), "append", Sink.Keep)
+    replayLog(spark, sfDir, keepNoDataBatch = true, StateLayout.SessionDefault) { _ =>
+      Query(clickJoin(logStream(spark, sfDir, ClickCols), "full_outer").select(PairCols: _*),
+        "append", Sink.Keep)
     } { run =>
       run.emitted
         .orderBy(col("purchase_event_id").asc_nulls_first, col("click_event_id").asc_nulls_first)
@@ -633,8 +641,8 @@ object StreamingLatest {
     * output is EXACTLY the batch semi join, no horizon restriction
     * (compare the outer join's finalized-horizon oracle). */
   def streamJoinSemi(spark: SparkSession, sfDir: String): DataFrame =
-    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.RocksDbJoinV3) { _ =>
-      Query(clickJoin(spark, sfDir, "left_semi")
+    replayLog(spark, sfDir, keepNoDataBatch = false, StateLayout.SessionDefault) { _ =>
+      Query(clickJoin(logStream(spark, sfDir, ClickCols), "left_semi")
         .select(col("p_id").as("purchase_event_id"), col("p_user").as("user_id"),
           unix_micros(col("p_ts")).as("p_ts_us")),
         "append", Sink.Keep)

@@ -88,9 +88,10 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   /** `command from frames` for each process started while `body` runs
-    * whose stack has a frame (`Class.method`) matching `frame`. Cancels
-    * the test when JFR is unavailable. */
-  private def spawnsFrom(frame: String)(body: => Unit): Seq[String] = {
+    * whose stack has a frame (`Class.method`) matching `frame`, on a
+    * thread whose name does not match `skipThreads`. Cancels the test
+    * when JFR is unavailable. */
+  private def spawnsFrom(frame: String, skipThreads: String = "$^")(body: => Unit): Seq[String] = {
     import jdk.jfr.{FlightRecorder, Recording}
     import jdk.jfr.consumer.RecordingFile
     assume(FlightRecorder.isAvailable, "JFR is not available in this JVM")
@@ -104,7 +105,8 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
       RecordingFile.readAllEvents(dump).asScala.toSeq.flatMap { e =>
         val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
           .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
-        if (frames.exists(_.matches(frame)))
+        val thread = Option(e.getThread).flatMap(t => Option(t.getJavaName)).getOrElse("")
+        if (frames.exists(_.matches(frame)) && !thread.matches(skipThreads))
           Some(e.getString("command") + " from " + frames.take(30).mkString(" < "))
         else None
       }
@@ -132,5 +134,17 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
       StreamingLatest.streamStateful(SparkFixture.spark, SparkFixture.Sf).collect()
     }
     assert(spawns.isEmpty, s"${spawns.size} process starts on the file-output path")
+  }
+
+  // RocksDB's store load and close each shell out to `rm -rf`, and its
+  // SST uploads to `chmod`; a join replays on the session's provider,
+  // which starts none. The background maintenance thread is skipped: it
+  // can flush stores that earlier replays in this JVM loaded.
+  test("a join replay starts no process from state-store code") {
+    val spawns = spawnsFrom("org\\.apache\\.spark\\.sql\\.execution\\.streaming\\.state\\..*",
+        skipThreads = "state-store-maintenance.*") {
+      StreamingLatest.streamJoin(SparkFixture.spark, SparkFixture.Sf).collect()
+    }
+    assert(spawns.isEmpty, s"${spawns.size} process starts from state-store code: ${spawns.take(3)}")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -272,19 +273,24 @@ class Round2OpsSpec extends AnyFunSuite {
   }
 
   test("stateful latest-wins is state-store-agnostic (RocksDB ≡ HDFS-backed)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rocks = StreamingLatest.streamStateful(spark, sf).collect().toSeq
-      val batch = graft.cdc.Changelog.latestState(spark, sf).collect().toSeq
-      assert(rocks == batch, "RocksDB-backed streaming state diverged from batch latest-wins")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
+    // the deployment switch: RocksDB with changelog checkpointing set on
+    // the session, plus the single-store join state format; the replays
+    // below write no state-store key, so they run on it
+    val rocksDb = StreamingLatest.StateLayout.RocksDb.conf :+
+      ("spark.sql.streaming.join.stateFormatVersion" -> "3")
+    val joins = Seq[(String, (SparkSession, String) => DataFrame)](
+      "cdc_stream_join" -> StreamingLatest.streamJoin,
+      "cdc_stream_join_full" -> StreamingLatest.streamJoinFull)
+    def rows(q: (SparkSession, String) => DataFrame) = q(spark, sf).collect().toSeq
+    val onDefault = joins.map { case (name, q) => name -> rows(q) }
+    val (rocks, rocksJoins) = Tuning.withConf(spark, rocksDb: _*) {
+      (rows(StreamingLatest.streamStateful), joins.map { case (name, q) => name -> rows(q) })
+    }
+    assert(rocks == Changelog.latestState(spark, sf).collect().toSeq,
+      "RocksDB-backed streaming state diverged from batch latest-wins")
+    for (((name, want), (_, got)) <- onDefault.zip(rocksJoins)) {
+      assert(want.nonEmpty, s"$name returned no rows")
+      assert(got == want, s"$name on RocksDB with join state format v3 diverged from its default run")
     }
   }
 

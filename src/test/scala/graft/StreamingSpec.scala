@@ -363,24 +363,54 @@ class StreamingSpec extends AnyFunSuite {
     } finally StageDirs.rm(java.nio.file.Paths.get(dir))
   }
 
+  private lazy val events = Tables.events(spark, sf)
+    .select("event_id", "ts", "user_id", "event_type", "value")
+
+  /** The file of a log cut at `cutsUs` (µs) an event lands in: how many cuts its time reaches. */
+  private def fileOf(cutsUs: Seq[Long]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, lit, unix_micros, when}
+    cutsUs.map(c => when(unix_micros(col("ts")) >= c, 1).otherwise(0)).foldLeft(lit(0))(_ + _)
+  }
+
+  /** The events cut at `cutsUs` into event-time-ordered files, and a
+    * streaming read of them one file per micro-batch. */
+  private def cutLog(name: String, cutsUs: Seq[Long]): (String, org.apache.spark.sql.DataFrame) = {
+    val dir = fileLog(name, (0 to cutsUs.size).map(f => events.filter(fileOf(cutsUs) === f)))
+    (dir, spark.readStream.schema(events.schema).option("maxFilesPerTrigger", "1").parquet(dir))
+  }
+
   test("latest-wins over six event-time-ordered files, one per batch, equals the batch latest state") {
-    val s2 = spark
-    import s2.implicits._
-    import org.apache.spark.sql.functions._
-    val ev = Tables.events(spark, sf)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val span = ev.agg(unix_micros(min($"ts")), unix_micros(max($"ts"))).first()
+    import org.apache.spark.sql.functions.{col, countDistinct, max, min, unix_micros}
+    val span = events.agg(unix_micros(min(col("ts"))), unix_micros(max(col("ts")))).first()
     val (lo, hi) = (span.getLong(0), span.getLong(1))
-    val slice = floor((unix_micros($"ts") - lo) * 6 / (hi - lo + 1))
-    val dir = fileLog("sixfile", (0 until 6).map(f => ev.filter(slice === f)))
+    val cuts = (1 until 6).map(k => lo + (hi - lo + 1) * k / 6)
+    val (dir, source) = cutLog("sixfile", cuts)
     try {
-      assert(ev.groupBy($"user_id").agg(countDistinct(slice).as("files"))
-        .filter($"files" > 1).count() > 0, "some key must emit in several batches")
-      val source = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
+      assert(events.groupBy(col("user_id")).agg(countDistinct(fileOf(cuts)).as("files"))
+        .filter(col("files") > 1).count() > 0, "some key must emit in several batches")
       val got = StreamingLatest.latestWinsOver(spark, source, 4,
         StreamingLatest.StateLayout.SessionDefault).collect().toSeq
       assert(got == Changelog.latestState(spark, sf).collect().toSeq)
+    } finally StageDirs.rm(java.nio.file.Paths.get(dir))
+  }
+
+  // The join keeps each side's rows in state until the other side's
+  // watermark evicts them; over an event-time-ordered log, where the log
+  // is cut must not change which pairs it emits. Each cut falls between
+  // a matching click and its purchase, so every pair is matched from state
+  // carried across a micro-batch boundary.
+  test("the inner stream-stream join over a log cut inside every match equals its two-file replay") {
+    import org.apache.spark.sql.functions.{col, expr, unix_micros}
+    val cuts = events.filter(col("event_type") === "purchase").as("p")
+      .join(events.filter(col("event_type") === "click").as("c"),
+        expr("p.user_id = c.user_id AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts"))
+      .select(((unix_micros(col("p.ts")) + unix_micros(col("c.ts"))) / 2).cast("long"))
+      .collect().map(_.getLong(0)).distinct.sorted.toSeq
+    assert(cuts.nonEmpty, "the fixture must hold a click and a later purchase that match")
+    val (dir, source) = cutLog("cutjoin", cuts)
+    try {
+      val got = StreamingLatest.joinOver(spark, source, 4).collect().toSeq
+      assert(got.nonEmpty && got == StreamingLatest.streamJoin(spark, sf).collect().toSeq)
     } finally StageDirs.rm(java.nio.file.Paths.get(dir))
   }
 
