@@ -273,22 +273,28 @@ class Round2OpsSpec extends AnyFunSuite {
   }
 
   test("stateful latest-wins is state-store-agnostic (RocksDB ≡ HDFS-backed)") {
-    // the deployment switch: RocksDB with changelog checkpointing set on
-    // the session, plus the single-store join state format; the replays
-    // below write no state-store key, so they run on it
-    val rocksDb = StreamingLatest.StateLayout.RocksDb.conf :+
+    // the one-key deployment switch: the RocksDB provider alone, with
+    // changelog checkpointing off, so every commit uploads a snapshot
+    val rocks = Tuning.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      StreamingLatest.streamStateful(spark, sf).collect().toSeq
+    }
+    assert(rocks == Changelog.latestState(spark, sf).collect().toSeq,
+      "RocksDB-backed streaming state diverged from batch latest-wins")
+    // the joins on RocksDB with changelog checkpointing plus the
+    // single-store join state format; they write no state-store key, so
+    // they run on what the session sets
+    val joinLayout = StreamingLatest.StateLayout.RocksDb.conf :+
       ("spark.sql.streaming.join.stateFormatVersion" -> "3")
     val joins = Seq[(String, (SparkSession, String) => DataFrame)](
       "cdc_stream_join" -> StreamingLatest.streamJoin,
       "cdc_stream_join_full" -> StreamingLatest.streamJoinFull)
     def rows(q: (SparkSession, String) => DataFrame) = q(spark, sf).collect().toSeq
     val onDefault = joins.map { case (name, q) => name -> rows(q) }
-    val (rocks, rocksJoins) = Tuning.withConf(spark, rocksDb: _*) {
-      (rows(StreamingLatest.streamStateful), joins.map { case (name, q) => name -> rows(q) })
+    val onRocks = Tuning.withConf(spark, joinLayout: _*) {
+      joins.map { case (name, q) => name -> rows(q) }
     }
-    assert(rocks == Changelog.latestState(spark, sf).collect().toSeq,
-      "RocksDB-backed streaming state diverged from batch latest-wins")
-    for (((name, want), (_, got)) <- onDefault.zip(rocksJoins)) {
+    for (((name, want), (_, got)) <- onDefault.zip(onRocks)) {
       assert(want.nonEmpty, s"$name returned no rows")
       assert(got == want, s"$name on RocksDB with join state format v3 diverged from its default run")
     }

@@ -372,23 +372,24 @@ class StreamingSpec extends AnyFunSuite {
     cutsUs.map(c => when(unix_micros(col("ts")) >= c, 1).otherwise(0)).foldLeft(lit(0))(_ + _)
   }
 
-  /** The events cut at `cutsUs` into event-time-ordered files, and a
-    * streaming read of them one file per micro-batch. */
-  private def cutLog(name: String, cutsUs: Seq[Long]): (String, org.apache.spark.sql.DataFrame) = {
-    val dir = fileLog(name, (0 to cutsUs.size).map(f => events.filter(fileOf(cutsUs) === f)))
-    (dir, spark.readStream.schema(events.schema).option("maxFilesPerTrigger", "1").parquet(dir))
-  }
+  /** The events cut at `cutsUs` into event-time-ordered files; returns the directory. */
+  private def cutLog(name: String, cutsUs: Seq[Long]): String =
+    fileLog(name, (0 to cutsUs.size).map(f => events.filter(fileOf(cutsUs) === f)))
+
+  /** A fresh streaming read of `dir`, one file per micro-batch. */
+  private def oneFilePerBatch(dir: String): org.apache.spark.sql.DataFrame =
+    spark.readStream.schema(events.schema).option("maxFilesPerTrigger", "1").parquet(dir)
 
   test("latest-wins over six event-time-ordered files, one per batch, equals the batch latest state") {
     import org.apache.spark.sql.functions.{col, countDistinct, max, min, unix_micros}
     val span = events.agg(unix_micros(min(col("ts"))), unix_micros(max(col("ts")))).first()
     val (lo, hi) = (span.getLong(0), span.getLong(1))
     val cuts = (1 until 6).map(k => lo + (hi - lo + 1) * k / 6)
-    val (dir, source) = cutLog("sixfile", cuts)
+    val dir = cutLog("sixfile", cuts)
     try {
       assert(events.groupBy(col("user_id")).agg(countDistinct(fileOf(cuts)).as("files"))
         .filter(col("files") > 1).count() > 0, "some key must emit in several batches")
-      val got = StreamingLatest.latestWinsOver(spark, source, 4,
+      val got = StreamingLatest.latestWinsOver(spark, oneFilePerBatch(dir), 4,
         StreamingLatest.StateLayout.SessionDefault).collect().toSeq
       assert(got == Changelog.latestState(spark, sf).collect().toSeq)
     } finally StageDirs.rm(java.nio.file.Paths.get(dir))
@@ -407,9 +408,10 @@ class StreamingSpec extends AnyFunSuite {
       .select(((unix_micros(col("p.ts")) + unix_micros(col("c.ts"))) / 2).cast("long"))
       .collect().map(_.getLong(0)).distinct.sorted.toSeq
     assert(cuts.nonEmpty, "the fixture must hold a click and a later purchase that match")
-    val (dir, source) = cutLog("cutjoin", cuts)
+    val dir = cutLog("cutjoin", cuts)
     try {
-      val got = StreamingLatest.joinOver(spark, source, 4).collect().toSeq
+      // passed by name: each side of the join builds its own source, as in production
+      val got = StreamingLatest.joinOver(spark, oneFilePerBatch(dir), 4).collect().toSeq
       assert(got.nonEmpty && got == StreamingLatest.streamJoin(spark, sf).collect().toSeq)
     } finally StageDirs.rm(java.nio.file.Paths.get(dir))
   }
